@@ -41,16 +41,20 @@ object Pipeline {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
 
-    // SPARK_GRAFT_SEQUENTIAL=1 serializes the branches (diagnostic: branch
-    // concurrency trades scheduler-gap fill against shared-cache pressure).
-    val sequential = sys.env.get("SPARK_GRAFT_SEQUENTIAL").contains("1")
-    def branch(body: => DataFrame): Future[DataFrame] =
-      if (sequential) Future.successful(body) else Future(body)
+    // A stage whose body builds a singleton-prune sketch: the sketch's
+    // broadcast is released as soon as the stage has landed (its output is
+    // then read back from parquet, so nothing re-executes the filter).
+    def prunedStage(name: String)(body: => (DataFrame, () => Unit)): DataFrame = {
+      var release: () => Unit = () => ()
+      val out = ctx.stage(name) { val (df, r) = body; release = r; df }
+      release()
+      out
+    }
 
     // Stage 1 — the exact snapshot. The hash projection is inlined (content
     // is dropped inside the scan stage; nothing here is reused elsewhere, so
     // persisting it would only burn cache-fill bandwidth).
-    val fSnapshot = branch {
+    val fSnapshot = Future {
       ctx.stage("snapshot") { ExactDedup.snapshot(ExactDedup.withHashes(corpus, cfg.quick)) }
     }
 
@@ -90,7 +94,7 @@ object Pipeline {
     uniq.count()
     System.err.println(f"[graft.stage] uniq ${(System.nanoTime() - tUniq) / 1e9}%.1f s")
 
-    val fNearPairs = branch {
+    val fNearPairs = Future {
       val shingles = ctx.stage("shingles", materialize = false, persist = false) {
         uniq.select(col("id"), col("shingles"), size(col("shingles")).as("n_shingles"))
           .where(col("n_shingles") > 0)
@@ -104,42 +108,18 @@ object Pipeline {
       // never silently" (north_rule) at zero extra pass cost.
       val dropsB = ctx.spark.sparkContext.longAccumulator("graft.candidates.dropped_buckets")
       val dropsR = ctx.spark.sparkContext.longAccumulator("graft.candidates.dropped_members")
-      val candidates = ctx.stage("candidates") {
+      val candidates = prunedStage("candidates") {
         // Singleton-bucket prune (SeenTwice): on a mostly-unique corpus most
         // of the ~docs×bands band rows sit alone in their bucket and can
         // never pair — dropping them BEFORE the exchange converts the most
         // bandwidth-bound sort in the profile into a fraction of itself, at
         // the price of one perfectly-parallel extra scan. Exact (see
-        // SeenTwice scaladoc + SeenTwiceSpec pair-set parity).
-        val bandRows = signatures.count() * cfg.bands // parquet-stage metadata count
-        if (cfg.pruneSingletons && bandRows > cfg.pruneShardedMaxRows) {
-          // Third regime (BENCH/PROFILE_r05.md §3): past even the sharded
-          // sketch's window, one whole-corpus sketch would saturate — the
-          // full cut comes from processing bands in RANGES, each re-entering
-          // the effective-load window, one sketch live at a time, per-range
-          // checkpoints resumable like any stage.
-          NearDup.candidateIdPairsBandRanged(signatures, cfg,
-            s"${ctx.runDir}/candidates_ranges",
-            n => { dropsB.add(1L); dropsR.add(n) })
-        } else {
-        val banded = NearDup.bandedById(signatures, cfg)
-        val pruned =
-          if (cfg.pruneSingletons && bandRows >= cfg.pruneMinRows) {
-            if (bandRows <= cfg.pruneMaxRows)
-              graft.functions.SeenTwice.prune(banded, "band_hash",
-                graft.functions.SeenTwice.autoLog2m(bandRows))
-            else {
-              // past the 64 MB single-array cap: sharded slot space, per-
-              // shard build/merge, 4 GB broadcast budget (round-4 verdict
-              // "What's missing #3" — the prune no longer turns itself off
-              // exactly where the exchange is biggest)
-              val (l2, sb) = graft.functions.SeenTwice.autoShardedBits(bandRows)
-              graft.functions.SeenTwice.pruneSharded(banded, "band_hash", l2, sb)
-            }
-          } else banded
-        NearDup.candidateIdPairs(pruned, cfg,
+        // SeenTwice scaladoc + SeenTwiceSpec pair-set parity). Past the
+        // sketch's window the driver splits the bands into ranges, each
+        // checkpointed under `candidates_ranges`.
+        NearDup.candidateIdPairsBandRangedReleasable(signatures, cfg,
+          s"${ctx.runDir}/candidates_ranges",
           n => { dropsB.add(1L); dropsR.add(n) })
-        }
       }
       ctx.metrics.record("candidates.dropped_buckets", dropsB.value)
       ctx.metrics.record("candidates.dropped_members", dropsR.value)
@@ -152,7 +132,7 @@ object Pipeline {
       }
     }
 
-    val fSubPairs = branch {
+    val fSubPairs = Future {
       // Substring edges feed clustering only after byte-exact verification —
       // a gram coincidence or hash collision must not merge clusters. The
       // verify pass fetches content for candidate members straight from the
@@ -161,7 +141,7 @@ object Pipeline {
       // (near-branch symmetry) ran ~2-4 s SLOWER at 16 threads — the
       // write+read barrier exceeds the persist-subtree overhead it removes.
       val dropsG = ctx.spark.sparkContext.longAccumulator("graft.substring.dropped_grams")
-      val out = ctx.stage("substring_pairs") {
+      val out = prunedStage("substring_pairs") {
         if (cfg.substringViaSuffixArray) {
           // Exact prefix-doubling pass: class equality IS byte equality, so
           // no verify join is needed — a pair here is already a true shared-
@@ -172,9 +152,9 @@ object Pipeline {
           val deduped =
             if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
             else NearDup.dedupedByContent(corpusK)
-          graft.operators.SuffixArray.windowClassPairs(
+          (graft.operators.SuffixArray.windowClassPairs(
             deduped.select(xxhash64(col("rkey")).as("id"), col("content")),
-            cfg.gramWidth, cfg.maxBucketSize, n => dropsG.add(n))
+            cfg.gramWidth, cfg.maxBucketSize, n => dropsG.add(n)), () => ())
         }
         else {
           // Same singleton prune as the candidates stage, over the sampled
@@ -184,27 +164,18 @@ object Pipeline {
           // only moves the sketch's false-keep rate, never correctness, but
           // OVERsizing it quadruples the bitset-merge bytes for nothing.
           // An UNDERsized sketch (longer-doc corpus blowing past the
-          // estimate) self-corrects: prune() reads the marked-slot ratio
+          // estimate) self-corrects: the prune reads the marked-slot ratio
           // off the finished sketch and skips the filter when saturated
           // (round-4 ADVICE), so the worst case is one wasted scan, never
           // a useless filter pass on top of it.
           val gramDf = uniq.select(col("id"), explode(col("grams")).as("gram"))
-          val gramRowsEst = nCorpusRows * 10
-          val gramsPruned =
-            if (cfg.pruneSingletons && gramRowsEst >= cfg.pruneMinRows &&
-                gramRowsEst <= cfg.pruneMaxRows)
-              graft.functions.SeenTwice.prune(gramDf, "gram",
-                graft.functions.SeenTwice.autoLog2m(gramRowsEst))
-            else if (cfg.pruneSingletons && gramRowsEst > cfg.pruneMaxRows &&
-                gramRowsEst <= cfg.pruneShardedMaxRows) {
-              val (l2, sb) = graft.functions.SeenTwice.autoShardedBits(gramRowsEst)
-              graft.functions.SeenTwice.pruneSharded(gramDf, "gram", l2, sb)
-            } else gramDf
-          Substring.verifiedSubstringPairs(
+          val (gramsPruned, release) =
+            graft.functions.SeenTwice.pruneAuto(gramDf, "gram", nCorpusRows * 10, cfg)
+          (Substring.verifiedSubstringPairs(
             Substring.gramPairs(gramsPruned,
               cfg.minSharedGrams, cfg.maxBucketSize, n => dropsG.add(n)),
             corpusK.select(xxhash64(col("rkey")).as("rkey"), col("content")), cfg.gramWidth,
-            register = Some(ctx.registerPersist))
+            register = Some(ctx.registerPersist)), release)
         }
       }
       ctx.metrics.record("substring_pairs.dropped_gram_rows", dropsG.value)

@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+
+import graft.model.DedupConfig
 
 /**
  * Seen-≥2 bitset sketch — the singleton-bucket pruner for the two hottest
@@ -15,10 +18,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryEx
  * full freight through the co-locating exchange, the measured scaling
  * limiter at 16 cores (BENCH/PROFILE_r03.md: `candidates` 190M-row sort,
  * t4/t16 = 1.86, the most bandwidth-bound stage). This sketch removes them
- * BEFORE the exchange with one extra map-side pass:
+ * BEFORE the exchange with one extra pass:
  *
- *  1. Per partition, build two bitsets over `slot(hash)`: `once` (slot seen)
- *     and `twice` (slot seen again).
+ *  1. Per build partition, build two bitsets over `slot(hash)`: `once` (slot
+ *     seen) and `twice` (slot seen again).
  *  2. Merge partials associatively: `twice' = t₁|t₂|(o₁&o₂)`, `once' = o₁|o₂`
  *     (a slot is ≥2 iff some partial saw it twice or two partials saw it).
  *  3. Broadcast `twice`; keep a row iff its slot is marked.
@@ -31,178 +34,46 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryEx
  * for exchange bytes (bandwidth, pinned at ~2× on the same probes) — the
  * direction the 4→16-core profile says to move work.
  *
- * Sizing: `log2m` bits per bitset. At load α = rows/2^log2m the singleton
- * false-positive (kept-anyway) rate is ≈ 1 − e^(−α); [[autoLog2m]] targets
- * α ≈ 0.25 (FP ≈ 22%) capped at 2^29 bits = 64 MB per bitset — the
- * broadcast stays executor-comfortable and partials merge through a
- * bounded-depth treeReduce. At 10⁹ docs × 64 bands the cap yields α ≈ 120:
- * the sketch saturates and prunes nothing, so [[prune]] becomes a no-op
- * pass-through — callers gate it on `rows ≤ pruneMaxRows` instead of
- * shipping a saturated filter (the cap is a small-end optimization with a
- * clean large-end degradation, never a correctness cliff).
+ * Slot space: the global slot is the top `shardBits + log2mShard` bits of
+ * the mixed hash, split into `2^shardBits` shards (top bits) of
+ * `2^log2mShard` bits each (low bits, ≤ 2^29 = 64 MB per bitset). At
+ * `shardBits = 0` the sketch is one bitset built map-side; above it each
+ * build task holds one shard's bitset pair and shards merge in parallel
+ * reducers, so total bits can grow to the 2^35 = 4 GB broadcast budget.
+ * At load α = rows/slots the singleton false-keep rate is ≈ 1 − e^(−α).
+ *
+ * One entry point, [[pruneAuto]], picks the geometry from the row count and
+ * the `DedupConfig` bounds: pass-through below `pruneMinRows` (the extra
+ * scan nets negative) and above `pruneShardedMaxRows` (even 4 GB saturates;
+ * the band-range driver, `NearDup.candidateIdPairsBandRanged`, splits the
+ * bands so each range re-enters the window); one shard sized at α ≈ 0.25 up
+ * to `pruneMaxRows`; sharded above. The arithmetic and the α → cut curve
+ * are in BENCH/PROFILE_r05.md.
  */
 object SeenTwice {
 
-  /** Fibonacci-mix the (already hashed) 64-bit value into a slot — band/gram
-   *  values are xxhash64/Rabin outputs, but low-bit regularity is free to
-   *  guard against. */
-  @inline def slot(h: Long, log2m: Int): Int =
-    ((h * 0x9E3779B97F4A7C15L) >>> (64 - log2m)).toInt
+  /** Global slot of `h`: the top `log2mShard + shardBits` bits of the
+   *  Fibonacci-mixed hash (band/gram values are xxhash64/Rabin outputs, but
+   *  low-bit regularity is free to guard against). The shard is the top
+   *  `shardBits` of it, the slot within the shard the low `log2mShard`. */
+  @inline def slot(h: Long, log2mShard: Int, shardBits: Int): Long =
+    (h * 0x9E3779B97F4A7C15L) >>> (64 - shardBits - log2mShard)
 
-  /** True iff `h`'s slot is marked in the sketch. */
-  def contains(bits: Array[Long], log2m: Int, h: Long): Boolean = {
-    val s = slot(h, log2m)
-    ((bits(s >>> 6) >>> (s & 63)) & 1L) == 1L
+  /** True iff `h`'s slot is marked in its shard's bitset. */
+  def contains(bits: Array[Array[Long]], log2mShard: Int, shardBits: Int,
+               h: Long): Boolean = {
+    val g = slot(h, log2mShard, shardBits)
+    val arr = bits((g >>> log2mShard).toInt)
+    val s = (g & ((1L << log2mShard) - 1)).toInt
+    ((arr(s >>> 6) >>> (s & 63)) & 1L) == 1L
   }
 
-  /** Smallest `log2m` with load ≤ 0.25 at `rows`, clamped to [20, 29]. */
+  /** Smallest `log2m` with load ≤ 0.25 at `rows`, clamped to [20, 29] — the
+   *  one-shard size. */
   def autoLog2m(rows: Long): Int = {
     var l = 20
     while (l < 29 && (rows << 2) > (1L << l)) l += 1
     l
-  }
-
-  /** Build the seen-≥2 bitset over `df(colName)` (a LONG column). One
-   *  map-side pass, no row exchange: partials merge via treeReduce (the only
-   *  shuffled bytes are ≤ `mergeWidth` bitset pairs). */
-  def sketch(df: DataFrame, colName: String, log2m: Int,
-             mergeWidth: Int = 16): Array[Long] = {
-    val nWords = 1 << (log2m - 6)
-    // internal-row RDD: getLong(0) straight off the UnsafeRow, no Row boxing
-    // on what is deliberately a 10⁸-row scan
-    val rdd0 = df.select(org.apache.spark.sql.functions.col(colName))
-      .queryExecution.toRdd
-    val rdd = if (rdd0.getNumPartitions > mergeWidth)
-      rdd0.coalesce(mergeWidth, shuffle = false) else rdd0
-    val partials = rdd.mapPartitions { it =>
-      val once = new Array[Long](nWords)
-      val twice = new Array[Long](nWords)
-      while (it.hasNext) {
-        val s = slot(it.next().getLong(0), log2m)
-        val w = s >>> 6
-        val b = 1L << (s & 63)
-        if ((once(w) & b) != 0L) twice(w) |= b else once(w) |= b
-      }
-      Iterator.single((once, twice))
-    }
-    if (partials.getNumPartitions == 0) return new Array[Long](nWords)
-    partials.treeReduce({ case ((o1, t1), (o2, t2)) =>
-      // partials are task-owned deserialized copies: merge in place
-      var i = 0
-      while (i < nWords) {
-        t1(i) = t1(i) | t2(i) | (o1(i) & o2(i))
-        o1(i) = o1(i) | o2(i)
-        i += 1
-      }
-      (o1, t1)
-    }, depth = 2)._2
-  }
-
-  /** `graft_seen_twice(h)` — codegen'd bitset membership against a broadcast
-   *  sketch; the filter stays inside whole-stage codegen (no ScalaUDF boxing
-   *  on a 10⁸-row scan). */
-  case class BitsetContainsExpr(child: Expression, bits: Broadcast[Array[Long]],
-                                log2m: Int) extends UnaryExpression with Predicate {
-    override def prettyName: String = "graft_seen_twice"
-    override def nullSafeEval(input: Any): Any =
-      contains(bits.value, log2m, input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftSeenTwiceBc", bits,
-        classOf[Broadcast[Array[Long]]].getName)
-      val arr = ctx.addMutableState("long[]", "graftSeenTwiceBits",
-        v => s"$v = (long[]) $bcRef.value();")
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.SeenTwice.contains($arr, $log2m, $c);")
-    }
-    override protected def withNewChildInternal(newChild: Expression): BitsetContainsExpr =
-      copy(child = newChild)
-  }
-
-  /** Marked-slot ratio above which the sketch is SATURATED: at the design
-   *  load α = 0.25 only ~2.6% of slots mark ≥2 (1 − e^−α(1+α)); a ratio past
-   *  0.45 means α ≳ 1.5, i.e. the singleton false-keep rate is ≳ 78% and the
-   *  filter would keep almost everything — two extra scans for nothing. The
-   *  ratio is read off the FINISHED sketch (free — the bits are on the
-   *  driver anyway), so an undersized gate estimate self-corrects here
-   *  instead of shipping a useless filter (round-4 ADVICE on the gram-side
-   *  `nCorpusRows * 10` estimate). */
-  val saturationSkipRatio: Double = 0.45
-
-  private def markedRatio(bits: Array[Long], totalSlots: Long): Double = {
-    var marked = 0L
-    var i = 0
-    while (i < bits.length) { marked += java.lang.Long.bitCount(bits(i)); i += 1 }
-    marked.toDouble / totalSlots
-  }
-
-  /** Filter `df` to rows whose `colName` value hashes to a seen-≥2 slot —
-   *  i.e. drop rows provably alone in their bucket. Builds the sketch (one
-   *  extra scan of `df`), broadcasts it, filters codegen-natively. A
-   *  saturated sketch (marked ratio > [[saturationSkipRatio]]) skips the
-   *  filter: correctness is unaffected either way (false positives only
-   *  keep rows), the skip just refuses to pay a filter that prunes ~nothing. */
-  def prune(df: DataFrame, colName: String, log2m: Int): DataFrame =
-    pruneReleasable(df, colName, log2m)._1
-
-  /** [[prune]] plus the sketch's broadcast release handle, for callers that
-   *  process several sketches in sequence (the band-range driver): call the
-   *  handle ONLY after the filtered plan is fully materialized, so exactly
-   *  one sketch broadcast is live at a time instead of all of them awaiting
-   *  GC. A skipped (saturated) or never-built sketch returns a no-op. */
-  def pruneReleasable(df: DataFrame, colName: String, log2m: Int): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    val bits = sketch(df, colName, log2m)
-    val ratio = markedRatio(bits, 1L << log2m)
-    System.err.println(f"[graft.prune] $colName: ${100.0 * ratio}%.2f%% of " +
-      f"${1L << log2m} slots marked >=2")
-    if (ratio > saturationSkipRatio) {
-      System.err.println(f"[graft.prune] $colName: sketch saturated " +
-        f"(ratio ${ratio}%.2f > $saturationSkipRatio) — filter skipped, rows pass through")
-      return (df, () => ())
-    }
-    val bc = spark.sparkContext.broadcast(bits)
-    val filtered = df.filter(org.apache.spark.sql.GraftColumnBridge.column(
-      BitsetContainsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(df(colName)), bc, log2m)))
-    (filtered, () => bc.destroy())
-  }
-
-  // ---- sharded sketch: past the 2^29 single-array cap ----------------------
-  //
-  // Round-4 verdict "What's missing #3": the monolithic sketch gates itself
-  // off exactly where the band exchange is biggest, because one Array[Long]
-  // must survive treeReduce merges AND a whole-array broadcast. Sharding the
-  // SLOT SPACE fixes the build side: the global slot is split into
-  // (shard = top shardBits, slot-in-shard = low log2mShard bits); the narrow
-  // (shard, hash) projection is repartitioned BY SHARD, so each build task
-  // holds ONE shard's bitset pair (2·2^log2mShard/8 bytes, not the whole
-  // space) and partials merge shard-local in parallel reducers instead of
-  // through one driver-bound treeReduce of a giant array. Total sketch bits
-  // can then grow to the broadcast budget (2^35 = 4 GB default cap) instead
-  // of the 2^29 = 64 MB single-array cap.
-  //
-  // The filter side still broadcasts ALL shards (every partition sees every
-  // band), so the honest scale bound is executor memory: 4 GB at 10⁹ docs ×
-  // 64 bands (6.4×10¹⁰ rows) runs the sketch at α ≈ 1.9 — pruning ~10%, not
-  // 60%; the full cut at that scale comes from processing bands in RANGES
-  // (8 ranges × 8 bands ⇒ 8×10⁹ rows/range at α ≈ 0.23 per range, one 4 GB
-  // sketch live at a time — the ranges partition the rows, so the total
-  // extra scan cost stays ONE pass). The arithmetic and the α → cut curve
-  // are in BENCH/PROFILE_r05.md; SeenTwiceSpec proves sharded ≡ monolithic
-  // keep sets when both cover the same total slot space.
-
-  /** Global slot split: `(shard, slot)` from the top `shardBits + log2mShard`
-   *  bits of the mixed hash. `shardBits = 0` degenerates to [[slot]]. */
-  @inline def shardedSlot(h: Long, log2mShard: Int, shardBits: Int): Long =
-    (h * 0x9E3779B97F4A7C15L) >>> (64 - shardBits - log2mShard)
-
-  /** True iff `h`'s slot is marked in its shard's sketch. */
-  def containsSharded(bits: Array[Array[Long]], log2mShard: Int, shardBits: Int,
-                      h: Long): Boolean = {
-    val g = shardedSlot(h, log2mShard, shardBits)
-    val arr = bits((g >>> log2mShard).toInt)
-    val s = (g & ((1L << log2mShard) - 1)).toInt
-    ((arr(s >>> 6) >>> (s & 63)) & 1L) == 1L
   }
 
   /** Size the sharded sketch: smallest total slot count with load ≤ 0.25,
@@ -226,107 +97,133 @@ object SeenTwice {
       org.apache.spark.sql.types.IntegerType
     override def prettyName: String = "graft_seen_shard"
     override def nullSafeEval(input: Any): Any =
-      (shardedSlot(input.asInstanceOf[Long], log2mShard, shardBits) >>> log2mShard).toInt
+      (slot(input.asInstanceOf[Long], log2mShard, shardBits) >>> log2mShard).toInt
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = (int) (graft.functions.SeenTwice.shardedSlot($c, $log2mShard, $shardBits) >>> $log2mShard);")
+        s"${ev.value} = (int) (graft.functions.SeenTwice.slot($c, $log2mShard, $shardBits) >>> $log2mShard);")
     override protected def withNewChildInternal(newChild: Expression): ShardOfExpr =
       copy(child = newChild)
   }
 
-  /** `graft_seen_twice_sharded(h)` — membership against the sharded sketch. */
-  case class BitsetShardContainsExpr(child: Expression,
-                                     bits: Broadcast[Array[Array[Long]]],
-                                     log2mShard: Int, shardBits: Int)
+  /** `graft_seen_twice(h)` — codegen'd bitset membership against a broadcast
+   *  sketch; the filter stays inside whole-stage codegen (no ScalaUDF boxing
+   *  on a 10⁸-row scan). Plans name a multi-shard filter
+   *  `graft_seen_twice_sharded`. */
+  case class BitsetContainsExpr(child: Expression, bits: Broadcast[Array[Array[Long]]],
+                                log2mShard: Int, shardBits: Int)
       extends UnaryExpression with Predicate {
-    override def prettyName: String = "graft_seen_twice_sharded"
+    override def prettyName: String =
+      if (shardBits == 0) "graft_seen_twice" else "graft_seen_twice_sharded"
     override def nullSafeEval(input: Any): Any =
-      containsSharded(bits.value, log2mShard, shardBits, input.asInstanceOf[Long])
+      contains(bits.value, log2mShard, shardBits, input.asInstanceOf[Long])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftSeenShardBc", bits,
+      val bcRef = ctx.addReferenceObj("graftSeenTwiceBc", bits,
         classOf[Broadcast[Array[Array[Long]]]].getName)
-      val arr = ctx.addMutableState("long[][]", "graftSeenShardBits",
+      val arr = ctx.addMutableState("long[][]", "graftSeenTwiceBits",
         v => s"$v = (long[][]) $bcRef.value();")
       nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.SeenTwice.containsSharded($arr, $log2mShard, $shardBits, $c);")
+        s"${ev.value} = graft.functions.SeenTwice.contains($arr, $log2mShard, $shardBits, $c);")
     }
-    override protected def withNewChildInternal(newChild: Expression): BitsetShardContainsExpr =
+    override protected def withNewChildInternal(newChild: Expression): BitsetContainsExpr =
       copy(child = newChild)
   }
 
-  /** Build the sharded seen-≥2 sketch: repartition the narrow `(shard, h)`
-   *  projection by shard (plus a `subSplit`-way intra-shard split so a big
-   *  shard is still built by several tasks), build per-shard bitset pairs in
-   *  `mapPartitions`, merge them shard-keyed. Merge traffic per shard is
-   *  `(partials_per_shard − 1) · 2 · 2^log2mShard/8` bytes across PARALLEL
-   *  reducers — not one treeReduce of the whole slot space. */
-  def sketchSharded(df: DataFrame, colName: String, log2mShard: Int,
-                    shardBits: Int, subSplit: Int = 4): Array[Array[Long]] = {
-    import org.apache.spark.sql.functions.{col, pmod, xxhash64, lit}
+  /** Build the seen-≥2 sketch over `df(colName)` (a LONG column): one
+   *  `twice` bitset per shard. Each build partition fills a once/twice pair
+   *  per shard it sees, and the pairs merge per shard.
+   *
+   *  At `shardBits = 0` the column is read map-side and coalesced to at most
+   *  `mergeWidth` partials, which tree-merge on their way to the driver: no
+   *  row crosses an exchange. Above it the narrow column is repartitioned by
+   *  shard (plus a `subSplit`-way intra-shard split so a big shard is still
+   *  built by several tasks), so each build task holds one shard's pair
+   *  instead of the whole slot space; shards merge in parallel reducers and
+   *  only the `twice` halves reach the driver (round-5 ADVICE: collecting
+   *  both halves doubled the driver's transient footprint to ~8 GB at the
+   *  2^35-slot cap). */
+  def sketch(df: DataFrame, colName: String, log2mShard: Int, shardBits: Int = 0,
+             subSplit: Int = 4, mergeWidth: Int = 16): Array[Array[Long]] = {
     val nShards = 1 << shardBits
     val nWords = 1 << (log2mShard - 6)
-    val shardCol = org.apache.spark.sql.GraftColumnBridge.column(
-      ShardOfExpr(org.apache.spark.sql.GraftColumnBridge.expression(df(colName)),
-        log2mShard, shardBits))
-    val narrow = df.select(shardCol.as("__shard"), col(colName).as("__h"))
-      .repartition(nShards * subSplit, col("__shard"),
-        pmod(xxhash64(col("__h")), lit(subSplit)))
-    val partials = narrow.queryExecution.toRdd.mapPartitions { it =>
+    val narrow = df.select(col(colName))
+    // internal-row RDD: getLong(0) straight off the UnsafeRow, no Row boxing
+    // on what is deliberately a 10⁸-row scan
+    val rows =
+      if (shardBits == 0) {
+        val rdd = narrow.queryExecution.toRdd
+        if (rdd.getNumPartitions > mergeWidth) rdd.coalesce(mergeWidth, shuffle = false) else rdd
+      } else narrow.repartition(nShards * subSplit,
+          GraftColumnBridge.column(ShardOfExpr(
+            GraftColumnBridge.expression(narrow(colName)), log2mShard, shardBits)),
+          pmod(xxhash64(narrow(colName)), lit(subSplit)))
+        .queryExecution.toRdd
+    val partials = rows.mapPartitions { it =>
       // a partition hosts the (shard, sub) groups hashed to it — typically
       // one shard, occasionally a few; allocate lazily per shard seen
-      val m = new java.util.HashMap[Int, (Array[Long], Array[Long])]()
+      val once = new Array[Array[Long]](nShards)
+      val twice = new Array[Array[Long]](nShards)
+      val mask = (1L << log2mShard) - 1
       while (it.hasNext) {
-        val r = it.next()
-        val sh = r.getInt(0)
-        var pair = m.get(sh)
-        if (pair == null) {
-          pair = (new Array[Long](nWords), new Array[Long](nWords))
-          m.put(sh, pair)
+        val g = slot(it.next().getLong(0), log2mShard, shardBits)
+        val sh = (g >>> log2mShard).toInt
+        if (once(sh) == null) {
+          once(sh) = new Array[Long](nWords)
+          twice(sh) = new Array[Long](nWords)
         }
-        val g = shardedSlot(r.getLong(1), log2mShard, shardBits)
-        val s = (g & ((1L << log2mShard) - 1)).toInt
+        val s = (g & mask).toInt
         val w = s >>> 6
         val b = 1L << (s & 63)
-        if ((pair._1(w) & b) != 0L) pair._2(w) |= b else pair._1(w) |= b
+        if ((once(sh)(w) & b) != 0L) twice(sh)(w) |= b else once(sh)(w) |= b
       }
-      import scala.jdk.CollectionConverters._
-      m.entrySet().iterator().asScala.map(e => (e.getKey.intValue(), e.getValue))
+      (0 until nShards).iterator.filter(once(_) != null)
+        .map(sh => (sh, (once(sh), twice(sh))))
     }
-    val mergePair = (a: (Array[Long], Array[Long]), b: (Array[Long], Array[Long])) => {
-      val (o1, t1) = a
-      val (o2, t2) = b
-      var i = 0
-      while (i < nWords) {
-        t1(i) = t1(i) | t2(i) | (o1(i) & o2(i))
-        o1(i) = o1(i) | o2(i)
-        i += 1
+    val mergePair = (a: (Array[Long], Array[Long]), b: (Array[Long], Array[Long])) =>
+      if (a == null) b else if (b == null) a else {
+        // partials are task-owned deserialized copies: merge in place
+        val (o1, t1) = a
+        val (o2, t2) = b
+        var i = 0
+        while (i < nWords) {
+          t1(i) = t1(i) | t2(i) | (o1(i) & o2(i))
+          o1(i) = o1(i) | o2(i)
+          i += 1
+        }
+        (o1, t1)
       }
-      (o1, t1)
-    }
-    // Drop the 'once' half BEFORE the collect (round-5 ADVICE): only the
-    // 'twice' bitsets are the sketch — collecting both halves doubled the
-    // driver's transient footprint to ~8 GB at the documented 2^35-slot cap.
-    val merged = partials.reduceByKey(mergePair, math.min(nShards, 64))
-      .mapValues(_._2).collect()
-    val out = Array.fill(nShards)(new Array[Long](nWords))
-    merged.foreach { case (sh, twice) => out(sh) = twice }
-    out
+    val byShard =
+      if (shardBits == 0) // ≤ mergeWidth partials merge on their way to the driver: no shuffle stage
+        Option(partials.values.treeAggregate(null: (Array[Long], Array[Long]))(
+          mergePair, mergePair, depth = 2)).map(p => 0 -> p._2).toMap
+      else partials.reduceByKey(mergePair, math.min(nShards, 64)).mapValues(_._2).collect().toMap
+    Array.tabulate(nShards)(sh => byShard.getOrElse(sh, new Array[Long](nWords)))
   }
 
-  /** [[prune]] through the sharded sketch — same keep/drop semantics as a
-   *  monolithic sketch over `log2mShard + shardBits` total slot bits
-   *  (SeenTwiceSpec parity), built and merged shard-parallel. Same
-   *  saturation skip. */
-  def pruneSharded(df: DataFrame, colName: String, log2mShard: Int,
-                   shardBits: Int): DataFrame =
-    pruneShardedReleasable(df, colName, log2mShard, shardBits)._1
+  /** Marked-slot ratio above which the sketch is SATURATED: at the design
+   *  load α = 0.25 only ~2.6% of slots mark ≥2 (1 − e^−α(1+α)); a ratio past
+   *  0.45 means α ≳ 1.5, i.e. the singleton false-keep rate is ≳ 78% and the
+   *  filter would keep almost everything — two extra scans for nothing. The
+   *  ratio is read off the FINISHED sketch (free — the bits are on the
+   *  driver anyway), so an undersized row estimate self-corrects here
+   *  instead of shipping a useless filter (round-4 ADVICE on the gram-side
+   *  `nCorpusRows * 10` estimate). */
+  val saturationSkipRatio: Double = 0.45
 
-  /** [[pruneSharded]] plus the broadcast release handle — see
-   *  [[pruneReleasable]] for the one-sketch-live-at-a-time contract. */
-  def pruneShardedReleasable(df: DataFrame, colName: String, log2mShard: Int,
-                             shardBits: Int): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    val bits = sketchSharded(df, colName, log2mShard, shardBits)
+  /** Filter `df` to rows whose `colName` value hashes to a seen-≥2 slot —
+   *  i.e. drop rows provably alone in their bucket — plus the sketch's
+   *  broadcast release handle. Builds the sketch (one extra scan of `df`),
+   *  broadcasts it, filters codegen-natively. A saturated sketch (marked
+   *  ratio > [[saturationSkipRatio]]) skips the filter: correctness is
+   *  unaffected either way (false positives only keep rows), the skip just
+   *  refuses to pay a filter that prunes ~nothing.
+   *
+   *  Call the handle ONLY after the filtered plan is fully materialized; it
+   *  frees the broadcast then instead of leaving it to GC, so the band-range
+   *  driver keeps exactly one sketch live at a time. A skipped (saturated)
+   *  sketch returns a no-op. */
+  def pruneReleasable(df: DataFrame, colName: String, log2mShard: Int,
+                      shardBits: Int): (DataFrame, () => Unit) = {
+    val bits = sketch(df, colName, log2mShard, shardBits)
     val totalSlots = 1L << (log2mShard + shardBits)
     var marked = 0L
     bits.foreach { arr =>
@@ -334,33 +231,42 @@ object SeenTwice {
       while (i < arr.length) { marked += java.lang.Long.bitCount(arr(i)); i += 1 }
     }
     val ratio = marked.toDouble / totalSlots
-    System.err.println(f"[graft.prune] $colName (sharded ${1 << shardBits}x" +
-      f"2^$log2mShard): ${100.0 * ratio}%.2f%% of $totalSlots slots marked >=2")
+    System.err.println(f"[graft.prune] $colName (${1 << shardBits}x2^$log2mShard): " +
+      f"${100.0 * ratio}%.2f%% of $totalSlots slots marked >=2")
     if (ratio > saturationSkipRatio) {
-      System.err.println(f"[graft.prune] $colName: sharded sketch saturated " +
+      System.err.println(f"[graft.prune] $colName: sketch saturated " +
         f"(ratio ${ratio}%.2f > $saturationSkipRatio) — filter skipped, rows pass through")
       return (df, () => ())
     }
-    val bc = spark.sparkContext.broadcast(bits)
-    val filtered = df.filter(org.apache.spark.sql.GraftColumnBridge.column(
-      BitsetShardContainsExpr(
-        org.apache.spark.sql.GraftColumnBridge.expression(df(colName)),
-        bc, log2mShard, shardBits)))
+    val bc = df.sparkSession.sparkContext.broadcast(bits)
+    val filtered = df.filter(GraftColumnBridge.column(BitsetContainsExpr(
+      GraftColumnBridge.expression(df(colName)), bc, log2mShard, shardBits)))
     (filtered, () => bc.destroy())
   }
 
-  /** Regime dispatch for one prune over `rows` exploded rows, with the
-   *  release handle: monolithic sketch at or under `maxRows`, sharded at or
-   *  under `shardedMaxRows`, honest pass-through above (the sketch would
-   *  saturate) or below `minRows` (the extra scan nets negative). The
-   *  band-range driver calls this per range, where `rows` re-enters the
-   *  effective window by construction. */
-  def pruneAuto(df: DataFrame, colName: String, rows: Long, minRows: Long,
-                maxRows: Long, shardedMaxRows: Long): (DataFrame, () => Unit) =
-    if (rows < minRows) (df, () => ())
-    else if (rows <= maxRows) pruneReleasable(df, colName, autoLog2m(rows))
-    else if (rows <= shardedMaxRows) {
-      val (l2, sb) = autoShardedBits(rows)
-      pruneShardedReleasable(df, colName, l2, sb)
-    } else (df, () => ())
+  /** One-shard prune over `2^log2m` slots; the broadcast is left to GC. */
+  def prune(df: DataFrame, colName: String, log2m: Int): DataFrame =
+    pruneReleasable(df, colName, log2m, 0)._1
+
+  /** Prune over `2^shardBits` shards of `2^log2mShard` slots — the same
+   *  keep set as [[prune]] over `log2mShard + shardBits` bits (SeenTwiceSpec
+   *  parity); the broadcast is left to GC. */
+  def pruneSharded(df: DataFrame, colName: String, log2mShard: Int,
+                   shardBits: Int): DataFrame =
+    pruneReleasable(df, colName, log2mShard, shardBits)._1
+
+  /** The prune as the pipeline runs it, over an estimated `rows` exploded
+   *  rows, with the release handle: pass-through when `cfg.pruneSingletons`
+   *  is off, below `cfg.pruneMinRows` or above `cfg.pruneShardedMaxRows`;
+   *  one shard at or under `cfg.pruneMaxRows`; sharded above. The band-range
+   *  driver calls this per range, where `rows` re-enters the window by
+   *  construction. */
+  def pruneAuto(df: DataFrame, colName: String, rows: Long,
+                cfg: DedupConfig): (DataFrame, () => Unit) =
+    if (!cfg.pruneSingletons || rows < cfg.pruneMinRows || rows > cfg.pruneShardedMaxRows)
+      (df, () => ())
+    else {
+      val (l2, sb) = if (rows <= cfg.pruneMaxRows) (autoLog2m(rows), 0) else autoShardedBits(rows)
+      pruneReleasable(df, colName, l2, sb)
+    }
 }

@@ -99,20 +99,17 @@ case class DedupConfig(
     substringViaSuffixArray: Boolean = false,
     /** Prune provably-singleton LSH/gram buckets BEFORE their co-locating
      *  exchange ([[graft.functions.SeenTwice]] bitset sketch — exact: false
-     *  positives only keep rows, never drop a pair). Skipped when the
-     *  exploded row count exceeds `pruneMaxRows`: the 2^29-bit capped
-     *  sketch saturates past it (load ≫ 1 marks every slot) and the filter
-     *  would prune nothing for two extra scans. */
+     *  positives only keep rows, never drop a pair). The one entry point is
+     *  `SeenTwice.pruneAuto`, which reads the three row bounds below: no
+     *  prune under `pruneMinRows`; one shard of ≤ 2^29 bits (64 MB) up to
+     *  `pruneMaxRows`; ≤ 64 MB shards built and merged shard-parallel, 2^35
+     *  bits (4 GB broadcast) in total, up to `pruneShardedMaxRows`. Past
+     *  that even the sharded sketch saturates, so the candidates stage splits
+     *  the bands into ranges that each re-enter the window
+     *  (`NearDup.candidateIdPairsBandRanged`, BENCH/PROFILE_r05.md) and the
+     *  gram stage passes its rows through unpruned. */
     pruneSingletons: Boolean = true,
     pruneMaxRows: Long = 1L << 29,
-    /** Past `pruneMaxRows` the prune switches to the SHARDED sketch
-     *  ([[graft.functions.SeenTwice.pruneSharded]]): slot space split into
-     *  ≤64 MB per-shard bitsets built/merged shard-parallel, total bits
-     *  capped at 2^35 (4 GB broadcast — big-executor budget). Above THIS
-     *  bound even the sharded sketch saturates (load > 1 at the 4 GB cap)
-     *  and the prune passes through; the 10⁹-doc recipe is band-RANGE
-     *  processing (BENCH/PROFILE_r05.md), which re-enters this window
-     *  per range. */
     pruneShardedMaxRows: Long = 1L << 33,
     /** Exploded-row floor below which the prune is skipped: the sketch pays
      *  a fixed second scan of the exploded table, worth it only when the

@@ -68,8 +68,7 @@ object Clustering {
    *  instead of star rounds. 4M edges ≈ 64 MB of longs — trivially driver-
    *  safe, while each avoided star round costs 2+ shuffles of driver-
    *  coordinated latency that a higher core count cannot shrink. */
-  val DefaultLocalFinishEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES").map(_.toLong).getOrElse(4000000L)
+  val DefaultLocalFinishEdges: Long = 4000000L
 
   /** Driver-side union-find over a collected edge list (min-id root wins —
    *  identical labeling to the converged star rounds). The input edge set is
@@ -79,12 +78,6 @@ object Clustering {
   private def localComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(what: String): Unit = if (dbg) {
-      System.err.println(f"[graft.cc] local.$what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
@@ -97,28 +90,23 @@ object Clustering {
     }
     val nodes = new java.util.HashSet[Long]()
     val collected = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
-    lap(s"collect(${collected.length} edges)")
     collected.foreach {
       case (a, b) =>
         nodes.add(a); nodes.add(b)
         val ra = find(a); val rb = find(b)
         if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
     }
-    lap(s"unionfind(${nodes.size} nodes)")
     val out = new Array[(Long, Long)](nodes.size)
     var i = 0
     nodes.forEach(n => { out(i) = (n, find(n)); i += 1 })
-    lap("flatten")
     // parallelize, NOT createDataset: a local-collection Dataset encodes
     // every row on the DRIVER at execution (LocalTableScan) — measured as a
     // scale-flat multi-second serial segment at millions of nodes;
     // parallelize ships raw tuples and encodes IN TASKS, in parallel.
-    val df = spark.createDataset(
+    spark.createDataset(
       spark.sparkContext.parallelize(out.toIndexedSeq,
         math.max(spark.sparkContext.defaultParallelism, 8)))
       .toDF("node", "component")
-    lap("dataset")
-    df
   }
 
   /**
@@ -154,21 +142,13 @@ object Clustering {
     // their input twice (join + aggregation side), and an unmaterialized
     // input subtree — potentially a whole upstream candidate pipeline —
     // would execute once per reference, inside every round-1 stage.
-    val dbgT = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var tCk = System.nanoTime()
     var cur = if (reliable) cur0.checkpoint() else cur0.localCheckpoint(true)
-    if (dbgT) System.err.println(
-      f"[graft.cc] input-checkpoint(reliable=$reliable) ${(System.nanoTime() - tCk) / 1e9}%.2f s")
-    tCk = System.nanoTime()
     val nEdges = cur.count()
-    if (dbgT) System.err.println(f"[graft.cc] count($nEdges) ${(System.nanoTime() - tCk) / 1e9}%.2f s")
     if (nEdges <= localFinishEdges) return localComponents(cur)
     var converged = false
     var it = 0
     var prevSig: (Long, Long) = (-1L, -1L)
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
       val next0 = smallStar(largeStar(cur))
       // LAZY local checkpoint: the convergence-signature aggregation below is
       // the action that materializes it — one job per round, not two. The
@@ -188,8 +168,6 @@ object Clustering {
       prevSig = sig
       cur = next
       it += 1
-      if (dbg) System.err.println(
-        f"[graft.cc] iter $it ${(System.nanoTime() - t0) / 1e9}%.2f s edges=${sig._1}")
     }
     System.err.println(s"[graft.cc] converged after $it iterations")
     // After convergence every edge points member→root (a star). Roots map to
@@ -227,8 +205,7 @@ object Clustering {
    *  big-executor budget class as the sharded prune sketch). Past either
    *  gate the dense shuffle formulation below runs instead — identical
    *  output. */
-  val DefaultClusterBroadcastMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_CLUSTER_BC_ROWS").map(_.toLong).getOrElse(4000000L)
+  val DefaultClusterBroadcastMaxRows: Long = 4000000L
 
   def clusterTableCollapsed(members: DataFrame, baseRep: DataFrame,
                             repPairs: DataFrame,
@@ -309,15 +286,11 @@ object Clustering {
   }
 
   def clusterTable(members: DataFrame, pairs: DataFrame): DataFrame = {
-    val spark = members.sparkSession
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    val t0 = System.nanoTime()
     val m = members.withColumn("node", xxhash64(col("rkey")))
     val edges = pairs.select(
       xxhash64(col(pairs.columns(0))).as("src"),
       xxhash64(col(pairs.columns(1))).as("dst"))
     val cc = connectedComponents(edges)
-    if (dbg) System.err.println(f"[graft.cc] cc-total ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val labeled = m.join(cc, Seq("node"), "left_outer")
       .withColumn("component", coalesce(col("component"), col("node")))
     // Representative = min rkey per component; broadcast-sized only per-group,

@@ -230,14 +230,19 @@ object NearDup {
   }
 
   /**
-   * [[candidateIdPairs]] at the 10⁹-doc shape: bands processed in contiguous
-   * RANGES so the singleton prune re-enters its effective-load window per
-   * range (BENCH/PROFILE_r05.md §3). One pass over 10⁹ docs × 64 bands =
-   * 6.4×10¹⁰ exploded rows runs even the 4 GB sharded sketch at load α ≈ 1.9
-   * — cutting ~9% and rightly skipping itself as saturated; 8 ranges of 8
-   * bands run α ≈ 0.23 per range and cut ~47% of EVERY range's rows before
-   * its exchange. Because ranges partition the exploded rows (see
-   * [[bandedByIdRange]]):
+   * [[candidateIdPairs]] behind the singleton prune, as the pipeline runs
+   * it. While the exploded band rows fit the prune window
+   * (`cfg.pruneShardedMaxRows`, or always with `cfg.pruneSingletons` off)
+   * this is ONE range: [[bandedById]] → `SeenTwice.pruneAuto` →
+   * [[candidateIdPairs]], a lazy plan with nothing written under `rangeDir`.
+   *
+   * Past the window, bands are processed in contiguous RANGES so the prune
+   * re-enters its effective-load window per range (BENCH/PROFILE_r05.md §3).
+   * One pass over 10⁹ docs × 64 bands = 6.4×10¹⁰ exploded rows runs even the
+   * 4 GB sharded sketch at load α ≈ 1.9 — cutting ~9% and rightly skipping
+   * itself as saturated; 8 ranges of 8 bands run α ≈ 0.23 per range and cut
+   * ~47% of EVERY range's rows before its exchange. Because ranges partition
+   * the exploded rows (see [[bandedByIdRange]]):
    *  - the total sketch-build scan stays ONE pass over the exploded rows
    *    (each range explodes only its slice; the signatures table is re-read
    *    per range — a narrow columnar scan, the decisive trade in PROFILE §3),
@@ -248,29 +253,58 @@ object NearDup {
    * before the next range's sketch is built: exactly one sketch broadcast is
    * live at a time (released as soon as its range lands), and a killed run
    * resumes from completed ranges — the parquet `_SUCCESS` marker is the
-   * done-flag, the same contract as stage checkpoints (north_rule: resumable
-   * from checkpoint). The path encodes the range GEOMETRY (`nRanges` and
-   * `cfg.bands`, which together determine every `lo..hi` slice), so a runDir
-   * reused after a corpus-size or band-count change can never silently
-   * restore a stale range covering different bands — geometry-mismatched
-   * files are simply not found and the range recomputes. Note the resume
-   * caveat that remains by design: `onDrop` accounting is skipped for
-   * restored ranges, so dropped-bucket metrics undercount on a resumed run
-   * (the pairs themselves are exact). The ranges are internal state of the
-   * candidates stage; the caller still owns the stage-level checkpoint of
-   * the deduped union.
+   * done-flag, the same contract as stage checkpoints. `range_*` dirs of any
+   * other geometry are deleted first.
+   *
+   * What the path key catches: a change of `nRanges` (which follows the
+   * signature count) or of `cfg.bands` — together they fix every `lo..hi`
+   * slice, so such a change recomputes instead of restoring a range that
+   * covers other bands. What it misses: a content change that keeps the
+   * signature count (and so `nRanges`), and changes to `cfg.rowsPerBand`,
+   * `cfg.shingleN` or `cfg.maxBucketSize` — a run dir reused across those
+   * restores stale ranges. ROADMAP open item 2 (stage manifests) is the fix.
+   * Also by design: `onDrop` accounting is skipped for restored ranges, so
+   * dropped-bucket metrics undercount on a resumed run (the pairs themselves
+   * are exact). The ranges are internal state of the candidates stage; the
+   * caller still owns the stage-level checkpoint of the deduped union.
+   *
+   * The one-range plan's sketch broadcast is left to GC here; a caller that
+   * materializes the plan itself frees it earlier through
+   * [[candidateIdPairsBandRangedReleasable]].
    */
   def candidateIdPairsBandRanged(signatures: DataFrame, cfg: DedupConfig,
                                  rangeDir: String,
-                                 onDrop: Long => Unit = _ => ()): DataFrame = {
+                                 onDrop: Long => Unit = _ => ()): DataFrame =
+    candidateIdPairsBandRangedReleasable(signatures, cfg, rangeDir, onDrop)._1
+
+  /** [[candidateIdPairsBandRanged]] plus the one-range plan's sketch release
+   *  handle: call it once the returned plan has been materialized (a no-op
+   *  past one range, where every range released its own sketch already). */
+  def candidateIdPairsBandRangedReleasable(signatures: DataFrame, cfg: DedupConfig,
+                                           rangeDir: String,
+                                           onDrop: Long => Unit = _ => ())
+      : (DataFrame, () => Unit) = {
     val spark = signatures.sparkSession
     val sigRows = signatures.count()
     val bandRows = sigRows * cfg.bands
-    val nRanges = math.min(cfg.bands.toLong,
-      math.max(1L, (bandRows + cfg.pruneShardedMaxRows - 1) / cfg.pruneShardedMaxRows)).toInt
+    val nRanges =
+      if (!cfg.pruneSingletons) 1
+      else math.min(cfg.bands.toLong,
+        math.max(1L, (bandRows + cfg.pruneShardedMaxRows - 1) / cfg.pruneShardedMaxRows)).toInt
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(rangeDir), spark.sparkContext.hadoopConfiguration)
-    def rangePath(r: Int) = s"$rangeDir/range_${r}of${nRanges}_b${cfg.bands}"
+    val dir = new org.apache.hadoop.fs.Path(rangeDir)
+    val geometry = s"of${nRanges}_b${cfg.bands}"
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath).filter { p =>
+        p.getName.startsWith("range_") && !p.getName.matches(s"range_\\d+$geometry")
+      }.foreach(fs.delete(_, true))
+    if (nRanges == 1) {
+      val (pruned, release) = graft.functions.SeenTwice.pruneAuto(
+        bandedById(signatures, cfg), "band_hash", bandRows, cfg)
+      return (candidateIdPairs(pruned, cfg, onDrop), release)
+    }
+    def rangePath(r: Int) = s"$rangeDir/range_$r$geometry"
     (0 until nRanges).foreach { r =>
       val lo = r * cfg.bands / nRanges
       val hi = (r + 1) * cfg.bands / nRanges
@@ -278,9 +312,7 @@ object NearDup {
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
         val t0 = System.nanoTime()
         val (pruned, release) = graft.functions.SeenTwice.pruneAuto(
-          bandedByIdRange(signatures, cfg, lo, hi), "band_hash",
-          sigRows * (hi - lo), cfg.pruneMinRows, cfg.pruneMaxRows,
-          cfg.pruneShardedMaxRows)
+          bandedByIdRange(signatures, cfg, lo, hi), "band_hash", sigRows * (hi - lo), cfg)
         try candidateIdPairsRaw(pruned, cfg, onDrop)
           .write.mode("overwrite").parquet(path)
         finally release()
@@ -289,8 +321,7 @@ object NearDup {
       } else System.err.println(
         s"[graft.stage] candidates range $r/$nRanges restored from checkpoint")
     }
-    spark.read.parquet((0 until nRanges).map(rangePath): _*)
-      .distinct()
+    (spark.read.parquet((0 until nRanges).map(rangePath): _*).distinct(), () => ())
   }
 
   def candidatePairs(banded: DataFrame, keys: DataFrame, cfg: DedupConfig): DataFrame = {

@@ -59,7 +59,10 @@ object SimilarityIndexStore {
     require(metaDf.columns.contains("dims"),
       s"index '$base' predates the recorded-dims format (no 'dims' in ${base}_ann_meta); " +
         "rebuild it with buildAnn before querying")
-    val meta = metaDf.head()
+    val metaRow = metaDf.take(1).headOption
+    require(metaRow.isDefined,
+      s"index '$base' has an empty ${base}_ann_meta; rebuild it with buildAnn before querying")
+    val meta = metaRow.get
     val dims = meta.getAs[Int]("dims")
     // One action covers both the emptiness and the dims check (round 6: the
     // former isEmpty + dimsOf pair ran two jobs for one answer).

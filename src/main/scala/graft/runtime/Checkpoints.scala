@@ -65,12 +65,7 @@ class RunContext(val spark: SparkSession, val runDir: String, val runId: String)
       spark.sparkContext.setJobDescription(s"graft:$name")
       metrics.instrument(compute, name)
         .write.mode("overwrite").parquet(path)
-      val dbg = if (sys.env.contains("SPARK_GRAFT_HEAP_DEBUG")) {
-        System.gc()
-        val rt = Runtime.getRuntime
-        f"  usedHeap=${(rt.totalMemory - rt.freeMemory) / (1 << 20)}%dMB"
-      } else ""
-      System.err.println(f"[graft.stage] $name ${(System.nanoTime() - t0) / 1e9}%.1f s$dbg")
+      System.err.println(f"[graft.stage] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.read.parquet(path)
   }

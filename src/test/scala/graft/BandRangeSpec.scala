@@ -81,13 +81,16 @@ class BandRangeSpec extends AnyFunSuite {
       // geometry change in the SAME runDir (round-5 ADVICE): a config that
       // yields a DIFFERENT range count must not restore the stale slices —
       // the path encodes (nRanges, bands), so mismatched geometry recomputes
-      // and the pair set stays exact instead of silently losing candidates
+      // and the pair set stays exact instead of silently losing candidates;
+      // the stale geometry's dirs are deleted, not left to leak
+      val staleGeom = victim.getName.split("of")(1)
       val cfgFewer = cfg.copy(pruneShardedMaxRows = 4096L)
       val ranged2 = pairSet(NearDup.candidateIdPairsBandRanged(sigs, cfgFewer, dir))
       assert(ranged2 === single)
       val geoms = new java.io.File(dir).listFiles()
         .filter(_.getName.startsWith("range_")).map(_.getName.split("of")(1)).toSet
-      assert(geoms.size === 2, s"expected two geometries side by side, got $geoms")
+      assert(geoms.size === 1 && !geoms.contains(staleGeom),
+        s"expected only the current geometry to remain, got $geoms")
     } finally sigs.unpersist()
   }
 

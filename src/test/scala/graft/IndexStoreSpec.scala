@@ -85,4 +85,19 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(none.isEmpty)
     Seq("_ann_meta", "_ann_idx").foreach(s => cat.dropAll(spark, base + s))
   }
+
+  test("an empty stored ANN meta table fails with a rebuild instruction") {
+    import spark.implicits._
+    val base = "graft_spec_annempty"
+    Seq("_ann_meta", "_ann_idx").foreach(s => cat.dropAll(spark, base + s))
+    SimilarityIndexStore.buildAnn(spark, cat, base, embeddings)
+    // a newer, EMPTY meta version becomes the canonical one
+    cat.writeVersion(spark, s"${base}_ann_meta",
+      Seq.empty[(Int, Int, Int)].toDF("tables", "bits", "dims"))
+    val e = intercept[IllegalArgumentException] {
+      SimilarityIndexStore.annTopK(spark, cat, base, embeddings)
+    }
+    assert(e.getMessage.contains("empty") && e.getMessage.contains("buildAnn"))
+    Seq("_ann_meta", "_ann_idx").foreach(s => cat.dropAll(spark, base + s))
+  }
 }

@@ -24,9 +24,9 @@ class SeenTwiceSpec extends AnyFunSuite {
       .union(dups.toDF("h").repartition(3))
     val log2m = SeenTwice.autoLog2m(singles.size + 2L * dups.size)
     val bits = SeenTwice.sketch(df, "h", log2m)
-    dups.foreach(h => assert(SeenTwice.contains(bits, log2m, h), s"dup $h lost"))
+    dups.foreach(h => assert(SeenTwice.contains(bits, log2m, 0, h), s"dup $h lost"))
     // sized at load <= 0.25, far fewer than half the singletons false-keep
-    val fp = singles.count(h => SeenTwice.contains(bits, log2m, h))
+    val fp = singles.count(h => SeenTwice.contains(bits, log2m, 0, h))
     assert(fp < singles.size / 2, s"$fp of ${singles.size} singletons marked")
   }
 
@@ -116,11 +116,11 @@ class SeenTwiceSpec extends AnyFunSuite {
     val dups = (0L until 300L).map(i => i * 40503L + 7L)
     val singles = (0L until 20000L).map(i => i * 2654435761L + 1L)
     val df = (singles ++ dups ++ dups).toDF("h").repartition(11)
-    val bits = SeenTwice.sketchSharded(df, "h", 12, 4, subSplit = 3)
+    val bits = SeenTwice.sketch(df, "h", 12, 4, subSplit = 3)
     dups.foreach { h =>
-      assert(SeenTwice.containsSharded(bits, 12, 4, h), s"dup $h lost")
+      assert(SeenTwice.contains(bits, 12, 4, h), s"dup $h lost")
     }
-    val fp = singles.count(h => SeenTwice.containsSharded(bits, 12, 4, h))
+    val fp = singles.count(h => SeenTwice.contains(bits, 12, 4, h))
     assert(fp < singles.size / 2, s"$fp of ${singles.size} singletons marked")
   }
 
@@ -165,7 +165,11 @@ class SeenTwiceSpec extends AnyFunSuite {
     def rows(cfg: DedupConfig) =
       Pipeline.run(RunContext(spark, tmp()), corpus, cfg)
         .clusters.collect().map(_.toString).sorted.toSeq
-    assert(rows(DedupConfig(pruneSingletons = true, pruneMinRows = 0L))
-      === rows(DedupConfig(pruneSingletons = false)))
+    val unpruned = rows(DedupConfig(pruneSingletons = false))
+    // one shard, then (pruneMaxRows under the row count) pruneAuto's sharded
+    // branch on both the band and the gram side
+    assert(rows(DedupConfig(pruneSingletons = true, pruneMinRows = 0L)) === unpruned)
+    assert(rows(DedupConfig(pruneSingletons = true, pruneMinRows = 0L,
+      pruneMaxRows = 1024L)) === unpruned)
   }
 }
