@@ -230,15 +230,9 @@ object SparkEntry {
       val sh = NearDup.uniqShingleSets(k, cfg)
         .select(xxhash64(col("rkey")).as("id"), col("rkey"),
           col("shingles"), col("n_shingles"))
-      val verified = NearDup.verifyCandidatesById(cand,
-        sh.select("id", "shingles", "n_shingles"), cfg)
-      val names = sh.select("id", "rkey")
-      verified
-        .join(broadcast(names.toDF("id", "ka")), col("a_id") === col("id")).drop("id")
-        .join(broadcast(names.toDF("id", "kb")), col("b_id") === col("id")).drop("id")
-        .select(least(col("ka"), col("kb")).as("a_key"),
-          greatest(col("ka"), col("kb")).as("b_key"),
-          col("n_intersect"), col("n_union"), col("jaccard"))
+      NearDup.withRowKeys(
+        NearDup.verifyCandidatesById(cand, sh.select("id", "shingles", "n_shingles"), cfg),
+        sh.select("id", "rkey"))
     }),
 
     // Multimodal metadata projection over binary media columns.
@@ -424,12 +418,7 @@ object SparkEntry {
       val ids = reps.select(xxhash64(col("rkey")).as("id"), col("rkey"), col("content"))
       val pairs = graft.operators.SuffixArray.windowClassPairs(
         ids.select("id", "content"), cfg.gramWidth, cap = Int.MaxValue)
-      val names = ids.select("id", "rkey")
-      pairs
-        .join(broadcast(names.toDF("id", "k1")), col("a_key") === col("id")).drop("id")
-        .join(broadcast(names.toDF("id", "k2")), col("b_key") === col("id")).drop("id")
-        .select(least(col("k1"), col("k2")).as("a_key"),
-          greatest(col("k1"), col("k2")).as("b_key"))
+      NearDup.withRowKeys(pairs, ids.select("id", "rkey"), "a_key", "b_key")
     })
   )
 

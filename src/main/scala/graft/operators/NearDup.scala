@@ -95,69 +95,40 @@ object NearDup {
 
   /** Shingle-hash projection as a column (public so the pipeline can fuse it
    *  with other per-row projections into ONE dedup pass). Backed by the
-   *  native codegen expression — same static function as [[shingleUdf]]
-   *  (bit-identical), but it stays inside whole-stage codegen with no UDF
+   *  native codegen expression over `Shingles.shingleHashes` (bit-identical;
+   *  NativeExprSpec), so it stays inside whole-stage codegen with no UDF
    *  encoder boundary. */
   def shingleCol(content: Column, n: Int): Column =
     graft.functions.NativeExprs.shingleHashes(content, n)
 
-  private val shingleUdf =
-    udf((content: String, n: Int) => Shingles.shingleHashes(content, n))
-
-  /** Per-document shingle sets: `(rkey, shingles: array<long>, n_shingles)`.
-   *  Documents with no shingles (< n tokens) are dropped here — they cannot
-   *  participate in Jaccard similarity. */
-  def shingleSets(corpus: DataFrame, cfg: DedupConfig): DataFrame =
-    corpus
-      .withColumn("shingles", shingleUdf(col("content"), lit(cfg.shingleN)))
-      .withColumn("n_shingles", size(col("shingles")))
-      .where(col("n_shingles") > 0)
-      .select("rkey", "shingles", "n_shingles")
-
-  /** [[shingleSets]] over the content-distinct representatives, computed as
-   *  project-then-dedup (see [[uniqProjected]]): identical result to
-   *  `shingleSets(dedupedByContent(corpusK))` with no content exchange.
-   *  The shingle projection is the NATIVE codegen expression (bit-identical
-   *  to the UDF — NativeExprSpec), so the hot per-row hash work stays inside
-   *  whole-stage codegen with no encoder boundary (guide §1.2 step 2). */
+  /** Per-document shingle sets `(rkey, shingles: array<long>, n_shingles)`
+   *  over the content-distinct representatives, computed as project-then-
+   *  dedup (see [[uniqProjected]]) — no content exchange. Documents with no
+   *  shingles (< n tokens) are dropped here — they cannot participate in
+   *  Jaccard similarity. The projection is [[shingleCol]], so the hot
+   *  per-row hash work stays inside whole-stage codegen. */
   def uniqShingleSets(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
     uniqProjected(corpusK, shingleCol(col("content"), cfg.shingleN))
       .select(col("rkey"), col("payload").as("shingles"))
       .withColumn("n_shingles", size(col("shingles")))
       .where(col("n_shingles") > 0)
 
-  /** MinHash signatures `(rkey, sig: array<long>[k])` — native codegen
-   *  expression (bit-identical to the retained UDF; NativeExprSpec). */
-  def signatures(shingles: DataFrame, cfg: DedupConfig): DataFrame =
-    shingles.select(
-      col("rkey"),
-      graft.functions.NativeExprs.minhash(col("shingles"), cfg.minhashK).as("sig"))
-
-  /** [[signatures]] keyed by the 64-bit node id (`id` column) instead of the
-   *  row-key string — the pipeline-internal form (see [[candidateIdPairs]]). */
+  /** MinHash signatures `(id, sig: array<long>[k])`, keyed by the 64-bit
+   *  node id — native codegen expression (bit-identical to
+   *  `Shingles.minhashSignature`; NativeExprSpec). */
   def signaturesById(shingles: DataFrame, cfg: DedupConfig): DataFrame =
     shingles.select(
       col("id"),
       graft.functions.NativeExprs.minhash(col("shingles"), cfg.minhashK).as("sig"))
 
   /**
-   * Exploded LSH buckets `(band_hash, id, rkey)` — one row per (doc, band).
-   * The band index is folded INTO the bucket hash (bandHashes seeds each
-   * band's chain with its index), and the doc is carried as a 64-bit
-   * `xxhash64(rkey)` id: a bucket row is 16 bytes on the wire instead of a
-   * 50+-byte (band, hash, key-string) triple — at 10⁹ docs × 64 bands that
-   * is the difference between a 1 TB and a 4 TB shuffle. Keys are joined
-   * back once, after pair dedup (an id collision can only *add* a candidate
-   * pair, which the exact-Jaccard verify then discards).
+   * Exploded LSH buckets `(id, band_hash)` — one row per (doc, band). The
+   * band index is folded INTO the bucket hash (bandHashes seeds each band's
+   * chain with its index), and the doc is its 64-bit node id: a bucket row
+   * is 16 bytes on the wire instead of a 50+-byte (band, hash, key-string)
+   * triple — at 10⁹ docs × 64 bands that is the difference between a 1 TB
+   * and a 4 TB shuffle.
    */
-  def banded(signatures: DataFrame, cfg: DedupConfig): DataFrame =
-    signatures.select(
-      xxhash64(col("rkey")).as("id"),
-      explode(graft.functions.NativeExprs.bandHashes(
-        col("sig"), cfg.bands, cfg.rowsPerBand)).as("band_hash"))
-
-  /** [[banded]] over [[signaturesById]] output — the id column passes through
-   *  instead of being derived from the key string. */
   def bandedById(signatures: DataFrame, cfg: DedupConfig): DataFrame =
     signatures.select(
       col("id"),
@@ -185,19 +156,11 @@ object NearDup {
       .where(col("count") > cfg.maxBucketSize)
 
   /**
-   * Candidate pairs `(a_key, b_key)` — distinct over all bands. Buckets of
-   * size 1 carry no pairs; buckets over the cap are dropped (see class doc).
-   * `keys` maps ids back to row keys (from the same signatures table).
-   */
-  /**
-   * Distinct candidate id pairs `(a_id, b_id)` — the pipeline-internal form.
-   * ONE exchange: co-locate each bucket (north_rule repartition), sort
-   * locally, scan runs of equal bucket hash. A groupBy-count prepass would
-   * hash-aggregate ~docs×bands nearly-all-distinct keys — no map-side
-   * combine benefit, giant spilling hash maps; the sorted run-scan replaces
-   * three full-width exchanges with this single one. The cap is enforced
-   * in-stream with bounded buffering (a mega-bucket buffers cap+1 ids,
-   * then drains without emitting).
+   * Distinct candidate id pairs `(a_id, b_id)`, `a_id < b_id`: the
+   * [[graft.functions.BucketScan.bucketPairs]] run-scan over the band
+   * buckets (ONE co-locating exchange, north_rule repartition; the cap is
+   * enforced in-stream with bounded buffering), then a distinct over all
+   * bands.
    *
    * The ids are `xxhash64(rkey)` — the SAME 64-bit node ids the cluster
    * stage keys its component graph by — so downstream verification and CC
@@ -217,17 +180,9 @@ object NearDup {
    *  by bands in two different ranges would otherwise survive per-range
    *  distincts and double up in the union). */
   def candidateIdPairsRaw(banded: DataFrame, cfg: DedupConfig,
-                          onDrop: Long => Unit = _ => ()): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    val cap = cfg.maxBucketSize
-    banded
-      .repartition(col("band_hash"))
-      .sortWithinPartitions("band_hash", "id")
-      .select(col("band_hash"), col("id")).as[(Long, Long)]
-      .mapPartitions(it => graft.functions.BucketScan.pairs(it, cap, onDrop))
-      .toDF("a_id", "b_id")
-  }
+                          onDrop: Long => Unit = _ => ()): DataFrame =
+    graft.functions.BucketScan.bucketPairs(banded, Seq("band_hash"), "id",
+      cfg.maxBucketSize, onDrop).toDF("a_id", "b_id")
 
   /**
    * [[candidateIdPairs]] behind the singleton prune, as the pipeline runs
@@ -324,20 +279,13 @@ object NearDup {
     (spark.read.parquet((0 until nRanges).map(rangePath): _*).distinct(), () => ())
   }
 
-  def candidatePairs(banded: DataFrame, keys: DataFrame, cfg: DedupConfig): DataFrame = {
-    val idPairs = candidateIdPairs(banded, cfg)
-    val ka = keys.select(xxhash64(col("rkey")).as("a_id"), col("rkey").as("ka"))
-    val kb = keys.select(xxhash64(col("rkey")).as("b_id"), col("rkey").as("kb"))
-    // id order ≠ key order: normalize the pair to key order after mapping
-    idPairs.join(ka, "a_id").join(kb, "b_id")
-      .select(least(col("ka"), col("kb")).as("a_key"),
-        greatest(col("ka"), col("kb")).as("b_key"))
-  }
-
   /**
    * Verified near-dup pairs: exact Jaccard over the shingle sets, keeping
    * pairs at or above `cfg.jaccardThreshold`. Output:
-   * `(a_key, b_key, n_intersect, n_union, jaccard)`.
+   * `(a_key, b_key, n_intersect, n_union, jaccard)`. The pair code is the
+   * pipeline's own id-space chain — [[signaturesById]] → [[bandedById]] →
+   * [[candidateIdPairs]] → [[verifyCandidatesById]] — with row keys joined
+   * back once at the end ([[withRowKeys]]).
    *
    * Persist scoping (round-2 leak fix): with `register = None` (the default,
    * ad-hoc/oracle use) the internal persists are SCOPED — the result is
@@ -350,70 +298,42 @@ object NearDup {
    */
   def verifiedPairs(corpusK: DataFrame, cfg: DedupConfig,
                     register: Option[DataFrame => Unit] = None): DataFrame = {
+    val scoped = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val reg = register.getOrElse((df: DataFrame) => { scoped += df; () })
     val sh = uniqShingleSets(corpusK, cfg)
-      // Reused on three sides (signature build + two verify joins): cache at
-      // test scale; at cluster scale this is the checkpointed shingles stage
-      // (see graft.Pipeline, which passes materialized stages instead).
+      .select(xxhash64(col("rkey")).as("id"), col("rkey"), col("shingles"), col("n_shingles"))
+      // Reused by the signature build, the verify joins and the key
+      // join-back: cache at test scale (the pipeline passes its
+      // checkpointed stages to the id-space operators instead).
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    register match {
-      case Some(reg) =>
-        reg(sh)
-        verifiedPairsFrom(sh, signatures(sh, cfg), cfg, register)
-      case None =>
-        try verifiedPairsFrom(sh, signatures(sh, cfg), cfg, register)
-        finally sh.unpersist(false) // result already eager (scoped verify)
-    }
+    reg(sh)
+    val byId = sh.select("id", "shingles", "n_shingles")
+    val cand = candidateIdPairs(bandedById(signaturesById(byId, cfg), cfg), cfg)
+    val out = withRowKeys(verifyCandidatesById(cand, byId, cfg, Some(reg)), sh.select("id", "rkey"))
+    if (register.isDefined) out
+    else try out.localCheckpoint() finally scoped.foreach(_.unpersist(false))
   }
 
-  /** [[verifiedPairs]] over pre-materialized shingle/signature stages
-   *  (the checkpointed-pipeline entry point). */
-  def verifiedPairsFrom(sh: DataFrame, sigs: DataFrame, cfg: DedupConfig,
-                        register: Option[DataFrame => Unit] = None): DataFrame =
-    verifyCandidates(candidatePairs(banded(sigs, cfg), sigs, cfg), sh, cfg, register)
-
-  /** Exact-Jaccard verification of a (possibly checkpointed) candidate-pair
-   *  table against the shingle sets. Persist scoping per [[verifiedPairs]]. */
-  def verifyCandidates(cand0: DataFrame, sh0: DataFrame, cfg: DedupConfig,
-                       register: Option[DataFrame => Unit] = None): DataFrame = {
-    // Consumed three times (key set + two join sides): persist so the
-    // candidate subtree executes once.
-    val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    register.foreach(_(cand))
-    def body: DataFrame = verifyBody(cand, sh0, cfg)
-    if (register.isDefined) body
-    else try body.localCheckpoint() finally cand.unpersist(false)
+  /**
+   * The one boundary from id pairs back to row keys: `aId`/`bId` (64-bit
+   * node ids) become `(a_key, b_key)` through `names: (id, rkey)`, smaller
+   * key first in binary collation (id order is not key order); every other
+   * column passes through. `names` is one row per content representative
+   * and broadcasts.
+   */
+  def withRowKeys(pairs: DataFrame, names: DataFrame,
+                  aId: String = "a_id", bId: String = "b_id"): DataFrame = {
+    val rest = pairs.columns.filterNot(c => c == aId || c == bId).map(col)
+    pairs
+      .join(broadcast(names.toDF("_a", "_ka")), col(aId) === col("_a"))
+      .join(broadcast(names.toDF("_b", "_kb")), col(bId) === col("_b"))
+      .select(Seq(least(col("_ka"), col("_kb")).as("a_key"),
+        greatest(col("_ka"), col("_kb")).as("b_key")) ++ rest: _*)
   }
 
-  private def verifyBody(cand: DataFrame, sh0: DataFrame, cfg: DedupConfig): DataFrame = {
-    // Only candidate MEMBERS' shingle sets are needed — semi-filter the
-    // (wide, array-carrying) shingle table down to the candidate key set
-    // before any join, so the verify exchanges carry |members| rows, not the
-    // whole corpus' shingles. The key set is bounded by 2·|candidates|
-    // (bucket-capped upstream) and broadcasts.
-    val keys = cand.select(col("a_key").as("rkey"))
-      .union(cand.select(col("b_key").as("rkey"))).distinct()
-    // Same broadcast-vs-shuffle gate as verifyCandidatesById.
-    val keysH = if (cand.count() <= cfg.verifyKeyBroadcastMaxPairs) broadcast(keys)
-    else keys.hint("SHUFFLE_HASH")
-    val sh = sh0.join(keysH, Seq("rkey"), "left_semi")
-    // SHUFFLE_HASH: sort-merge would SORT the wide shingle-array rows on a
-    // string key twice; hashing the (bounded, per-partition) build side is
-    // strictly cheaper here and stays skew-safe under AQE.
-    val shA = sh.hint("SHUFFLE_HASH")
-      .select(col("rkey").as("a_key"), col("shingles").as("sh_a"), col("n_shingles").as("n_a"))
-    val shB = sh.hint("SHUFFLE_HASH")
-      .select(col("rkey").as("b_key"), col("shingles").as("sh_b"), col("n_shingles").as("n_b"))
-    cand.join(shA, "a_key").join(shB, "b_key")
-      .withColumn("n_intersect", graft.functions.NativeExprs.longIntersect(col("sh_a"), col("sh_b")))
-      .withColumn("n_union", (col("n_a") + col("n_b") - col("n_intersect")).cast("long"))
-      .withColumn("jaccard", col("n_intersect").cast("double") / col("n_union"))
-      .where(col("jaccard") >= cfg.jaccardThreshold)
-      .select("a_key", "b_key", "n_intersect", "n_union", "jaccard")
-  }
-
-  /** [[verifyCandidates]] in id space: candidates are `(a_id, b_id)` from
-   *  [[candidateIdPairs]], shingle sets are keyed by `id` — same exact-Jaccard
-   *  math, no string key ever enters an exchange. Output
+  /** Exact-Jaccard verification in id space: candidates are `(a_id, b_id)`
+   *  from [[candidateIdPairs]], shingle sets are keyed by `id` — no string
+   *  key ever enters an exchange. Output
    *  `(a_id, b_id, n_intersect, n_union, jaccard)`. Persist scoping per
    *  [[verifiedPairs]]. */
   def verifyCandidatesById(cand0: DataFrame, sh0: DataFrame, cfg: DedupConfig,
@@ -428,13 +348,19 @@ object NearDup {
   private def verifyByIdBody(cand: DataFrame, sh0: DataFrame, cfg: DedupConfig): DataFrame = {
     val keys = cand.select(col("a_id").as("id"))
       .union(cand.select(col("b_id").as("id"))).distinct()
-    // Member-key semi-filter: broadcast while the candidate volume fits the
+    // Only candidate MEMBERS' shingle sets are needed — semi-filter the
+    // (wide, array-carrying) shingle table down to the candidate id set
+    // before any join, so the verify exchanges carry |members| rows, not the
+    // whole corpus' shingles. Broadcast while the candidate volume fits the
     // budget (the count is cheap — cand is persisted / a materialized stage);
     // past it the key set is itself shuffle-sized and a shuffle-hash semi is
     // the scale path.
     val keysH = if (cand.count() <= cfg.verifyKeyBroadcastMaxPairs) broadcast(keys)
     else keys.hint("SHUFFLE_HASH")
     val sh = sh0.join(keysH, Seq("id"), "left_semi")
+    // SHUFFLE_HASH: sort-merge would SORT the wide shingle-array rows twice;
+    // hashing the (bounded, per-partition) build side is strictly cheaper
+    // here and stays skew-safe under AQE.
     val shA = sh.hint("SHUFFLE_HASH")
       .select(col("id").as("a_id"), col("shingles").as("sh_a"), col("n_shingles").as("n_a"))
     val shB = sh.hint("SHUFFLE_HASH")

@@ -26,31 +26,66 @@ import graft.model.DedupConfig
  *    (mixed & sampleMask) == 0. O(n) per document with zero substring
  *    allocation — the 100 TB path (md5-per-offset costs ~50× more CPU).
  *
- * Pair generation mirrors the LSH stage: explode grams → bucket count
- * (map-side combinable) → drop buckets over the cap (hot grams = boilerplate;
- * reported, not silent) → self-join within buckets → count shared grams per
+ * Pair generation mirrors the LSH stage: explode grams → the shared
+ * run-scan operator (one exchange; runs over the cap are hot grams =
+ * boilerplate, dropped and reported, not silent) → count shared grams per
  * pair.
  */
 object Substring {
 
   private val HexChars = "0123456789abcdef".toCharArray
 
-  /** Distinct md5 hexes of all `w`-char windows whose digest ends in '0'.
+  /** Distinct md5 hexes of all `w`-char windows whose digest ends in '0'
+   *  (sorted) — the sampled-gram contract q09's oracle replays. */
+  def md5SampledGrams(content: String, w: Int): Array[String] = {
+    val out = new java.util.HashSet[String]()
+    foreachWindowMd5(content, w) { d => if ((d(15) & 0x0f) == 0) out.add(hex(d)) }
+    val arr = new Array[String](out.size)
+    out.toArray(arr)
+    java.util.Arrays.sort(arr, null)
+    arr
+  }
+
+  /** Minimum md5 hex over all `w`-char windows (q12's fingerprint), or null
+   *  when the content is shorter than `w`. Hex order is digest-byte order,
+   *  so only the winning digest is rendered. */
+  def md5MinGram(content: String, w: Int): String = {
+    var best: Array[Byte] = null
+    foreachWindowMd5(content, w) { d =>
+      if (best == null || java.util.Arrays.compareUnsigned(d, best) < 0) best = d.clone()
+    }
+    if (best == null) null else hex(best)
+  }
+
+  private def hex(d: Array[Byte]): String = {
+    val out = new Array[Char](32)
+    var b = 0
+    while (b < 16) {
+      out(2 * b) = HexChars((d(b) >> 4) & 0x0f)
+      out(2 * b + 1) = HexChars(d(b) & 0x0f)
+      b += 1
+    }
+    new String(out)
+  }
+
+  /** Calls `f` with the md5 digest of every `w`-char window, in order (the
+   *  array is reused between calls).
    *
    *  Hot path (round-6, guide §1.2 step 2 / round-5 verdict "What's wrong
    *  #2"): the naive form allocated a substring + byte encoding + 32-char
    *  hex string PER WINDOW (with a format-interpolator call per byte). Here
-   *  the content is UTF-8-encoded ONCE with a char→byte offset table, each
-   *  window digest reads a slice of that shared buffer, the 1/16 sampling
-   *  test runs on the RAW last digest byte (`d(15) & 0x0f`), and only the
-   *  ~1/16 surviving digests are hex-rendered. Byte-identical output: a
-   *  substring's UTF-8 encoding equals the corresponding slice of the full
-   *  encoding whenever no UTF-16 surrogate is present (guarded below —
-   *  content containing surrogates takes the per-window reference path,
-   *  where splitting a surrogate pair changes the encoding). */
-  def md5SampledGrams(content: String, w: Int): Array[String] = {
-    if (content == null || content.length < w) return Array.empty
+   *  the content is UTF-8-encoded ONCE with a char→byte offset table and
+   *  each window digest reads a slice of that shared buffer; callers test
+   *  the raw digest and hex-render only what they keep. Byte-identical
+   *  output: a substring's UTF-8 encoding equals the corresponding slice of
+   *  the full encoding whenever no UTF-16 surrogate is present — content
+   *  containing surrogates encodes per window instead, where splitting a
+   *  surrogate pair changes the encoding. */
+  private def foreachWindowMd5(content: String, w: Int)(f: Array[Byte] => Unit): Unit = {
+    if (content == null || content.length < w) return
     val n = content.length
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
     var hasSurrogate = false
     var ci = 0
     while (ci < n && !hasSurrogate) {
@@ -58,11 +93,19 @@ object Substring {
       if (c >= 0xD800 && c <= 0xDFFF) hasSurrogate = true
       ci += 1
     }
-    if (hasSurrogate) return md5SampledGramsRef(content, w)
+    var i = 0
+    if (hasSurrogate) {
+      while (i + w <= n) {
+        md.update(content.substring(i, i + w).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        md.digest(digest, 0, 16)
+        f(digest)
+        i += 1
+      }
+      return
+    }
     val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // off(i) = byte offset of char i in the full encoding (BMP-only content)
     val off = new Array[Int](n + 1)
-    var i = 0
     var o = 0
     while (i < n) {
       off(i) = o
@@ -71,34 +114,17 @@ object Substring {
       i += 1
     }
     off(n) = o
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val digest = new Array[Byte](16)
-    val out = new java.util.HashSet[String]()
     i = 0
     while (i + w <= n) {
       md.update(bytes, off(i), off(i + w) - off(i))
       md.digest(digest, 0, 16)
-      if ((digest(15) & 0x0f) == 0) {
-        val hex = new Array[Char](32)
-        var b = 0
-        while (b < 16) {
-          hex(2 * b) = HexChars((digest(b) >> 4) & 0x0f)
-          hex(2 * b + 1) = HexChars(digest(b) & 0x0f)
-          b += 1
-        }
-        out.add(new String(hex))
-      }
+      f(digest)
       i += 1
     }
-    val arr = new Array[String](out.size)
-    out.toArray(arr)
-    java.util.Arrays.sort(arr, null)
-    arr
   }
 
   /** Reference (per-window-encoding) form of [[md5SampledGrams]] — the exact
-   *  oracle contract, kept for surrogate-bearing content and for parity
-   *  testing of the fast path. */
+   *  oracle contract, kept for parity testing of the fast path. */
   private[graft] def md5SampledGramsRef(content: String, w: Int): Array[String] = {
     if (content == null || content.length < w) return Array.empty
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -141,21 +167,17 @@ object Substring {
   }
 
   private val md5GramsUdf = udf((c: String, w: Int) => md5SampledGrams(c, w))
-  private val rollingUdf = udf((c: String, w: Int, m: Long) => rollingFingerprints(c, w, m))
 
   /** Rolling-fingerprint projection as a column (public so the pipeline can
    *  fuse it with other per-row projections into ONE dedup pass). Backed by
-   *  the native codegen expression — same static function as [[rollingUdf]]
-   *  (bit-identical), no UDF encoder boundary. */
+   *  the native codegen expression over [[rollingFingerprints]]
+   *  (bit-identical; NativeExprSpec), no UDF encoder boundary. */
   def rollingCol(content: Column, w: Int, sampleMask: Long): Column =
     graft.functions.NativeExprs.rollingFingerprints(content, w, sampleMask)
 
-  /** `(rkey, gram)` — exploded sampled md5 grams (oracle-parity sampler). */
-  def sampledGramTable(corpus: DataFrame, w: Int): DataFrame =
-    corpus.select(col("rkey"), explode(md5GramsUdf(col("content"), lit(w))).as("gram"))
-
-  /** [[sampledGramTable]] over content-distinct representatives
-   *  (project-then-dedup: content never shuffles). */
+  /** `(rkey, gram)` — exploded sampled md5 grams (oracle-parity sampler)
+   *  over content-distinct representatives (project-then-dedup: content
+   *  never shuffles). */
   def sampledGramTableUniq(corpusK: DataFrame, w: Int): DataFrame =
     NearDup.uniqProjected(corpusK, md5GramsUdf(col("content"), lit(w)))
       .select(col("rkey"), explode(col("payload")).as("gram"))
@@ -163,10 +185,9 @@ object Substring {
   /** `(rkey, gram)` — exploded rolling-hash fingerprints (scale sampler). */
   def rollingGramTable(corpus: DataFrame, cfg: DedupConfig): DataFrame =
     corpus.select(col("rkey"),
-      explode(rollingUdf(col("content"), lit(cfg.gramWidth), lit(cfg.sampleMask))).as("gram"))
+      explode(rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask)).as("gram"))
 
-  /** [[rollingGramTable]] over content-distinct representatives — native
-   *  codegen projection (bit-identical to the UDF; NativeExprSpec). */
+  /** [[rollingGramTable]] over content-distinct representatives. */
   def rollingGramTableUniq(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
     NearDup.uniqProjected(corpusK,
       rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask))
@@ -185,48 +206,19 @@ object Substring {
    */
   def gramPairs(grams: DataFrame, minShared: Int, cap: Int,
                 onDrop: Long => Unit = _ => ()): DataFrame = {
-    val spark = grams.sparkSession
-    import spark.implicits._
-    // Same shape as the LSH candidate stage: ONE co-locating exchange on the
-    // gram, local sorted run-scan with in-stream cap (see
-    // NearDup.candidateIdPairs), then count shared grams per pair.
-    // The row key rides through the scan verbatim and the bucket is the RAW
-    // gram value, so a bucket run is exactly one gram. The key column is
-    // whichever input column isn't `gram`: STRING keys keep the oracle path
+    // Same run-scan operator as the LSH candidate stage (one co-locating
+    // exchange on the gram, in-stream cap), then count shared grams per
+    // pair. The bucket is the RAW gram value, so a bucket run is exactly one
+    // gram, and the row key rides through verbatim: the key column is
+    // whichever input column isn't `gram`. STRING keys keep the oracle path
     // free of any id indirection; LONG keys (the pipeline passes the 64-bit
     // cluster node ids) cut the exchange row from ~70 to 16 bytes — at 16
     // parallel cores the shuffle-write path is the measured scaling limiter.
     // Every emitted edge is byte-verified downstream either way
     // ([[verifiedSubstringPairs]]), so an id collision cannot create a false
     // edge beyond what the hash-node cluster graph already accepts.
-    import org.apache.spark.sql.types.LongType
-    val keyName = grams.columns.filter(_ != "gram").head
-    val keyed = (grams.schema("gram").dataType, grams.schema(keyName).dataType) match {
-      case (LongType, LongType) =>
-        grams.select(col("gram"), col(keyName))
-          .repartition(col("gram"))
-          .sortWithinPartitions("gram", keyName)
-          .as[(Long, Long)]
-          .mapPartitions(it => graft.functions.BucketScan.pairs(it, cap, onDrop))
-          .toDF("a_key", "b_key")
-      case (LongType, _) =>
-        grams.select(col("gram"), col(keyName))
-          .repartition(col("gram"))
-          .sortWithinPartitions("gram", keyName)
-          .as[(Long, String)]
-          .mapPartitions(it => graft.functions.BucketScan.pairsKeyed(it, cap, onDrop)(
-            graft.functions.BucketScan.utf8Ordering))
-          .toDF("a_key", "b_key")
-      case _ =>
-        grams.select(col("gram").cast("string"), col(keyName))
-          .repartition(col("gram"))
-          .sortWithinPartitions("gram", keyName)
-          .as[(String, String)]
-          .mapPartitions(it => graft.functions.BucketScan.pairsKeyed(it, cap, onDrop)(
-            graft.functions.BucketScan.utf8Ordering))
-          .toDF("a_key", "b_key")
-    }
-    keyed
+    val key = grams.columns.filter(_ != "gram").head
+    graft.functions.BucketScan.bucketPairs(grams, Seq("gram"), key, cap, onDrop)
       .groupBy("a_key", "b_key")
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)

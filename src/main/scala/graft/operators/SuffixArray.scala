@@ -61,8 +61,6 @@ object SuffixArray {
    */
   def windowClassPairs(docs: DataFrame, w: Int, cap: Int,
                        onDrop: Long => Unit = _ => ()): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // Round-0 seed width: the largest literal-prefix seed that still leaves
     // a genuine doubling round (c0 = w/4 doubles once to w/2, the combine
     // minimum). Round 0 is ONE string-keyed window where a doubling round
@@ -115,16 +113,10 @@ object SuffixArray {
       .select(col("cid"), col("cid2"), col("id"))
       .distinct() // many positions of one doc may share a window class
 
-    // Pair emission: the same one-exchange sorted run-scan + in-stream cap
-    // as the LSH/gram stages; class keys are (long, long) tuples compared
+    // Pair emission: the same run-scan operator (one exchange, in-stream
+    // cap) as the LSH/gram stages; the class key (cid, cid2) is compared
     // structurally — still no hashing in the decision path.
-    windows
-      .repartition(col("cid"), col("cid2"))
-      .sortWithinPartitions("cid", "cid2", "id")
-      .select(struct(col("cid"), col("cid2")).as("bucket"), col("id"))
-      .as[((Long, Long), Long)]
-      .mapPartitions(it => graft.functions.BucketScan.pairsKeyed(it, cap, onDrop))
-      .toDF("a_key", "b_key")
+    graft.functions.BucketScan.bucketPairs(windows, Seq("cid", "cid2"), "id", cap, onDrop)
       .distinct()
   }
 

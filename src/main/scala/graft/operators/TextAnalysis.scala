@@ -86,23 +86,7 @@ object TextAnalysis {
     scored.withColumn("predicted_lang", pred)
   }
 
-  private val minGramUdf = udf((c: String, w: Int) => {
-    if (c == null || c.length < w) null
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      var best: String = null
-      var i = 0
-      while (i + w <= c.length) {
-        val d = md.digest(c.substring(i, i + w).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val hex = new java.lang.StringBuilder(32)
-        d.foreach(b => hex.append(f"${b & 0xff}%02x"))
-        val h = hex.toString
-        if (best == null || h < best) best = h
-        i += 1
-      }
-      best
-    }
-  })
+  private val minGramUdf = udf((c: String, w: Int) => Substring.md5MinGram(c, w))
 
   /** Document fingerprint: the minimum md5 over all `w`-char windows — the
    *  1-fingerprint degenerate case of winnowing (Schleimer et al., MOSS);

@@ -142,6 +142,8 @@ object Textformat {
     header.union(hashLines).union(memberLines).union(blankLines)
   }
 
+  private val MetaReStr = """^#!\s*([a-z_]+):\s*(.*)$"""
+  private val isRfc2822 = udf((v: String) => scala.util.Try(parseRfc2822(v)).isSuccess)
   private val PathReStr = """^(keep|symlink|delete)\s+(.+?)(?:\s+->\s+(.+))?$"""
 
   /**
@@ -150,8 +152,9 @@ object Textformat {
    * line at a smaller line number (a running `last(..., ignoreNulls)` window
    * — the one inherently sequential dependency of the format). The
    * reference's rejections (textformat.rs:51-146, 423-500) fire as
-   * `raise_error`: unparseable line shapes, a path row before any checksum,
-   * and the `a -> b -> c` chained-source form. Same single-sequential-file
+   * `raise_error`: unparseable line shapes, a `generated_at` that is not
+   * RFC2822, a path row before any checksum, and the `a -> b -> c`
+   * chained-source form. Same single-sequential-file
    * contract as [[renderTable]].
    */
   def parseTable(lines: DataFrame): DataFrame = {
@@ -160,7 +163,11 @@ object Textformat {
     val classified = lines
       .withColumn("kind",
         when(trim(col("line")) === "", "blank")
-          .when(col("line").rlike("""^#!\s*[a-z_]+:"""), "meta")
+          .when(col("line").rlike("""^#!\s*[a-z_]+:"""),
+            when(regexp_extract(col("line"), MetaReStr, 1) === "generated_at" &&
+              !isRfc2822(regexp_extract(col("line"), MetaReStr, 2)),
+              raise_error(concat(lit("malformed generated_at: "), col("line"))))
+              .otherwise(lit("meta")))
           .when(col("line").startsWith("#"), "comment")
           .when(col("line").rlike("""^\[[0-9a-fA-F]+\]$"""), "hash")
           .when(op =!= "", "path")
@@ -182,7 +189,7 @@ object Textformat {
           .otherwise(regexp_extract(col("line"), PathReStr, 3)).as("symlink_source"))
   }
 
-  private val MetaRe = """^#!\s*([a-z_]+):\s*(.*)$""".r
+  private val MetaRe = MetaReStr.r
   private val HashRe = """^\[([0-9a-fA-F]+)\]$""".r
   private val PathRe = """^(keep|symlink|delete)\s+(.+?)(?:\s+->\s+(.+))?$""".r
 

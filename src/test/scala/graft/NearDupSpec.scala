@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.functions.Shingles
+import graft.functions.{Shingles, XXHash64}
 import graft.model.DedupConfig
 import graft.operators.{ExactDedup, NearDup}
 
@@ -74,14 +74,19 @@ class NearDupSpec extends AnyFunSuite {
     val tight = cfg.copy(maxBucketSize = 2)
     // deliberately run WITHOUT content dedup so identical docs form hot buckets
     val df = ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey)
-    val sigs = NearDup.signatures(NearDup.shingleSets(df, tight), tight)
-    val banded = NearDup.banded(sigs, tight)
+      .select(xxhash64(col("rkey")).as("id"),
+        NearDup.shingleCol(col("content"), tight.shingleN).as("shingles"))
+      .withColumn("n_shingles", size(col("shingles")))
+      .where(col("n_shingles") > 0)
+    val sigs = NearDup.signaturesById(df, tight)
+    val banded = NearDup.bandedById(sigs, tight)
     val dropped = NearDup.droppedBuckets(banded, tight)
     // the license-header group (400/23 ≈ 17 identical docs) must trip the cap
     assert(dropped.count() > 0)
-    val pairs = NearDup.candidatePairs(banded, sigs, tight).collect()
-    val lic = local.filter(_.path.startsWith("lic/")).map(f => s"${f.repo}/${f.path}").toSet
-    assert(!pairs.exists(r => lic.contains(r.getString(0)) && lic.contains(r.getString(1))),
+    val pairs = NearDup.candidateIdPairs(banded, tight).collect()
+    val lic = local.filter(_.path.startsWith("lic/"))
+      .map(f => XXHash64.hashString(s"${f.repo}/${f.path}", 42L)).toSet
+    assert(!pairs.exists(r => lic.contains(r.getLong(0)) && lic.contains(r.getLong(1))),
       "capped bucket members must not form candidate pairs")
   }
 
@@ -110,9 +115,9 @@ class NearDupSpec extends AnyFunSuite {
     val pairs = BucketScan.pairs(rows.iterator, cap = 3, n => drops += n).toList
     assert(pairs === List((10L, 11L)))
     assert(drops.sorted.toList === List(4L, 5L))
-    // keyed variant, same semantics
+    // the same kernel on String keys
     val dropsK = scala.collection.mutable.ArrayBuffer[Long]()
-    val pairsK = BucketScan.pairsKeyed[Long, String](
+    val pairsK = BucketScan.pairs(
       rows.iterator.map { case (b, k) => (b, s"k$k") }, cap = 3, n => dropsK += n).toList
     assert(pairsK === List(("k10", "k11")))
     assert(dropsK.sorted.toList === List(4L, 5L))

@@ -32,9 +32,34 @@ class SubstringSpec extends AnyFunSuite {
       ("emoji 😀 mixed content here padding " * 8),
       // lone surrogate at a window edge
       ("z" * 47) + "\ud800" + ("w" * 47))
+    // per-window reference for the min-gram fingerprint (q12): every window
+    // encoded on its own, digest rendered with a format call per byte
+    def minGramRef(c: String): String =
+      if (c == null || c.length < 48) null
+      else (0 to c.length - 48).map { i =>
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(c.substring(i, i + 48).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .map(b => f"${b & 0xff}%02x").mkString
+      }.min
     samples.foreach { c =>
       assert(Substring.md5SampledGrams(c, 48).toSeq ===
         Substring.md5SampledGramsRef(c, 48).toSeq, s"mismatch for ${String.valueOf(c).take(40)}")
+      assert(Substring.md5MinGram(c, 48) === minGramRef(c),
+        s"min-gram mismatch for ${String.valueOf(c).take(40)}")
+    }
+  }
+
+  test("gramPairs emits a_key < b_key in UTF-8 binary order on supplementary-plane keys") {
+    import spark.implicits._
+    // U+1F600 (surrogate pair, UTF-8 F0..) sorts AFTER U+E000..U+FFFF (EE..EF)
+    // in binary collation but BEFORE them in UTF-16 code-unit order
+    val keys = Seq("\ud83d\ude00a", "\ue000b", "\uffefc", "\ud83d\ude01", "\uf8ffd", "plain")
+    val grams = for (k <- keys; g <- 1L to 2L) yield (g, k)
+    val pairs = Substring.gramPairs(grams.toDF("gram", "rkey"), minShared = 2, cap = 100)
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(pairs.length === keys.size * (keys.size - 1) / 2)
+    pairs.foreach { case (a, b) =>
+      assert(graft.functions.BucketScan.utf8Ordering.lt(a, b), s"($a, $b) not in UTF-8 binary order")
     }
   }
 

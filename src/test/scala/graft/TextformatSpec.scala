@@ -111,6 +111,7 @@ class TextformatSpec extends AnyFunSuite {
     intercept[Exception] { run(Seq("keep orphan.txt")) }              // path before any hash
     intercept[Exception] { run(Seq("[aa]", "symlink a -> b -> c")) }  // chained source
     intercept[Exception] { run(Seq("???")) }                          // unparseable shape
+    intercept[Exception] { run(Seq("#! generated_at: not-a-date")) }  // malformed timestamp
     // well-formed control: no throw, one row
     assert(run(Seq("# c", "", "[ff]", "keep p")).length === 1)
   }
