@@ -103,10 +103,13 @@ object SparkEntry {
 
     // J4 — connected components over intra-group chain edges; must rediscover
     // exactly the sha256 groups (worst-case path graphs for large/small-star).
+    // The keeper mapping is empty, so the chain edges alone carry the groups.
     "q05_cluster_exact" -> ((s, dir) => {
       val h = hashed(s, dir)
       val members = h.select("rkey", "repo", "path", "commit")
-      Clustering.clusterTable(members, exactChainEdges(h)).select("rkey", "rep_key")
+      val noKeepers = members.select(col("rkey"), col("rkey").as("rep0")).where(lit(false))
+      Clustering.clusterTableCollapsed(members, noKeepers, exactChainEdges(h))
+        .select("rkey", "rep_key")
     }),
 
     // J3 + §2.8 — MinHash/LSH candidates verified by exact Jaccard; matches
@@ -114,14 +117,18 @@ object SparkEntry {
     // Content dedup happens inside (project-then-dedup, no content shuffle).
     "q06_near_pairs" -> ((s, dir) => nearPairs(s, dir)),
 
-    // North-star cluster table: CC over exact-chain + verified-near edges,
-    // canonical representative per cluster (singletons represent themselves).
+    // North-star cluster table, built as Pipeline.run builds it: exact groups
+    // collapse to their snapshot keeper and CC runs over the near pairs, whose
+    // endpoints are content representatives (min rkey per sha256 = keepers).
     "q07_clusters_all" -> ((s, dir) => {
       val h = hashed(s, dir)
+      // Materialized like the pipeline's snapshot stage: the gate count and
+      // three broadcast sides would each re-run the snapshot's window exchange.
+      val baseRep = ExactDedup.snapshot(h).select(col("rkey"),
+        coalesce(col("symlink_source"), col("rkey")).as("rep0")).localCheckpoint()
       val near = nearPairs(s, dir).select("a_key", "b_key")
       val members = h.select("rkey", "repo", "path", "commit")
-      Clustering.clusterTable(members, exactChainEdges(h).union(near))
-        .select("rkey", "rep_key")
+      Clustering.clusterTableCollapsed(members, baseRep, near).select("rkey", "rep_key")
     }),
 
     // SimHash sketch (md5 token bits — ANSI-replayable) + Hamming-≤3

@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
  *   - the join back on the node id is skew-handled by AQE
  *     (`spark.sql.adaptive.skewJoin`).
  *
- * Lineage is cut every round with `localCheckpoint` (or reliable
- * `checkpoint` when a checkpoint dir is set — resumability per north_rule);
- * without it the iterative plan grows exponentially in the optimizer.
+ * Star rounds cut lineage every round with a checkpoint — reliable
+ * `checkpoint` whenever a checkpoint dir is set (RunContext always sets one;
+ * resumability per north_rule), `localCheckpoint` otherwise; without it the
+ * iterative plan grows exponentially in the optimizer. Graphs small enough
+ * for the driver finish write no checkpoint at all.
  *
  * Node ids are 64-bit (`xxhash64` of the row key) so the shuffle carries
  * 16 bytes/edge; keys are joined back once at the end. A collision merges two
@@ -70,13 +72,11 @@ object Clustering {
    *  coordinated latency that a higher core count cannot shrink. */
   val DefaultLocalFinishEdges: Long = 4000000L
 
-  /** Driver-side union-find over a collected edge list (min-id root wins —
-   *  identical labeling to the converged star rounds). The input edge set is
-   *  distinct + self-loop-free and BOUNDED by [[DefaultLocalFinishEdges]];
-   *  at 10⁹-row corpus scale the rep-level contracted graph can exceed the
-   *  bound, in which case the distributed star rounds below run instead. */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  /** Driver-side union-find over a collected, distinct, self-loop-free edge
+   *  list (min-id root wins — identical labeling to the converged star
+   *  rounds). Returns the component table and its node count. */
+  private def localComponents(spark: SparkSession,
+                              collected: Array[(Long, Long)]): (DataFrame, Long) = {
     import spark.implicits._
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
@@ -89,7 +89,6 @@ object Clustering {
       x
     }
     val nodes = new java.util.HashSet[Long]()
-    val collected = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
     collected.foreach {
       case (a, b) =>
         nodes.add(a); nodes.add(b)
@@ -103,10 +102,10 @@ object Clustering {
     // every row on the DRIVER at execution (LocalTableScan) — measured as a
     // scale-flat multi-second serial segment at millions of nodes;
     // parallelize ships raw tuples and encodes IN TASKS, in parallel.
-    spark.createDataset(
+    (spark.createDataset(
       spark.sparkContext.parallelize(out.toIndexedSeq,
         math.max(spark.sparkContext.defaultParallelism, 8)))
-      .toDF("node", "component")
+      .toDF("node", "component"), out.length.toLong)
   }
 
   /**
@@ -117,53 +116,58 @@ object Clustering {
    * Hybrid two-level design: the input here is already the *contracted*
    * similarity graph (exact groups collapsed to representatives upstream);
    * when the distinct edge set fits under `localFinishEdges` the driver
-   * finishes it with union-find in one collect — star rounds only run on
-   * graphs too large for that, where their per-round shuffle cost is
+   * finishes it with union-find in one bounded collect — star rounds only
+   * run on graphs too large for that, where their per-round shuffle cost is
    * amortized by real data volume.
    */
-  def connectedComponents(edges: DataFrame, maxIterations: Int = 50,
-                          forceReliable: Boolean = false,
-                          localFinishEdges: Long = DefaultLocalFinishEdges): DataFrame = {
+  def connectedComponents(edges: DataFrame,
+                          localFinishEdges: Long = DefaultLocalFinishEdges): DataFrame =
+    components(edges, localFinishEdges)._1
+
+  /** [[connectedComponents]] plus the table's node count when the driver
+   *  finished the graph (`None` after star rounds). */
+  private def components(edges: DataFrame, localFinishEdges: Long): (DataFrame, Option[Long]) = {
     val spark = edges.sparkSession
-    // Reliable (FS-backed) checkpoints auto-engage whenever a checkpoint dir
-    // is configured — RunContext always sets one, so pipeline runs get them
-    // by default. localCheckpoint stores blocks on EXECUTORS with truncated
-    // lineage: on a real cluster an executor loss mid-iteration would fail
-    // the job unrecoverably, which is exactly what north_rule's resumability
-    // clause exists to prevent. Sessions without a checkpoint dir (ad-hoc
-    // notebook use) keep the cheap local variant.
-    val reliable = forceReliable || spark.sparkContext.getCheckpointDir.isDefined
+    import spark.implicits._
     val cur0 = edges
       .select(col(edges.columns(0)).cast("long").as("src"), col(edges.columns(1)).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst"))
       .distinct()
+    // One bounded collect decides the path: at most `localFinishEdges + 1`
+    // distinct edges reach the driver, and only an overflow pays for a
+    // checkpoint and star rounds — the driver finish writes and counts nothing.
+    val head = cur0.limit((localFinishEdges min Int.MaxValue - 1).toInt + 1).as[(Long, Long)].collect()
+    if (head.length <= localFinishEdges) {
+      val (cc, nNodes) = localComponents(spark, head)
+      return (cc, Some(nNodes))
+    }
+    // Reliable (FS-backed) checkpoints whenever a checkpoint dir is set, as
+    // RunContext always does: localCheckpoint keeps blocks on EXECUTORS with
+    // truncated lineage, so an executor loss mid-iteration would fail the job
+    // unrecoverably (north_rule's resumability clause).
+    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     // EAGER checkpoint of the initial edge set: the star rounds reference
     // their input twice (join + aggregation side), and an unmaterialized
     // input subtree — potentially a whole upstream candidate pipeline —
     // would execute once per reference, inside every round-1 stage.
     var cur = if (reliable) cur0.checkpoint() else cur0.localCheckpoint(true)
-    val nEdges = cur.count()
-    if (nEdges <= localFinishEdges) return localComponents(cur)
     var converged = false
     var it = 0
     var prevSig: (Long, Long) = (-1L, -1L)
-    while (!converged && it < maxIterations) {
+    while (!converged) {
       val next0 = smallStar(largeStar(cur))
-      // LAZY local checkpoint: the convergence-signature aggregation below is
-      // the action that materializes it — one job per round, not two. The
-      // round-level resumability checkpoint is the *stage* parquet around the
-      // whole CC call (RunContext); reliable per-round checkpoints are opt-in
-      // (they cost a distributed-FS write+read per round).
+      // Reliable under the same checkpoint-dir rule as the initial edge set:
+      // an eager checkpoint, a distributed-FS write+read per round. The local
+      // variant is LAZY — the convergence-signature aggregation below is the
+      // action that materializes it, one job per round, not two.
       val next = if (reliable) next0.checkpoint() else next0.localCheckpoint(false)
       // Convergence: the (count, xor-of-edge-hash) signature is a fixpoint.
       // bit_xor (not sum) — overflow-free under ANSI mode, order-insensitive.
       val sig = next.agg(
         count(lit(1)).as("c"),
         coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("h"))
-        .as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
-        .head()
+        .as[(Long, Long)].head()
       converged = sig == prevSig
       prevSig = sig
       cur = next
@@ -172,32 +176,11 @@ object Clustering {
     System.err.println(s"[graft.cc] converged after $it iterations")
     // After convergence every edge points member→root (a star). Roots map to
     // themselves; include them explicitly.
-    cur.select(col("src").as("node"), col("dst").as("component"))
+    (cur.select(col("src").as("node"), col("dst").as("component"))
       .union(cur.select(col("dst").as("node"), col("dst").as("component")))
-      .groupBy("node").agg(min(col("component")).as("component"))
+      .groupBy("node").agg(min(col("component")).as("component")), None)
   }
 
-  /**
-   * Assemble the final cluster table (north_star): every corpus row with its
-   * cluster id and the canonical representative — the lexicographically
-   * smallest member key, generalizing the reference's keeper rule
-   * (snapshot/mod.rs:84-91). Rows in no pair are singleton clusters
-   * represented by themselves.
-   *
-   * @param members `(rkey, repo, path, commit)` for every corpus row
-   * @param pairs   verified duplicate pairs `(a_key, b_key)`
-   */
-  /**
-   * [[clusterTable]] with exact-duplicate groups pre-collapsed: `baseRep`
-   * maps members of exact groups to their keeper (`(rkey, rep0)`; rows
-   * absent map to themselves), and `repPairs` are similarity edges BETWEEN
-   * representatives. CC then runs on the representative-level graph only —
-   * the exact-group star edges (the bulk of the edge volume on a duplicate-
-   * heavy corpus) never enter the iteration; members pick up their
-   * component through the keeper mapping afterwards. Identical cluster
-   * partition and rep_key as the star-edge formulation; only the opaque
-   * cluster_id labels differ.
-   */
   /** Row bound for the singleton-bypass broadcast gate. The component table
    *  is 16-byte long pairs (64 MB at the default bound); the STRING-keyed
    *  sides (keeper mapping, keeper set) get a QUARTER of the row budget
@@ -207,20 +190,39 @@ object Clustering {
    *  output. */
   val DefaultClusterBroadcastMaxRows: Long = 4000000L
 
+  /**
+   * Assemble the final cluster table (north_star): every corpus row with its
+   * cluster id and the canonical representative — the lexicographically
+   * smallest member key, generalizing the reference's keeper rule
+   * (snapshot/mod.rs:84-91). Rows in no pair and no exact group are
+   * singleton clusters represented by themselves.
+   *
+   * Exact-duplicate groups arrive pre-collapsed: `baseRep` maps members of
+   * exact groups to their keeper (`(rkey, rep0)`; rows absent map to
+   * themselves), and `repPairs` are similarity edges BETWEEN
+   * representatives. CC then runs on the representative-level graph only —
+   * the exact-group star edges (the bulk of the edge volume on a duplicate-
+   * heavy corpus) never enter the iteration; members pick up their
+   * component through the keeper mapping afterwards.
+   *
+   * Precondition: every `repPairs` endpoint is a keeper or a row with no
+   * non-trivial mapping row. Rows look up their component by their keeper's
+   * id, so an edge at a mapped non-keeper member would be silently lost.
+   *
+   * @param members  `(rkey, repo, path, commit)` for every corpus row
+   * @param baseRep  keeper mapping `(rkey, rep0)`; trivial rows may be present
+   * @param repPairs similarity pairs between representatives, as row-key
+   *                 strings or as 64-bit node ids (`xxhash64(rkey)`)
+   */
   def clusterTableCollapsed(members: DataFrame, baseRep: DataFrame,
                             repPairs: DataFrame,
                             broadcastMaxRows: Long = DefaultClusterBroadcastMaxRows): DataFrame = {
     // Pair columns may arrive as row-key strings (hashed to node ids here)
     // or already as 64-bit node ids (the pipeline's narrow interior form —
     // xxhash64(rkey) by construction, so both spellings label identically).
-    val edges = repPairs.schema(repPairs.columns(0)).dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        repPairs.select(col(repPairs.columns(0)).as("src"),
-          col(repPairs.columns(1)).as("dst"))
-      case _ => repPairs.select(
-        xxhash64(col(repPairs.columns(0))).as("src"),
-        xxhash64(col(repPairs.columns(1))).as("dst"))
-    }
+    val Array(src, dst) = repPairs.columns.take(2).map(c =>
+      if (repPairs.schema(c).dataType == org.apache.spark.sql.types.LongType) col(c) else xxhash64(col(c)))
+    val edges = repPairs.select(src.as("src"), dst.as("dst"))
     // Multi-member components arise from exactly two sources: exact-dup
     // groups (a NON-TRIVIAL keeper mapping row, or BEING a keeper) and
     // similarity pairs (a cc row). Every other row is a singleton cluster —
@@ -230,76 +232,51 @@ object Clustering {
     // left_outer + coalesce below reconstructs them exactly).
     val baseRepNT = baseRep.where(col("rep0") =!= col("rkey"))
     val nMap = baseRepNT.count()
-    // cc rows = distinct pair nodes ≤ 2 × pair rows: gate on the CHEAP
-    // count (pairs are materialized stages) instead of counting cc itself,
-    // which on the star-round path would re-execute its final aggregation
-    // only to learn it is too big.
-    val nCcUpper = 2L * repPairs.count()
-    val cc = connectedComponents(edges)
-    if (nMap <= broadcastMaxRows / 4 && nCcUpper <= broadcastMaxRows) {
-      // Singleton-bypass formulation: all three lookup sides broadcast, so
-      // `labeled` stays IN THE SCAN STAGE (zero exchange); only the bounded
-      // "involved" subset (exact-group members + keepers + pair nodes) pays
-      // the rep aggregation and join-back, and singleton rows flow scan →
-      // output untouched. Identical rows to the dense path (spec-asserted).
-      val keepers = baseRepNT.select(col("rep0").as("rkey")).distinct()
-        .withColumn("is_keeper", lit(true))
-      val labeled = members
-        .join(broadcast(baseRepNT), Seq("rkey"), "left_outer")
-        .join(broadcast(keepers), Seq("rkey"), "left_outer")
-        .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
-        .withColumn("node", xxhash64(col("rep0")))
-        .join(broadcast(cc), Seq("node"), "left_outer")
-      // rep0/rkey are never null and the isNotNull tests are two-valued, so
-      // `inv` is a real boolean — `!inv` below cannot swallow rows.
-      val inv = col("component").isNotNull ||
-        col("rep0") =!= col("rkey") || col("is_keeper").isNotNull
-      val involved = labeled.where(inv)
-        .withColumn("component", coalesce(col("component"), col("node")))
-      val reps = involved.groupBy("component").agg(min(col("rkey")).as("rep_key"))
-      val multi = involved.join(reps, "component")
-        .withColumn("action",
-          when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
-        .select(col("rkey"), col("repo"), col("path"), col("commit"),
-          col("component").as("cluster_id"), col("rep_key"), col("action"))
-      val singles = labeled.where(!inv)
-        .select(col("rkey"), col("repo"), col("path"), col("commit"),
-          col("node").as("cluster_id"), col("rkey").as("rep_key"),
-          lit("keep").as("action"))
-      multi.union(singles)
-    } else {
-      // Dense formulation (the at-scale fallback): mapping or component
-      // table past the broadcast budget — shuffle joins over the full
-      // member table, AQE handling skew.
-      val labeled = members
-        .join(baseRepNT, Seq("rkey"), "left_outer")
-        .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
-        .withColumn("node", xxhash64(col("rep0")))
-        .join(cc, Seq("node"), "left_outer")
-        .withColumn("component", coalesce(col("component"), col("node")))
-      val reps = labeled.groupBy("component").agg(min(col("rkey")).as("rep_key"))
-      labeled.join(reps, "component")
-        .withColumn("action", when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
-        .select(col("rkey"), col("repo"), col("path"), col("commit"),
-          col("component").as("cluster_id"), col("rep_key"), col("action"))
-    }
-  }
-
-  def clusterTable(members: DataFrame, pairs: DataFrame): DataFrame = {
-    val m = members.withColumn("node", xxhash64(col("rkey")))
-    val edges = pairs.select(
-      xxhash64(col(pairs.columns(0))).as("src"),
-      xxhash64(col(pairs.columns(1))).as("dst"))
-    val cc = connectedComponents(edges)
-    val labeled = m.join(cc, Seq("node"), "left_outer")
-      .withColumn("component", coalesce(col("component"), col("node")))
-    // Representative = min rkey per component; broadcast-sized only per-group,
-    // so use an aggregation + join on the component id (AQE handles the skew
-    // of giant clusters).
-    val reps = labeled.groupBy("component").agg(min(col("rkey")).as("rep_key"))
-    labeled.join(reps, "component")
-      .withColumn("action", when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
+    // The gate reads the node count the driver finish holds. Star rounds
+    // (past `DefaultLocalFinishEdges` distinct edges) always take the dense
+    // formulation: counting their output would re-run its final aggregation.
+    val (cc, nCc) = components(edges, DefaultLocalFinishEdges)
+    val (grouped, singles) =
+      if (nMap <= broadcastMaxRows / 4 && nCc.exists(_ <= broadcastMaxRows)) {
+        // Singleton-bypass formulation: all three lookup sides broadcast, so
+        // `labeled` stays IN THE SCAN STAGE (zero exchange); only the bounded
+        // "involved" subset (exact-group members + keepers + pair nodes) pays
+        // the rep aggregation and join-back, and singleton rows flow scan →
+        // output untouched. Identical rows to the dense path (spec-asserted).
+        val keepers = baseRepNT.select(col("rep0").as("rkey")).distinct()
+          .withColumn("is_keeper", lit(true))
+        val labeled = members
+          .join(broadcast(baseRepNT), Seq("rkey"), "left_outer")
+          .join(broadcast(keepers), Seq("rkey"), "left_outer")
+          .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
+          .withColumn("node", xxhash64(col("rep0")))
+          .join(broadcast(cc), Seq("node"), "left_outer")
+        // rep0/rkey are never null and the isNotNull tests are two-valued, so
+        // `inv` is a real boolean — `!inv` below cannot swallow rows.
+        val inv = col("component").isNotNull ||
+          col("rep0") =!= col("rkey") || col("is_keeper").isNotNull
+        (labeled.where(inv).withColumn("component", coalesce(col("component"), col("node"))),
+          Some(labeled.where(!inv)
+            .select(col("rkey"), col("repo"), col("path"), col("commit"),
+              col("node").as("cluster_id"), col("rkey").as("rep_key"),
+              lit("keep").as("action"))))
+      } else {
+        // Dense formulation (the at-scale fallback): mapping or component
+        // table past the broadcast budget — shuffle joins over the full
+        // member table, AQE handling skew.
+        (members
+          .join(baseRepNT, Seq("rkey"), "left_outer")
+          .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
+          .withColumn("node", xxhash64(col("rep0")))
+          .join(cc, Seq("node"), "left_outer")
+          .withColumn("component", coalesce(col("component"), col("node"))), None)
+      }
+    val reps = grouped.groupBy("component").agg(min(col("rkey")).as("rep_key"))
+    val multi = grouped.join(reps, "component")
+      .withColumn("action",
+        when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
       .select(col("rkey"), col("repo"), col("path"), col("commit"),
         col("component").as("cluster_id"), col("rep_key"), col("action"))
+    singles.fold(multi)(multi.union)
   }
 }

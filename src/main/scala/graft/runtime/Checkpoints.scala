@@ -48,6 +48,9 @@ class RunContext(val spark: SparkSession, val runDir: String, val runId: String)
    * `persist = false` (light stages only) skips the cache too: for a plain
    * projection of an already-persisted stage, a second cache copy would only
    * burn fill bandwidth.
+   *
+   * A materialized stage records one driver-side metrics row,
+   * `<name>.resumed`: `rows` = 1 when restored, 0 when computed.
    */
   def stage(name: String, materialize: Boolean = true, persist: Boolean = true)
            (compute: => DataFrame): DataFrame = {
@@ -59,7 +62,9 @@ class RunContext(val spark: SparkSession, val runDir: String, val runId: String)
       lightStages.synchronized { lightStages += df } // stages may run concurrently
       return df
     }
-    if (!completed(name)) {
+    val resumed = completed(name)
+    metrics.record(s"$name.resumed", if (resumed) 1L else 0L)
+    if (!resumed) {
       val t0 = System.nanoTime()
       // thread-local: concurrent branch stages keep their own labels
       spark.sparkContext.setJobDescription(s"graft:$name")

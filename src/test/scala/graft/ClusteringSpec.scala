@@ -54,12 +54,16 @@ class ClusteringSpec extends AnyFunSuite {
     val edges = (1 to 500).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
       .filter(e => e._1 != e._2)
     val df = edges.toDF("src", "dst")
-    val local = Clustering.connectedComponents(df)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    // localFinishEdges = 0 forces the large/small-star iteration
-    val dist = Clustering.connectedComponents(df, localFinishEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(local === dist)
+    def labels(localFinishEdges: Long) =
+      Clustering.connectedComponents(df, localFinishEdges = localFinishEdges)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val local = labels(Clustering.DefaultLocalFinishEdges)
+    // The bound is inclusive: exactly the distinct edge count still finishes
+    // on the driver, one below it runs the large/small-star iteration, and so
+    // does 0.
+    val nDistinct = edges.map { case (a, b) => (a max b, a min b) }.distinct.size.toLong
+    for (bound <- Seq(nDistinct, nDistinct - 1L, 0L))
+      assert(labels(bound) === local, s"localFinishEdges = $bound")
   }
 
   test("singleton-bypass and dense clusterTableCollapsed emit identical rows") {

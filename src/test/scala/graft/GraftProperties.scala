@@ -17,13 +17,15 @@ object GraftProperties extends Properties("graft") {
 
   // ---- BucketScan ---------------------------------------------------------
 
+  // Rows sorted by (bucket, key), as `pairs` requires: two generated buckets
+  // may share a bucket value, so the sort runs over the merged rows.
   private val bucketedGen: Gen[List[(Long, Long)]] = for {
     nBuckets <- Gen.choose(0, 8)
     buckets <- Gen.listOfN(nBuckets, for {
       b <- Gen.choose(0L, 5L)
       ids <- Gen.listOf(Gen.choose(0L, 100L))
     } yield (b, ids))
-  } yield buckets.sortBy(_._1).flatMap { case (b, ids) => ids.sorted.map((b, _)) }
+  } yield buckets.flatMap { case (b, ids) => ids.map((b, _)) }.sorted
 
   property("bucketScan emits exactly the unordered pairs of sub-cap runs") =
     forAll(bucketedGen, Gen.choose(1, 6)) { (rows, cap) =>

@@ -78,6 +78,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(!ctx2.completed("clusters") && ctx2.completed("near_pairs"))
     val r2 = Pipeline.run(ctx2, corpus)
     assert(r2.clusters.collect().map(_.toString).sorted.toSeq === want.toSeq)
+    val resumed = r2.metrics.collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
+    assert(resumed("near_pairs.resumed") === 1L)
+    assert(resumed("clusters.resumed") === 0L)
   }
 
   test("per-partition lineage metrics are emitted for every computed stage") {
