@@ -259,9 +259,9 @@ object SparkEntry {
     // applied state with skip_deduped — fully-deduped and fully-deleted
     // groups vanish; only untouched (invalid-group) duplicates resurface.
     // Intermediates are localCheckpointed (round 6): `st` is referenced
-    // three times by validateState plus once by appliedState, `v` twice by
-    // appliedState's bad-group flagging — lazily these multiplied the
-    // snapshot/donor subtree into ~126 jobs (guide §2.4/§5).
+    // three times by validateState plus once by appliedState — lazily this
+    // multiplied the snapshot/donor subtree into ~126 jobs (guide §2.4/§5).
+    // `v` is read once, by appliedState's pending-row window.
     "q21_snapshot_round2" -> ((s, dir) => {
       val h = hashed(s, dir)
       val st = Snapshots.plantedState(h).localCheckpoint()

@@ -140,41 +140,18 @@ object Shingles extends Serializable {
     c.toDouble / (a.length + b.length - c)
   }
 
-  /** 64-bit SimHash over token unigram hashes (Charikar '02): bit i of the
-   *  result is the sign of the sum over tokens of ±1 at bit i of the token's
-   *  hash. Near-dup docs differ in few bits (Hamming distance). */
-  def simhash64(content: String): Long = {
-    val toks = tokenize(content)
-    if (toks.isEmpty) return 0L
-    val acc = new Array[Int](64)
-    var t = 0
-    while (t < toks.length) {
-      val h = XXHash64.hashString(toks(t), 42L)
-      var bit = 0
-      while (bit < 64) {
-        if (((h >>> bit) & 1L) == 1L) acc(bit) += 1 else acc(bit) -= 1
-        bit += 1
-      }
-      t += 1
-    }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) {
-      if (acc(bit) > 0) out |= (1L << bit)
-      bit += 1
-    }
-    out
-  }
-
   /**
-   * SimHash variant whose per-token bits come from the first 64 bits of
-   * md5(token) in big-endian bit order — i.e. bit j (j = 0..63) is bit
-   * `7 - j%8` of digest byte `j/8`, which equals bit `3 - j%4` of hex digit
-   * `j/4` of the standard lowercase hex rendering. md5 exists in every ANSI
+   * 64-bit SimHash over tokens (Charikar '02): bit j of the result is the
+   * sign of the sum over tokens of ±1 at bit j of the token's bits, so
+   * near-dup docs differ in few bits (Hamming distance). The per-token bits
+   * are the first 64 bits of md5(token) in big-endian bit order — i.e. bit j
+   * (j = 0..63) is bit `7 - j%8` of digest byte `j/8`, which equals bit
+   * `3 - j%4` of hex digit `j/4` of the standard lowercase hex rendering.
+   * md5 exists in every ANSI
    * SQL engine, so this sketch is *oracle-replayable* (q08's DuckDB SQL
-   * recomputes it bit-for-bit); [[simhash64]] (xxh64 token bits) remains the
-   * cheaper production sketch. Ties (vote sum 0) resolve to bit 0. Empty
-   * token stream → 0L.
+   * recomputes it bit-for-bit). It is graft's one SimHash sketch, the one
+   * q08 runs through `NearDup.uniqSimhashesMd5`. Ties (vote sum 0) resolve
+   * to bit 0. Empty token stream → 0L.
    */
   def simhashMd5(content: String): Long = {
     val toks = tokenize(content)

@@ -373,13 +373,6 @@ object NearDup {
       .select("a_id", "b_id", "n_intersect", "n_union", "jaccard")
   }
 
-  /** SimHash per document (alternative near-dup sketch; 64-bit, Hamming
-   *  distance ≤ 3 ≈ high similarity for token streams). */
-  def simhashes(corpus: DataFrame): DataFrame = {
-    val simUdf = udf((c: String) => Shingles.simhash64(c))
-    corpus.select(col("rkey"), simUdf(col("content")).as("simhash"))
-  }
-
   /** SimHash over content-distinct representatives, using the md5-derived
    *  token bits ([[Shingles.simhashMd5]]) so an ANSI-SQL oracle can replay
    *  the exact sketch (q08's DuckDB oracle). */

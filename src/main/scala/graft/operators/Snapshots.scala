@@ -46,7 +46,10 @@ import org.apache.spark.sql.expressions.Window
  * the first violation (validation.rs:350-353); we mark every row
  * valid/invalid with an error code and exclude *whole groups* containing any
  * invalid row from apply — same accept/reject decision per group, full
- * violation report instead of one error. Path-normalization branches
+ * violation report instead of one error. That exclusion is spelled once, in
+ * `pending`, and every apply-side output ([[appliedState]],
+ * [[applyActions]], [[backupRows]], [[pendingStats]], [[dryRun]]) reads
+ * those rows. Path-normalization branches
  * (within_rootdir, relative sources) are mapped away: row keys are canonical
  * (SURVEY.md §2.2), so `verify_symlink_source_path` reduces to direct key
  * equality. Two further mapped-away branches, for completeness:
@@ -64,16 +67,14 @@ object Snapshots {
   /** Donor keys for planted wrong-source cases: the two lexicographically
    *  smallest rkeys belonging to two different groups — `donor(g)` (= d1
    *  unless g IS d1's group, else d2) is an existing row whose sha provably
-   *  differs from g. One broadcastable row. */
-  private def donors(hashed: DataFrame): DataFrame = {
-    val d1 = hashed
-      .select(min(struct(col("rkey"), col("group_id"))).as("s"))
-      .select(col("s.rkey").as("d1_rkey"), col("s.group_id").as("d1_gid"))
-    val d2 = hashed.crossJoin(broadcast(d1))
-      .where(col("group_id") =!= col("d1_gid"))
-      .agg(min(col("rkey")).as("d2_rkey"))
-    d1.crossJoin(d2)
-  }
+   *  differs from g. One aggregate: the two smallest per-group minimum rkeys
+   *  reduced to one broadcastable row; `d2_rkey` is null with one group. */
+  private def donors(hashed: DataFrame): DataFrame =
+    hashed.groupBy("group_id").agg(min(col("rkey")).as("rkey"))
+      .orderBy("rkey", "group_id").limit(2)
+      .agg(min(struct(col("rkey"), col("group_id"))).as("d1"),
+        when(count(lit(1)) === 2, max(col("rkey"))).as("d2_rkey"))
+      .select(col("d1.rkey").as("d1_rkey"), col("d1.group_id").as("d1_gid"), col("d2_rkey"))
 
   private def donorCol: Column =
     when(col("group_id") === col("d1_gid"), col("d2_rkey")).otherwise(col("d1_rkey"))
@@ -229,65 +230,48 @@ object Snapshots {
       err.isNull.as("valid"), err.as("error"), noOp.as("is_no_op"))
   }
 
-  /** Groups containing any invalid row — excluded whole from apply. */
-  def invalidGroups(validated: DataFrame): DataFrame =
-    validated.where(!col("valid")).select("group_id").distinct()
-
-  private def withBadFlag(validated: DataFrame): DataFrame =
-    validated.join(invalidGroups(validated).withColumn("bad", lit(true)),
-        Seq("group_id"), "left_outer")
-      .withColumn("bad", coalesce(col("bad"), lit(false)))
+  /** The rows apply acts on: valid, not `keep`, in a group with no invalid
+   *  row. The one group-exclusion rule every apply-side output reads. */
+  private def pending(validated: DataFrame): DataFrame =
+    validated
+      .withColumn("_bad",
+        max(when(col("valid"), 0).otherwise(1)).over(Window.partitionBy("group_id")))
+      .where(col("valid") && col("_bad") === 0 && col("action") =!= "keep")
+      .drop("_bad")
 
   /**
    * Apply: rewrite the canonical table. Rows of invalid groups stay `kept`
    * (reference semantics: a failed validation applies nothing); valid deletes
    * drop the row; valid symlinks become `redirected` pointer rows aimed at
    * the resolved intended source. Output: `(rkey, status ∈ {kept,
-   * redirected}, points_to)`.
+   * redirected}, points_to)` — [[appliedState]] over the fresh state, which
+   * has no redirects of its own.
    */
-  def applyActions(validated: DataFrame, hashed: DataFrame): DataFrame = {
-    val v = withBadFlag(validated)
-      .select(col("rkey"), col("action"), col("src"), col("bad"))
-    val untouched = col("action").isNull || col("action") === "keep" || col("bad")
-    hashed.select("rkey")
-      .join(v, Seq("rkey"), "left_outer")
-      .select(
-        col("rkey"),
-        when(untouched, lit("kept"))
-          .when(col("action") === "symlink", lit("redirected"))
-          .otherwise(lit("deleted")).as("status"),
-        when(!untouched && col("action") === "symlink", col("src")).as("points_to"))
-      .where(col("status") =!= "deleted")
-  }
+  def applyActions(validated: DataFrame, hashed: DataFrame): DataFrame =
+    appliedState(validated, currentState(hashed))
+      .select(col("rkey"),
+        when(col("points_to").isNotNull, lit("redirected")).otherwise(lit("kept")).as("status"),
+        col("points_to"))
 
   /** Post-apply current state: deletes gone, redirects carry `points_to`
    *  (pre-existing redirects of untouched rows preserved) — feed back into
    *  [[validateState]] / [[snapshotFromState]] for incremental runs. */
-  def appliedState(validated: DataFrame, state: DataFrame): DataFrame = {
-    val v = withBadFlag(validated)
-      .select(col("rkey"), col("action"), col("src"), col("bad"))
-    val untouched = col("action").isNull || col("action") === "keep" || col("bad")
+  def appliedState(validated: DataFrame, state: DataFrame): DataFrame =
     state
-      .join(v, Seq("rkey"), "left_outer")
-      .where(untouched || col("action") =!= "delete")
+      .join(pending(validated).select("rkey", "action", "src"), Seq("rkey"), "left_outer")
+      .where(col("action").isNull || col("action") =!= "delete")
       .select(col("rkey"), col("true_sha"), col("size"),
-        when(!untouched && col("action") === "symlink", col("src"))
-          .otherwise(col("points_to")).as("points_to"))
-  }
+        when(col("action") === "symlink", col("src")).otherwise(col("points_to")).as("points_to"))
 
   /**
    * S6 backup sink (fileutil.rs:136-150, main.rs:163-169): the pre-image
-   * state rows of every row apply will touch (valid, non-no-op, non-keep, in
-   * a fully-valid group) — written before the rewrite, so the reference's
+   * state rows of every row apply will touch (the non-no-op `pending` rows)
+   * — written before the rewrite, so the reference's
    * "never destroy data without a backup" invariant holds. [[restore]] is the
    * round-trip.
    */
-  def backupRows(validated: DataFrame, state: DataFrame): DataFrame = {
-    val touched = withBadFlag(validated)
-      .where(col("valid") && !col("bad") && !col("is_no_op") && col("action") =!= "keep")
-      .select("rkey")
-    state.join(touched, Seq("rkey"), "left_semi")
-  }
+  def backupRows(validated: DataFrame, state: DataFrame): DataFrame =
+    state.join(pending(validated).where(!col("is_no_op")).select("rkey"), Seq("rkey"), "left_semi")
 
   /** Undo an apply: deleted rows come back from the backup, modified rows
    *  take their backed-up pre-image. `restore(appliedState(v, s),
@@ -346,9 +330,8 @@ object Snapshots {
    *  `includeNoOp` (executor.rs:140-154), and always free 0 bytes
    *  (executor.rs:27-51). `freeable_human` is the F8 log rendering. */
   def pendingStats(validated: DataFrame, includeNoOp: Boolean = false): DataFrame =
-    withBadFlag(validated)
-      .where(col("valid") && !col("bad") && col("action") =!= "keep" &&
-        (lit(includeNoOp) || !col("is_no_op")))
+    pending(validated)
+      .where(lit(includeNoOp) || !col("is_no_op"))
       .agg(count(lit(1)).as("n_pending"),
         coalesce(sum(when(!col("is_no_op"), col("size")).otherwise(0L)), lit(0L))
           .as("freeable_bytes"))
@@ -360,8 +343,7 @@ object Snapshots {
    * announcement line. Output: `(rkey, action, src, is_no_op, note)`.
    */
   def dryRun(validated: DataFrame): DataFrame =
-    withBadFlag(validated)
-      .where(col("valid") && !col("bad") && col("action") =!= "keep")
+    pending(validated)
       .select(col("rkey"), col("action"), col("src"), col("is_no_op"),
         concat(
           lit("[DRY RUN]"),

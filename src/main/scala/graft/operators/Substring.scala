@@ -182,12 +182,8 @@ object Substring {
     NearDup.uniqProjected(corpusK, md5GramsUdf(col("content"), lit(w)))
       .select(col("rkey"), explode(col("payload")).as("gram"))
 
-  /** `(rkey, gram)` — exploded rolling-hash fingerprints (scale sampler). */
-  def rollingGramTable(corpus: DataFrame, cfg: DedupConfig): DataFrame =
-    corpus.select(col("rkey"),
-      explode(rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask)).as("gram"))
-
-  /** [[rollingGramTable]] over content-distinct representatives. */
+  /** `(rkey, gram)` — exploded rolling-hash fingerprints (scale sampler)
+   *  over content-distinct representatives. */
   def rollingGramTableUniq(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
     NearDup.uniqProjected(corpusK,
       rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask))
@@ -223,15 +219,6 @@ object Substring {
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
   }
-
-  /** Substring-pair edges with the scale sampler — feeds Stage 3 clustering
-   *  (verify with [[verifiedSubstringPairs]] before handing to CC). */
-  def substringPairs(corpus: DataFrame, cfg: DedupConfig): DataFrame =
-    gramPairs(rollingGramTable(corpus, cfg), cfg.minSharedGrams, cfg.maxBucketSize)
-
-  /** [[substringPairs]] over content-distinct representatives. */
-  def substringPairsUniq(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
-    gramPairs(rollingGramTableUniq(corpusK, cfg), cfg.minSharedGrams, cfg.maxBucketSize)
 
   /** True iff `a` and `b` share at least one identical `w`-char window —
    *  rolling-hash index of `a` probed by `b`, hash hits confirmed by an

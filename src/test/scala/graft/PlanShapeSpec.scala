@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
 import graft.model.DedupConfig
-import graft.operators.{ExactDedup, NearDup, Substring}
+import graft.operators.{ExactDedup, NearDup, Snapshots, Substring}
 
 /**
  * Physical-plan shape regressions — the scale rules the operators document
@@ -16,7 +16,8 @@ import graft.operators.{ExactDedup, NearDup, Substring}
  *     scan stage; hashes/projections travel instead) — the 100 TB design
  *     rule of ExactDedup/NearDup, and the round-1→2 scaling fix;
  *  2. the similarity interior exchanges narrow key/id columns, not strings
- *     where an id form exists.
+ *     where an id form exists;
+ *  3. the review path reads each input as few times as its rule needs.
  *
  * Checked against `explain("formatted")` operator blocks: every block
  * belonging to an Exchange is scanned for the forbidden column name, so the
@@ -29,13 +30,20 @@ class PlanShapeSpec extends AnyFunSuite {
     ExactDedup.validRows(corpus).withColumn("rkey", ExactDedup.rkey)
   private val cfg = DedupConfig()
 
-  /** Operator blocks of the formatted explain that are Exchanges. */
-  private def exchangeBlocks(df: DataFrame): Seq[String] = {
+  /** Operator blocks of the formatted explain whose header names `op`. */
+  private def blocks(df: DataFrame, op: String): Seq[String] = {
     val txt = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     txt.split("\n\n").toSeq.filter(b =>
-      b.linesIterator.exists(l => l.matches("^\\(\\d+\\) Exchange.*")))
+      b.linesIterator.exists(l => l.matches(s"^\\(\\d+\\) $op.*")))
   }
+
+  /** Operator blocks of the formatted explain that are Exchanges. */
+  private def exchangeBlocks(df: DataFrame): Seq[String] = blocks(df, "Exchange")
+
+  /** Parquet scan blocks of the formatted explain that read directory `dir`. */
+  private def scansOf(df: DataFrame, dir: String): Int =
+    blocks(df, "Scan parquet").count(_.contains(s"/$dir]"))
 
   private def assertNoContentInExchanges(df: DataFrame, what: String): Unit = {
     val bad = exchangeBlocks(df).filter(_.contains("content#"))
@@ -79,5 +87,29 @@ class PlanShapeSpec extends AnyFunSuite {
       explode(Substring.rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask)).as("gram"))
     val pairs = Substring.gramPairs(uniqGrams, cfg.minSharedGrams, cfg.maxBucketSize)
     assertNoContentInExchanges(pairs, "gramPairs(long-keyed)")
+  }
+
+  test("review path: apply-side outputs scan validated once, fixtures scan hashed sparingly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-planshape").toFile
+    def reload(df: DataFrame, name: String): DataFrame = {
+      val p = new java.io.File(dir, name).getPath
+      df.write.parquet(p)
+      spark.read.parquet(p)
+    }
+    try {
+      val h = reload(ExactDedup.withHashes(corpus), "hashed")
+      val st = reload(Snapshots.plantedState(h), "state")
+      val v = reload(Snapshots.validateState(Snapshots.editedSnapshot(h), st), "validated")
+      // every apply-side output reads the one pending-row set: one scan of v
+      Seq("appliedState" -> Snapshots.appliedState(v, st),
+          "backupRows" -> Snapshots.backupRows(v, st),
+          "pendingStats" -> Snapshots.pendingStats(v),
+          "dryRun" -> Snapshots.dryRun(v)).foreach { case (what, df) =>
+        assert(scansOf(df, "validated") === 1, s"$what scans validated more than once")
+      }
+      // the planted donors come from one aggregate over hashed
+      assert(scansOf(Snapshots.editedSnapshot(h), "hashed") <= 4, "editedSnapshot")
+      assert(scansOf(Snapshots.plantedState(h), "hashed") <= 2, "plantedState")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }

@@ -5,8 +5,9 @@ import graft.corpus.Corpus
 import graft.functions.Shingles
 import graft.operators.{ExactDedup, NearDup}
 
-/** SimHash block-join pairs vs a brute-force Hamming-distance oracle
- *  (Manku et al. pigeonhole decomposition must have recall 1 by construction). */
+/** The production SimHash chain (q08's md5-bit sketch + block-join pairs)
+ *  vs a brute-force Hamming-distance oracle (Manku et al. pigeonhole
+ *  decomposition must have recall 1 by construction). */
 class SimHashSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -15,7 +16,7 @@ class SimHashSpec extends AnyFunSuite {
     val local = corpus.collect()
     // oracle over distinct-content representatives (min key per content)
     val sketches = local.groupBy(_.content)
-      .map { case (c, fs) => fs.map(f => s"${f.repo}/${f.path}").min -> Shingles.simhash64(c) }
+      .map { case (c, fs) => fs.map(f => s"${f.repo}/${f.path}").min -> Shingles.simhashMd5(c) }
       .toArray.sortBy(_._1)
     val oracle = (for {
       i <- sketches.indices
@@ -28,9 +29,8 @@ class SimHashSpec extends AnyFunSuite {
       (a, b, d)
     }).toSet
 
-    val df = NearDup.dedupedByContent(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey))
-    val got = NearDup.simhashPairs(NearDup.simhashes(df), maxDist = 3)
+    val corpusK = ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey)
+    val got = NearDup.simhashPairs(NearDup.uniqSimhashesMd5(corpusK), maxDist = 3)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2).toInt)).toSet
     assert(got === oracle)
   }

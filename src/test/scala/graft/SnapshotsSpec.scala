@@ -192,7 +192,8 @@ class SnapshotsSpec extends AnyFunSuite {
     val h = ExactDedup.withHashes(Corpus.synthetic(spark, 300, seed = 5L).toDF()).cache()
     val v = Snapshots.validate(Snapshots.editedSnapshot(h), h).cache()
     val applied = Snapshots.applyActions(v, h).cache()
-    val badGroups = Snapshots.invalidGroups(v).collect().map(_.getString(0)).toSet
+    val badGroups = v.where(!col("valid")).select("group_id").distinct()
+      .collect().map(_.getString(0)).toSet
     val deleted = v.where(col("valid") && col("action") === "delete" && !col("is_no_op"))
       .collect().filterNot(r => badGroups.contains(r.getAs[String]("group_id")))
       .map(_.getAs[String]("rkey")).toSet

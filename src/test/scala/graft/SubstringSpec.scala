@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.corpus.Corpus
 import graft.model.DedupConfig
 import graft.operators.{ExactDedup, Substring}
@@ -13,6 +14,14 @@ class SubstringSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.synthetic(spark, 300, seed = 4L).cache()
   private lazy val local = corpus.collect()
+  private lazy val corpusK =
+    ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey)
+
+  /** q13's pair chain: rolling grams of the content-distinct representatives
+   *  (minimum rkey per content), paired by the shared run-scan operator. */
+  private def rollingPairs: DataFrame =
+    Substring.gramPairs(Substring.rollingGramTableUniq(corpusK, cfg),
+      cfg.minSharedGrams, cfg.maxBucketSize)
 
   test("rolling fingerprints are shift-invariant (same block, different offset)") {
     val block = "A" * 10 + local.head.content.take(200)
@@ -82,9 +91,7 @@ class SubstringSpec extends AnyFunSuite {
       (a, b) -> shared.toLong
     }).toMap
 
-    val df = graft.operators.NearDup.dedupedByContent(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey))
-    val got = Substring.substringPairs(df, cfg).collect()
+    val got = rollingPairs.collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got === oracle)
     assert(oracle.nonEmpty, "fixtures must plant shared substrings")
@@ -115,12 +122,8 @@ class SubstringSpec extends AnyFunSuite {
   }
 
   test("verified rolling pairs: full pipeline keeps only byte-true edges") {
-    val df = graft.operators.NearDup.dedupedByContent(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey))
-    val raw = Substring.substringPairsUniq(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey), cfg)
-    val verified = Substring.verifiedSubstringPairs(raw,
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey), cfg.gramWidth)
+    val raw = rollingPairs
+    val verified = Substring.verifiedSubstringPairs(raw, corpusK, cfg.gramWidth)
     // every verified pair really shares a window (re-check in-process)
     val contents = local.map(f => s"${f.repo}/${f.path}" -> f.content).toMap
     verified.collect().foreach { r =>
@@ -134,9 +137,7 @@ class SubstringSpec extends AnyFunSuite {
   test("planted shared-block files are recovered") {
     // sub/ files sharing the same block id (id % 50) must pair up when both
     // sampled fingerprints of the 60-token shared block survive sampling.
-    val df = graft.operators.NearDup.dedupedByContent(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey))
-    val pairs = Substring.substringPairs(df, cfg).collect()
+    val pairs = rollingPairs.collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     val subPairs = pairs.filter { case (a, b) => a.contains("/sub/") && b.contains("/sub/") }
     assert(subPairs.nonEmpty, "expected pairs among planted sub/ files")
