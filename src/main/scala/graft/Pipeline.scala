@@ -12,7 +12,10 @@ import graft.runtime.RunContext
  * The end-to-end dedup job (north_star): corpus → exact snapshot → MinHash/
  * LSH near-dup pairs → substring pairs → connected-components cluster table,
  * every stage checkpointed through [[graft.runtime.RunContext]] (resumable)
- * and instrumented with per-partition lineage metrics.
+ * and instrumented with per-partition lineage metrics. Every materialized
+ * stage and band range restores under one key, [[RunContext.inputKey]] of
+ * the corpus and config, so a run dir reused over a changed corpus or
+ * config recomputes instead of restoring.
  *
  * Stage graph (each node a materialized parquet stage):
  *
@@ -28,6 +31,7 @@ object Pipeline {
 
   def run(ctx: RunContext, corpus: DataFrame, cfg: DedupConfig = DedupConfig()): Result = {
     val corpusK = ExactDedup.validRows(corpus).withColumn("rkey", ExactDedup.rkey)
+    val key = RunContext.inputKey(corpus, cfg)
 
     // The three edge-producing branches are independent given the scan:
     // submit them CONCURRENTLY (Spark schedules independent jobs onto idle
@@ -46,7 +50,7 @@ object Pipeline {
     // then read back from parquet, so nothing re-executes the filter).
     def prunedStage(name: String)(body: => (DataFrame, () => Unit)): DataFrame = {
       var release: () => Unit = () => ()
-      val out = ctx.stage(name) { val (df, r) = body; release = r; df }
+      val out = ctx.stage(name, key = key) { val (df, r) = body; release = r; df }
       release()
       out
     }
@@ -55,7 +59,7 @@ object Pipeline {
     // is dropped inside the scan stage; nothing here is reused elsewhere, so
     // persisting it would only burn cache-fill bandwidth).
     val fSnapshot = Future {
-      ctx.stage("snapshot") { ExactDedup.snapshot(ExactDedup.withHashes(corpus, cfg.quick)) }
+      ctx.stage("snapshot", key = key) { ExactDedup.snapshot(ExactDedup.withHashes(corpus, cfg.quick)) }
     }
 
     // Similarity runs on distinct content only (structural skew fix). The
@@ -79,10 +83,10 @@ object Pipeline {
     // ids (the 4→16-core profile put the scaling loss squarely on shuffle
     // bytes through the shared memory system).
     val nCorpusRows = corpus.count() // parquet metadata count — no scan
+    val deduped =
+      if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
+      else NearDup.dedupedByContent(corpusK)
     val uniq = ctx.stage("uniq", materialize = false) {
-      val deduped =
-        if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
-        else NearDup.dedupedByContent(corpusK)
       deduped.select(xxhash64(col("rkey")).as("id"),
         NearDup.shingleCol(col("content"), cfg.shingleN).as("shingles"),
         Substring.rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask).as("grams"))
@@ -99,7 +103,7 @@ object Pipeline {
         uniq.select(col("id"), col("shingles"), size(col("shingles")).as("n_shingles"))
           .where(col("n_shingles") > 0)
       }
-      val signatures = ctx.stage("signatures") { NearDup.signaturesById(shingles, cfg) }
+      val signatures = ctx.stage("signatures", key = key) { NearDup.signaturesById(shingles, cfg) }
       // candidate state checkpointed separately (north_rule) — and the banded
       // subtree (sig explode + bucket counts + semi-join + self-join) runs once
       // instead of once per downstream consumer.
@@ -119,14 +123,14 @@ object Pipeline {
         // checkpointed under `candidates_ranges`.
         NearDup.candidateIdPairsBandRangedReleasable(signatures, cfg,
           s"${ctx.runDir}/candidates_ranges",
-          n => { dropsB.add(1L); dropsR.add(n) })
+          n => { dropsB.add(1L); dropsR.add(n) }, key)
       }
       ctx.metrics.record("candidates.dropped_buckets", dropsB.value)
       ctx.metrics.record("candidates.dropped_members", dropsR.value)
       if (dropsB.value > 0)
         System.err.println(s"[graft.skew] candidates: ${dropsB.value} hot LSH buckets " +
           s"(${dropsR.value} member rows) over cap ${cfg.maxBucketSize} — dropped, exact stage covers their identical members")
-      ctx.stage("near_pairs") {
+      ctx.stage("near_pairs", key = key) {
         NearDup.verifyCandidatesById(candidates, shingles, cfg,
           register = Some(ctx.registerPersist))
       }
@@ -146,12 +150,7 @@ object Pipeline {
           // Exact prefix-doubling pass: class equality IS byte equality, so
           // no verify join is needed — a pair here is already a true shared-
           // window pair (SuffixArraySpec proves parity with the verified
-          // rolling path). Same broadcast-vs-shuffle gate as the uniq stage:
-          // past `repBroadcastMaxRows` the representative key set no longer
-          // fits the broadcast budget.
-          val deduped =
-            if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
-            else NearDup.dedupedByContent(corpusK)
+          // rolling path). Same content-dedup gate as the uniq stage.
           (graft.operators.SuffixArray.windowClassPairs(
             deduped.select(xxhash64(col("rkey")).as("id"), col("content")),
             cfg.gramWidth, cfg.maxBucketSize, n => dropsG.add(n)), () => ())
@@ -188,7 +187,7 @@ object Pipeline {
     val snapshot = Await.result(fSnapshot, Duration.Inf)
     val nearPairs = Await.result(fNearPairs, Duration.Inf)
     val subPairs = Await.result(fSubPairs, Duration.Inf)
-    val clusters = ctx.stage("clusters") {
+    val clusters = ctx.stage("clusters", key = key) {
       // Exact-dup groups enter as a MAPPING (member → keeper), not as edges:
       // CC iterates over the representative-level similarity graph only —
       // orders of magnitude fewer edges on a duplicate-heavy corpus, and a

@@ -84,10 +84,11 @@ case class DedupConfig(
      *  broadcast — the practical ceiling of a comfortable executor
      *  broadcast, and covers the 3M-row bench corpus. */
     repBroadcastMaxRows: Long = 10000000L,
-    /** Candidate-pair count at or under which the verify passes broadcast
-     *  the pair-member key set for the semi-filter (2·pairs ids). Above it
-     *  the semi-join falls back to a shuffle — at 10⁹-scale candidate
-     *  volumes the member set is itself shuffle-sized. */
+    /** Candidate-pair count at or under which the near-dup verify
+     *  (`NearDup.verifyCandidatesById`) broadcasts the pair-member key set
+     *  for the semi-filter (2·pairs ids). Above it the semi-join falls back
+     *  to a shuffle — at 10⁹-scale candidate volumes the member set is
+     *  itself shuffle-sized. */
     verifyKeyBroadcastMaxPairs: Long = 5000000L,
     quick: Boolean = false,
     /** Route the long-substring pass through the EXACT prefix-doubling

@@ -204,21 +204,14 @@ object NearDup {
    *  - no candidate pair can span two ranges, so the per-range raw pair
    *    streams union losslessly and dedup ONCE.
    *
-   * Each range's pairs MATERIALIZE to `<rangeDir>/range_<i>of<n>_b<bands>`
-   * before the next range's sketch is built: exactly one sketch broadcast is
-   * live at a time (released as soon as its range lands), and a killed run
-   * resumes from completed ranges — the parquet `_SUCCESS` marker is the
-   * done-flag, the same contract as stage checkpoints. `range_*` dirs of any
-   * other geometry are deleted first.
-   *
-   * What the path key catches: a change of `nRanges` (which follows the
-   * signature count) or of `cfg.bands` — together they fix every `lo..hi`
-   * slice, so such a change recomputes instead of restoring a range that
-   * covers other bands. What it misses: a content change that keeps the
-   * signature count (and so `nRanges`), and changes to `cfg.rowsPerBand`,
-   * `cfg.shingleN` or `cfg.maxBucketSize` — a run dir reused across those
-   * restores stale ranges. ROADMAP open item 2 (stage manifests) is the fix.
-   * Also by design: `onDrop` accounting is skipped for restored ranges, so
+   * Each range's pairs MATERIALIZE to `<rangeDir>/range_<i>` before the next
+   * range's sketch is built: exactly one sketch broadcast is live at a time
+   * (released as soon as its range lands), and a killed run resumes from
+   * completed ranges. Range `i` is a [[graft.runtime.RunContext.materialize]]
+   * under `"<key> <cfg> <i>/<nRanges>"`, so it restores only for the same
+   * run key (the pipeline passes its input key), config and range count;
+   * `range_*` dirs that are not a current range index are deleted first.
+   * By design, `onDrop` accounting is skipped for restored ranges, so
    * dropped-bucket metrics undercount on a resumed run (the pairs themselves
    * are exact). The ranges are internal state of the candidates stage; the
    * caller still owns the stage-level checkpoint of the deduped union.
@@ -229,15 +222,17 @@ object NearDup {
    */
   def candidateIdPairsBandRanged(signatures: DataFrame, cfg: DedupConfig,
                                  rangeDir: String,
-                                 onDrop: Long => Unit = _ => ()): DataFrame =
-    candidateIdPairsBandRangedReleasable(signatures, cfg, rangeDir, onDrop)._1
+                                 onDrop: Long => Unit = _ => (),
+                                 key: String = ""): DataFrame =
+    candidateIdPairsBandRangedReleasable(signatures, cfg, rangeDir, onDrop, key)._1
 
   /** [[candidateIdPairsBandRanged]] plus the one-range plan's sketch release
    *  handle: call it once the returned plan has been materialized (a no-op
    *  past one range, where every range released its own sketch already). */
   def candidateIdPairsBandRangedReleasable(signatures: DataFrame, cfg: DedupConfig,
                                            rangeDir: String,
-                                           onDrop: Long => Unit = _ => ())
+                                           onDrop: Long => Unit = _ => (),
+                                           key: String = "")
       : (DataFrame, () => Unit) = {
     val spark = signatures.sparkSession
     val sigRows = signatures.count()
@@ -246,37 +241,37 @@ object NearDup {
       if (!cfg.pruneSingletons) 1
       else math.min(cfg.bands.toLong,
         math.max(1L, (bandRows + cfg.pruneShardedMaxRows - 1) / cfg.pruneShardedMaxRows)).toInt
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(rangeDir), spark.sparkContext.hadoopConfiguration)
+    // range dirs past the current count are orphans (one range writes none)
+    val live = if (nRanges == 1) Set.empty[String] else (0 until nRanges).map(r => s"range_$r").toSet
     val dir = new org.apache.hadoop.fs.Path(rangeDir)
-    val geometry = s"of${nRanges}_b${cfg.bands}"
-    if (fs.exists(dir))
-      fs.listStatus(dir).map(_.getPath).filter { p =>
-        p.getName.startsWith("range_") && !p.getName.matches(s"range_\\d+$geometry")
-      }.foreach(fs.delete(_, true))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "range_*"))).toSeq.flatten
+      .map(_.getPath).filterNot(p => live(p.getName)).foreach(fs.delete(_, true))
     if (nRanges == 1) {
       val (pruned, release) = graft.functions.SeenTwice.pruneAuto(
         bandedById(signatures, cfg), "band_hash", bandRows, cfg)
       return (candidateIdPairs(pruned, cfg, onDrop), release)
     }
-    def rangePath(r: Int) = s"$rangeDir/range_$r$geometry"
-    (0 until nRanges).foreach { r =>
+    val ranges = (0 until nRanges).map { r =>
       val lo = r * cfg.bands / nRanges
       val hi = (r + 1) * cfg.bands / nRanges
-      val path = rangePath(r)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
-        val t0 = System.nanoTime()
-        val (pruned, release) = graft.functions.SeenTwice.pruneAuto(
-          bandedByIdRange(signatures, cfg, lo, hi), "band_hash", sigRows * (hi - lo), cfg)
-        try candidateIdPairsRaw(pruned, cfg, onDrop)
-          .write.mode("overwrite").parquet(path)
-        finally release()
-        System.err.println(f"[graft.stage] candidates range $r/$nRanges " +
-          f"(bands $lo..${hi - 1}) ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } else System.err.println(
+      val t0 = System.nanoTime()
+      var release: () => Unit = () => ()
+      val (df, restored) =
+        try graft.runtime.RunContext.materialize(spark, s"$rangeDir/range_$r",
+            s"$key $cfg $r/$nRanges") {
+          val (pruned, rel) = graft.functions.SeenTwice.pruneAuto(
+            bandedByIdRange(signatures, cfg, lo, hi), "band_hash", sigRows * (hi - lo), cfg)
+          release = rel
+          candidateIdPairsRaw(pruned, cfg, onDrop)
+        } finally release()
+      if (restored) System.err.println(
         s"[graft.stage] candidates range $r/$nRanges restored from checkpoint")
+      else System.err.println(f"[graft.stage] candidates range $r/$nRanges " +
+        f"(bands $lo..${hi - 1}) ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      df
     }
-    (spark.read.parquet((0 until nRanges).map(rangePath): _*).distinct(), () => ())
+    (ranges.reduce(_ union _).distinct(), () => ())
   }
 
   /**

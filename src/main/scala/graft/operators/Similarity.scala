@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Embedding similarity search: brute-force cosine top-k as the correctness
@@ -39,6 +40,10 @@ object Similarity {
   private def dotQ(a: Column, b: Column): Column =
     graft.functions.NativeExprs.longDot(a, b)
 
+  /** Exact quantized cosine of the `(qa, ssa)` and `(qb, ssb)` columns. */
+  private def cosQ: Column = dotQ(col("qa"), col("qb")).cast("double") /
+    (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double")))
+
   /** Float cosine of two `array<float>` columns (production path): a single
    *  deterministic left-to-right fold per component. */
   def cosine(a: Column, b: Column): Column = {
@@ -63,10 +68,8 @@ object Similarity {
     val q = quantized(embeddings).select("vec_id", "q", "ss")
     val a = q.select(col("vec_id"), col("q").as("qa"), col("ss").as("ssa"))
     val b = q.select(col("vec_id").as("neighbor_id"), col("q").as("qb"), col("ss").as("ssb"))
-    val cosq = dotQ(col("qa"), col("qb")).cast("double") /
-      (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double")))
     a.join(b, col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosq", cosq)
+      .withColumn("cosq", cosQ)
       .groupBy("vec_id")
       .agg(graft.functions.TopKAgg.topK(k, col("neighbor_id"), col("cosq")).as("top"))
       .select(col("vec_id"), posexplode(col("top")).as(Seq("i", "e")))
@@ -86,8 +89,7 @@ object Similarity {
     val a = q.select(col("vec_id").as("a_id"), col("q").as("qa"), col("ss").as("ssa"))
     val b = q.select(col("vec_id").as("b_id"), col("q").as("qb"), col("ss").as("ssb"))
     a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cosq", dotQ(col("qa"), col("qb")).cast("double") /
-        (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double"))))
+      .withColumn("cosq", cosQ)
       .where(col("cosq") >= minCos)
       .select("a_id", "b_id", "cosq")
   }
@@ -114,43 +116,22 @@ object Similarity {
   def lshCosinePairs(embeddings: DataFrame, minCos: Double, tables: Int = 16,
                      bits: Int = 0, maxBucketSize: Int = 4096,
                      onDrop: (Long, Long) => Unit = (_, _) => ()): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val b = if (bits > 0) bits else autoBits(embeddings.count(), maxBucketSize)
-    // Persist the sketch (round 6): it is consumed by the hot-bucket collect
-    // AND the candidate join — lazily the bucket UDF re-sketched the corpus
-    // once per reference (guide §5 persist-on-reuse). Scoped: the result is
-    // eagerly materialized (localCheckpoint) and the cache released before
-    // returning, the repo's standard scoped-persist pattern.
+    // persisted for [[bucketCandidates]]; scoped: the result is
+    // localCheckpointed and the cache released before returning
     val idx = annIndex(embeddings, tables, b)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hotRows = annHotBuckets(idx, maxBucketSize).collect()
-      if (hotRows.nonEmpty)
-        onDrop(hotRows.length.toLong, hotRows.map(_.getAs[Long]("count")).sum)
-      // Empty hot set (the common case): the anti-joins are identities, so
-      // skip them — each otherwise costs a broadcast-exchange job and plan
-      // surface for nothing (round 6, guide §2.4).
-      val hot = if (hotRows.isEmpty) None else Some(broadcast(
-        hotRows.map(r => (r.getAs[Int]("table"), r.getAs[Long]("bucket"))).toSeq
-          .toDF("table", "bucket")))
-      val idxOk = hot.fold(idx)(h => idx.join(h, Seq("table", "bucket"), "left_anti"))
-        .repartition(col("table"), col("bucket"))
       // self-query by construction: probes derive from the persisted index
-      val probes0 = annProbesFromIndex(idx, b)
-      val probes = hot.fold(probes0)(h => probes0.join(h, Seq("table", "bucket"), "left_anti"))
-      val cand = probes.as("a").join(idxOk.as("b"),
-          col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-          greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"))
+      val cand = bucketCandidates(idx, annProbesFromIndex(idx, b), Seq("table", "bucket"),
+          maxBucketSize, onDrop)
+        .select(least(col("a"), col("b")).as("a_id"), greatest(col("a"), col("b")).as("b_id"))
         .distinct()
       val q = quantized(embeddings).select("vec_id", "q", "ss")
       val qa = q.select(col("vec_id").as("a_id"), col("q").as("qa"), col("ss").as("ssa"))
       val qb = q.select(col("vec_id").as("b_id"), col("q").as("qb"), col("ss").as("ssb"))
       cand.join(qa, "a_id").join(qb, "b_id")
-        .withColumn("cosq", dotQ(col("qa"), col("qb")).cast("double") /
-          (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double"))))
+        .withColumn("cosq", cosQ)
         .where(col("cosq") >= minCos)
         .select("a_id", "b_id", "cosq")
         .localCheckpoint()
@@ -202,29 +183,32 @@ object Similarity {
   private[graft] def dimsOf(embeddings: DataFrame): Int =
     embeddings.select(size(col("embedding"))).take(1).headOption.map(_.getInt(0)).getOrElse(1)
 
-  /** Sign-bit sketch UDF over the QUANTIZED vector: for each of `tables`, a
+  /** Sign-bit sketch of one QUANTIZED vector: for each of `tables`, a
    *  `bits`-bit bucket id from exact integer dot signs. */
-  private def bucketsUdfQ(tables: Int, bits: Int, dims: Int, planes: Array[Long]) =
-    udf((v: Array[Long]) => {
-      val out = new Array[Long](tables)
-      val n = math.min(v.length, dims)
-      var t = 0
-      while (t < tables) {
-        var bucket = 0L
-        var b = 0
-        while (b < bits) {
-          val off = (t * bits + b) * dims
-          var dot = 0L
-          var i = 0
-          while (i < n) { dot += v(i) * planes(off + i); i += 1 }
-          if (dot > 0) bucket |= (1L << b)
-          b += 1
-        }
-        out(t) = bucket
-        t += 1
+  private def sketchQ(v: Array[Long], tables: Int, bits: Int, dims: Int,
+                      planes: Array[Long]): Array[Long] = {
+    val out = new Array[Long](tables)
+    val n = math.min(v.length, dims)
+    var t = 0
+    while (t < tables) {
+      var bucket = 0L
+      var b = 0
+      while (b < bits) {
+        val off = (t * bits + b) * dims
+        var dot = 0L
+        var i = 0
+        while (i < n) { dot += v(i) * planes(off + i); i += 1 }
+        if (dot > 0) bucket |= (1L << b)
+        b += 1
       }
-      out
-    })
+      out(t) = bucket
+      t += 1
+    }
+    out
+  }
+
+  private def bucketsUdfQ(tables: Int, bits: Int, dims: Int, planes: Array[Long]) =
+    udf((v: Array[Long]) => sketchQ(v, tables, bits, dims, planes))
 
   /** `(vec_id, table, bucket)` — the LSH index table. */
   def annIndex(embeddings: DataFrame, tables: Int = 16, bits: Int = 8): DataFrame = {
@@ -246,26 +230,9 @@ object Similarity {
     val dims = if (dims0 > 0) dims0 else dimsOf(embeddings)
     val planes = planesFor(tables, bits, dims)
     val probesUdf = udf((v: Array[Long]) => {
-      val base = new Array[Long](tables)
-      val n = math.min(v.length, dims)
-      // same sketch as bucketsUdfQ
-      var t = 0
-      while (t < tables) {
-        var bucket = 0L
-        var b = 0
-        while (b < bits) {
-          val off = (t * bits + b) * dims
-          var dot = 0L
-          var i = 0
-          while (i < n) { dot += v(i) * planes(off + i); i += 1 }
-          if (dot > 0) bucket |= (1L << b)
-          b += 1
-        }
-        base(t) = bucket
-        t += 1
-      }
+      val base = sketchQ(v, tables, bits, dims, planes)
       val out = new Array[Long](tables * (bits + 1))
-      t = 0
+      var t = 0
       while (t < tables) {
         val o = t * (bits + 1)
         out(o) = base(t)
@@ -346,45 +313,48 @@ object Similarity {
                        tables: Int, bits: Int, maxBucketSize: Int = 4096,
                        onDrop: (Long, Long) => Unit = (_, _) => (),
                        dims0: Int = 0, selfQuery: Boolean = false): DataFrame = {
-    // Hot-bucket accounting: COLLECT the over-cap set (tiny — ≤ n/cap rows,
-    // ≈244k at 10⁹ vectors/cap 4096) in ONE action, report the drops from
-    // it, and re-broadcast it as a local table — the alternative (a count
-    // action + an anti-join against the live subtree) evaluates the sketch
-    // UDF over the whole index an extra time.
-    //
-    // The index is PERSISTED for the call (round 6): the hot-bucket collect
-    // and the candidate join each consumed it, which in the rebuild path
-    // meant sketching the corpus twice (guide §5 persist-on-reuse). Scoped:
-    // result localCheckpointed, cache released before returning.
-    val spark = embeddings.sparkSession
+    // persisted for [[bucketCandidates]]; scoped as in [[lshCosinePairs]]
     val idx = idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hotRows = annHotBuckets(idx, maxBucketSize).collect()
-      if (hotRows.nonEmpty)
-        onDrop(hotRows.length.toLong, hotRows.map(_.getAs[Long]("count")).sum)
-      import spark.implicits._
-      // Empty hot set → the anti-joins are identities; skip their broadcast
-      // jobs and plan surface (round 6, guide §2.4).
-      val hot = if (hotRows.isEmpty) None else Some(broadcast(
-        hotRows.map(r => (r.getAs[Int]("table"), r.getAs[Long]("bucket"))).toSeq
-          .toDF("table", "bucket")))
-      val idxOk = hot.fold(idx)(h => idx.join(h, Seq("table", "bucket"), "left_anti"))
-        .repartition(col("table"), col("bucket"))
       // `selfQuery` (the rebuild path, where the query batch IS the indexed
       // corpus): probes derive from the persisted index — no second sketch
       // pass. Arbitrary query batches (the stored-index path) sketch with
       // the UDF against the build-corpus planes as before.
-      val probes0 =
+      val probes =
         if (selfQuery) annProbesFromIndex(idx, bits)
         else annProbes(embeddings, tables, bits, dims0)
-      val probes = hot.fold(probes0)(h => probes0.join(h, Seq("table", "bucket"), "left_anti"))
-      val cand = probes.as("a").join(idxOk.as("b"),
-          col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"))
+      val cand = bucketCandidates(idx, probes, Seq("table", "bucket"), maxBucketSize, onDrop)
+        .select(col("a").as("vec_id"), col("b").as("neighbor_id"))
         .distinct()
       rankCandidates(embeddings, cand, k).localCheckpoint()
     } finally idx.unpersist(false)
+  }
+
+  /** The capped-bucket candidate join of every ANN variant, bucketed by
+   *  `keys`: `(a, b)` = (probe vec_id, indexed vec_id) for each row of
+   *  `probes` sharing a bucket of `idx` with another vector; not deduped.
+   *  The over-cap buckets (≤ n/cap rows) are COLLECTED in one action,
+   *  reported to `onDrop` as (buckets, member rows) and anti-joined away
+   *  from both sides as a broadcast local table — a count action plus an
+   *  anti-join against the live subtree would re-run the sketch. An empty
+   *  hot set (the common case) skips the anti-joins and their broadcast
+   *  jobs (round 6). The hot-set collect and the join both read `idx`, so
+   *  callers persist it for the call — lazily, a rebuilt index re-sketched
+   *  the corpus once per read (round 6, persist-on-reuse). */
+  private def bucketCandidates(idx: DataFrame, probes: DataFrame, keys: Seq[String],
+                               cap: Int, onDrop: (Long, Long) => Unit): DataFrame = {
+    val hotRows = idx.groupBy(keys.map(col): _*).count().where(col("count") > cap).collect()
+    if (hotRows.nonEmpty)
+      onDrop(hotRows.length.toLong, hotRows.map(_.getAs[Long]("count")).sum)
+    val hot = if (hotRows.isEmpty) None else Some(broadcast(idx.sparkSession.createDataFrame(
+      java.util.Arrays.asList(hotRows.map(r => Row(keys.map(r.getAs[Any]): _*)): _*),
+      StructType(keys.map(idx.schema(_))))))
+    def cold(df: DataFrame) = hot.fold(df)(df.join(_, keys, "left_anti"))
+    val idxOk = cold(idx).repartition(keys.map(col): _*)
+    cold(probes).as("a").join(idxOk.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("a"), col("b.vec_id").as("b"))
   }
 
   /** Exact-cosine verification + per-query top-k over a candidate pair set —
@@ -398,10 +368,8 @@ object Similarity {
     val q = quantized(embeddings).select("vec_id", "q", "ss")
     val a = q.select(col("vec_id"), col("q").as("qa"), col("ss").as("ssa"))
     val b = q.select(col("vec_id").as("neighbor_id"), col("q").as("qb"), col("ss").as("ssb"))
-    val cosq = dotQ(col("qa"), col("qb")).cast("double") /
-      (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double")))
     cand.join(a, "vec_id").join(b, "neighbor_id")
-      .withColumn("cosq", cosq)
+      .withColumn("cosq", cosQ)
       .groupBy("vec_id")
       .agg(graft.functions.TopKAgg.topK(k, col("neighbor_id"), col("cosq")).as("top"))
       .select(col("vec_id"), posexplode(col("top")).as(Seq("i", "e")))
@@ -591,26 +559,13 @@ object Similarity {
                                 onDrop: (Long, Long) => Unit): DataFrame = {
     val nCells = centroids.length
     val nProbe = math.min(nCells, if (nprobe > 0) nprobe else math.max(16, nCells / 32))
-    // same one-action hot-set collection + report as annTopK; the index is
-    // persisted for the call (hot-set collect + candidate join both read it)
-    val spark = embeddings.sparkSession
+    // persisted for [[bucketCandidates]]; scoped as in [[lshCosinePairs]]
     val idx = idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hotRows = idx.groupBy("cell").count().where(col("count") > maxCellSize).collect()
-      if (hotRows.nonEmpty)
-        onDrop(hotRows.length.toLong, hotRows.map(_.getAs[Long]("count")).sum)
-      import spark.implicits._
-      // Empty hot set → anti-joins are identities; skip them (guide §2.4).
-      val hot = if (hotRows.isEmpty) None else Some(broadcast(
-        hotRows.map(_.getAs[Int]("cell")).toSeq.toDF("cell")))
-      val idxOk = hot.fold(idx)(h => idx.join(h, Seq("cell"), "left_anti"))
-        .repartition(col("cell"))
-      val probes0 = normed.select(col("vec_id"),
+      val probes = normed.select(col("vec_id"),
         explode(probeCellsUdf(centroids, nProbe)(col("nq"))).as("cell"))
-      val probes = hot.fold(probes0)(h => probes0.join(h, Seq("cell"), "left_anti"))
-      val cand = probes.as("a").join(idxOk.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"))
+      val cand = bucketCandidates(idx, probes, Seq("cell"), maxCellSize, onDrop)
+        .select(col("a").as("vec_id"), col("b").as("neighbor_id"))
         .distinct()
       rankCandidates(embeddings, cand, k).localCheckpoint()
     } finally idx.unpersist(false)

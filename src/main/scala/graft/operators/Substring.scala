@@ -282,7 +282,6 @@ object Substring {
    * pair-key join: only candidate members' content moves, not the corpus.
    */
   def verifiedSubstringPairs(pairs0: DataFrame, corpusK: DataFrame, w: Int,
-                             broadcastMaxPairs: Long = 5000000L,
                              register: Option[DataFrame => Unit] = None): DataFrame = {
     // The candidate table is consumed twice (key-set semi + the verify
     // join): persist it so the gram pipeline upstream executes once, not
@@ -292,13 +291,15 @@ object Substring {
     // passes its RunContext registrar and cleans up after the stage commits.
     val pairs = pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     register.foreach(_(pairs))
-    def body: DataFrame = verifiedBody(pairs, corpusK, w, broadcastMaxPairs)
+    def body: DataFrame = verifiedBody(pairs, corpusK, w)
     if (register.isDefined) body
     else try body.localCheckpoint() finally pairs.unpersist(false)
   }
 
-  private def verifiedBody(pairs: DataFrame, corpusK: DataFrame, w: Int,
-                           broadcastMaxPairs: Long): DataFrame = {
+  /** Candidate-pair count at or under which the member key set broadcasts. */
+  private val BroadcastMaxPairs = 5000000L
+
+  private def verifiedBody(pairs: DataFrame, corpusK: DataFrame, w: Int): DataFrame = {
     // Content fetch is restricted to pair MEMBERS before any join: the pair
     // key set (≤ 2·|pairs|, bounded upstream by the bucket cap) broadcasts
     // while it fits the budget, so the full corpus' content never enters an
@@ -306,7 +307,7 @@ object Substring {
     // budget the semi-join shuffles (the 10⁹-scale path).
     val pk = pairs.select(col("a_key").as("rkey"))
       .union(pairs.select(col("b_key").as("rkey"))).distinct()
-    val pkH = if (pairs.count() <= broadcastMaxPairs) broadcast(pk)
+    val pkH = if (pairs.count() <= BroadcastMaxPairs) broadcast(pk)
     else pk.hint("SHUFFLE_HASH")
     val c = corpusK.join(pkH, Seq("rkey"), "left_semi")
       .select("rkey", "content")

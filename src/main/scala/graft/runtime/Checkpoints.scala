@@ -1,17 +1,27 @@
 package graft.runtime
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
+import graft.model.DedupConfig
 
 /**
  * Stage-level checkpointing for resumable runs (north_rule: "checkpoints
  * signatures and cluster state per stage; resumable from checkpoint").
  *
- * Each stage materializes to `<runDir>/<stage>` as parquet; the parquet
- * `_SUCCESS` marker doubles as the done-flag — a stage whose marker exists is
- * *read back*, never recomputed, so a killed run resumes from its last
- * completed stage. (The Iceberg-flavored deployment would materialize each
- * stage as a table version; parquet dirs are the offline stand-in —
- * SURVEY.md §7 environment note.)
+ * Each stage materializes to `<runDir>/<stage>` as parquet through one
+ * restore rule, [[RunContext.materialize]]: a dir is read back only when its
+ * `_SUCCESS` marker exists and its `_MANIFEST` holds exactly the caller's
+ * key; otherwise it is recomputed. The pipeline's key,
+ * [[RunContext.inputKey]], covers the config, the corpus plan and its input
+ * files, so a killed run resumes from its last completed stage while a run
+ * dir reused over a changed corpus or config recomputes. A corpus with any
+ * input that is not a file scan (a local relation, a generated range, an
+ * RDD) gets a fresh random key and never restores. (Parquet dirs are the
+ * offline stand-in for Iceberg table versions — SURVEY.md §7.)
  *
  * Also sets a reliable Spark checkpoint dir so iterative operators
  * (connected components) cut lineage with real checkpoints inside a run.
@@ -20,59 +30,46 @@ class RunContext(val spark: SparkSession, val runDir: String, val runId: String)
   val metrics = new Metrics(spark, runId)
   spark.sparkContext.setCheckpointDir(s"$runDir/_spark_checkpoints")
 
-  private val fs = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(runDir), spark.sparkContext.hadoopConfiguration)
-
-  private def donePath(name: String) =
-    new org.apache.hadoop.fs.Path(s"$runDir/$name/_SUCCESS")
-
-  /** Names of stages already completed (for resume reporting/tests). */
-  def completed(name: String): Boolean = fs.exists(donePath(name))
-
   private val lightStages = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   /**
-   * Materialize-or-restore a stage. On compute, the stage output is
-   * instrumented with per-partition metrics before writing.
+   * Materialize-or-restore a stage under `key` ([[RunContext.materialize]]).
+   * On compute, the stage output is instrumented with per-partition metrics
+   * before writing.
    *
    * `materialize = false` declares a *light* stage: no parquet barrier, no
-   * done-marker — the instrumented plan is persisted (so multiple consumers
-   * share one computation) and flows lazily into downstream stages. Light
-   * stages are pure projections that are cheap to recompute; resumability is
-   * carried by the materialized stages around them (north_rule names
-   * signatures + cluster state as the durable checkpoints). Cutting the
-   * write+read barrier on the cheap stages removes serial wall time that a
-   * higher thread count cannot shrink (the round-1 scaling profile showed
-   * 1-2 s of fixed cost per barrier regardless of data size).
+   * manifest — the instrumented plan is persisted (so multiple consumers
+   * share one computation) and flows lazily downstream. Light stages are
+   * cheap projections; resumability is carried by the materialized stages
+   * around them, and skipping their write+read barrier removes serial wall
+   * time a higher thread count cannot shrink (1-2 s per barrier regardless
+   * of data size in the round-1 scaling profile).
    *
    * `persist = false` (light stages only) skips the cache too: for a plain
    * projection of an already-persisted stage, a second cache copy would only
    * burn fill bandwidth.
    *
    * A materialized stage records one driver-side metrics row,
-   * `<name>.resumed`: `rows` = 1 when restored, 0 when computed.
+   * `<name>.resumed`: `rows` = 1 when restored, 0 when computed (a key
+   * mismatch computes).
    */
-  def stage(name: String, materialize: Boolean = true, persist: Boolean = true)
-           (compute: => DataFrame): DataFrame = {
-    val path = s"$runDir/$name"
+  def stage(name: String, materialize: Boolean = true, persist: Boolean = true,
+            key: String = "")(compute: => DataFrame): DataFrame = {
     if (!materialize) {
-      val df0 = metrics.instrument(compute, name)
-      if (!persist) return df0
-      val df = df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      lightStages.synchronized { lightStages += df } // stages may run concurrently
+      val df = metrics.instrument(compute, name)
+      if (persist) registerPersist(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       return df
     }
-    val resumed = completed(name)
-    metrics.record(s"$name.resumed", if (resumed) 1L else 0L)
-    if (!resumed) {
-      val t0 = System.nanoTime()
+    val t0 = System.nanoTime()
+    val (df, resumed) = RunContext.materialize(spark, s"$runDir/$name", key) {
       // thread-local: concurrent branch stages keep their own labels
       spark.sparkContext.setJobDescription(s"graft:$name")
       metrics.instrument(compute, name)
-        .write.mode("overwrite").parquet(path)
-      System.err.println(f"[graft.stage] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    spark.read.parquet(path)
+    metrics.record(s"$name.resumed", if (resumed) 1L else 0L)
+    if (!resumed)
+      System.err.println(f"[graft.stage] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    df
   }
 
   /** Register an operator-internal persist with this run's lifecycle: it is
@@ -95,5 +92,52 @@ object RunContext {
     val id = java.lang.Long.toUnsignedString(
       graft.functions.XXHash64.hashString(runDir, 42L), 16)
     new RunContext(spark, runDir, id)
+  }
+
+  /** The one restore rule: read `path` back when its `_SUCCESS` marker
+   *  exists and its `_MANIFEST` holds exactly `key`; otherwise overwrite it
+   *  with `compute` as parquet and only then write the manifest, so a kill
+   *  between the two recomputes. Spark's parquet reader skips both
+   *  `_`-prefixed files. Returns the DataFrame and whether it was restored. */
+  def materialize(spark: SparkSession, path: String, key: String)
+                 (compute: => DataFrame): (DataFrame, Boolean) = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifest = new Path(dir, "_MANIFEST")
+    val restored = fs.exists(new Path(dir, "_SUCCESS")) && fs.exists(manifest) && {
+      val in = fs.open(manifest)
+      try new String(in.readAllBytes(), UTF_8) == key finally in.close()
+    }
+    if (!restored) {
+      compute.write.mode("overwrite").parquet(path)
+      val out = fs.create(manifest, true)
+      try out.write(key.getBytes(UTF_8)) finally out.close()
+    }
+    (spark.read.parquet(path), restored)
+  }
+
+  /** The run key of `corpus` under `cfg`: sha256 over the whole config, the
+   *  canonicalized analyzed plan and the sorted `(path, length, mtime)` of
+   *  the corpus' input files. Every stage is a deterministic function of
+   *  (input, config), so one key covers all stages of a run. A plan with any
+   *  leaf that is not a file scan gets a fresh random key (never restores). */
+  def inputKey(corpus: DataFrame, cfg: DedupConfig): String = {
+    val plan = corpus.queryExecution.analyzed
+    val fileScan = plan.collectLeaves().forall {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
+    }
+    if (!fileScan) return java.util.UUID.randomUUID().toString
+    val conf = corpus.sparkSession.sparkContext.hadoopConfiguration
+    val files = corpus.inputFiles.sorted.map { f =>
+      val p = new Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f ${st.getLen} ${st.getModificationTime}"
+    }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (Seq(cfg.toString, plan.canonicalized.toString) ++ files).foreach { s =>
+      md.update(s.getBytes(UTF_8)); md.update(0.toByte)
+    }
+    md.digest().map("%02x".format(_)).mkString
   }
 }

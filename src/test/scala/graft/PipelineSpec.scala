@@ -13,6 +13,23 @@ class PipelineSpec extends AnyFunSuite {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_pipe").toString
 
+  /** `Corpus.synthetic(spark, nDocs, seed)` written as parquet to `path`
+   *  (overwriting it); returns `path`. */
+  private def writeCorpus(path: String, nDocs: Int, seed: Long): String = {
+    Corpus.synthetic(spark, nDocs, seed).write.mode("overwrite").parquet(path)
+    path
+  }
+
+  private def resumedOf(res: Pipeline.Result): Map[String, Long] =
+    res.metrics.collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows"))
+      .collect { case (s, n) if s.endsWith(".resumed") => s.stripSuffix(".resumed") -> n }.toMap
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private val materialized =
+    Set("snapshot", "signatures", "candidates", "near_pairs", "substring_pairs", "clusters")
+
   test("stage() computes once and restores afterwards") {
     import spark.implicits._
     val ctx = RunContext(spark, tmpDir())
@@ -22,7 +39,49 @@ class PipelineSpec extends AnyFunSuite {
     val second = once().collect()
     assert(computes === 1)
     assert(first.toSeq === second.toSeq)
-    assert(ctx.completed("s1"))
+    assert(new java.io.File(s"${ctx.runDir}/s1/_SUCCESS").exists())
+  }
+
+  test("stage() restores only under its own key; a marker without a manifest recomputes") {
+    import spark.implicits._
+    val ctx = RunContext(spark, tmpDir())
+    var computes = 0
+    def run(key: String) = ctx.stage("s1", key = key) { computes += 1; Seq((1L, key)).toDF("id", "v") }
+    assert(run("a").collect().toSeq === Seq(org.apache.spark.sql.Row(1L, "a")))
+    assert(run("b").collect().toSeq === Seq(org.apache.spark.sql.Row(1L, "b")))
+    assert(computes === 2)
+    run("b")
+    assert(computes === 2)
+    // a kill between the parquet commit and the manifest write: recompute
+    assert(new java.io.File(s"${ctx.runDir}/s1/_MANIFEST").delete())
+    run("b")
+    assert(computes === 3)
+    val resumed = ctx.metrics.toDF().where(col("stage") === "s1.resumed")
+      .collect().map(_.getAs[Long]("rows")).toSeq
+    assert(resumed === Seq(0L, 0L, 1L, 0L))
+  }
+
+  test("inputKey: equal for two reads of one parquet dir, never reused for a non-file corpus") {
+    import spark.implicits._
+    val cfg = graft.model.DedupConfig()
+    val p = writeCorpus(s"${tmpDir()}/corpus", 50, 3L)
+    val k = RunContext.inputKey(spark.read.parquet(p), cfg)
+    assert(RunContext.inputKey(spark.read.parquet(p), cfg) === k)
+    assert(RunContext.inputKey(spark.read.parquet(p), cfg.copy(shingleN = 4)) !== k)
+    assert(RunContext.inputKey(spark.read.parquet(p).where(col("lang") === "py"), cfg) !== k)
+    // same path, new files: the file list and lengths are part of the key
+    writeCorpus(p, 50, 4L)
+    assert(RunContext.inputKey(spark.read.parquet(p), cfg) !== k)
+    // a generated corpus has no durable identity: a fresh key every time,
+    // so a stage keyed by it never restores
+    val local = Corpus.synthetic(spark, 20, 3L).toDF()
+    assert(RunContext.inputKey(local, cfg) !== RunContext.inputKey(local, cfg))
+    val ctx = RunContext(spark, tmpDir())
+    var computes = 0
+    (1 to 2).foreach { _ =>
+      ctx.stage("s1", key = RunContext.inputKey(local, cfg)) { computes += 1; Seq(1L).toDF("id") }
+    }
+    assert(computes === 2)
   }
 
   test("full pipeline produces a consistent cluster table with representatives") {
@@ -52,36 +111,58 @@ class PipelineSpec extends AnyFunSuite {
 
   test("resume: a completed run restores every stage without recompute") {
     val dir = tmpDir()
-    val corpus = Corpus.synthetic(spark, 200, seed = 7L).toDF()
-    val r1 = Pipeline.run(RunContext(spark, dir), corpus)
-    val want = r1.clusters.collect().map(_.toString).sorted
+    val input = writeCorpus(s"${tmpDir()}/corpus", 200, 7L)
+    val r1 = Pipeline.run(RunContext(spark, dir), spark.read.parquet(input))
+    val want = sortedRows(r1.clusters)
 
-    // Second run over the SAME runDir but a poisoned input: if any stage
-    // recomputed, results would differ / explode. They must restore instead.
-    import spark.implicits._
-    val poisoned = Seq.empty[graft.model.FileRow].toDF()
-    val r2 = Pipeline.run(RunContext(spark, dir), poisoned)
-    val got = r2.clusters.collect().map(_.toString).sorted
-    assert(got.toSeq === want.toSeq)
+    // Second run over the SAME runDir and the same input files, read anew:
+    // every materialized stage restores instead of recomputing.
+    val r2 = Pipeline.run(RunContext(spark, dir), spark.read.parquet(input))
+    assert(resumedOf(r2) === materialized.map(_ -> 1L).toMap)
+    assert(sortedRows(r2.clusters) === want)
+  }
+
+  test("stale input: a changed corpus or config in a reused run dir equals a fresh-dir run") {
+    val dir = tmpDir()
+    val input = writeCorpus(s"${tmpDir()}/corpus", 200, 7L)
+    Pipeline.run(RunContext(spark, dir), spark.read.parquet(input)).clusters.count()
+    // the cluster table and the near pairs a run in `runDir` leaves behind
+    def outputs(runDir: String, cfg: graft.model.DedupConfig) = {
+      val res = Pipeline.run(RunContext(spark, runDir), spark.read.parquet(input), cfg)
+      (sortedRows(res.clusters), sortedRows(spark.read.parquet(s"$runDir/near_pairs")), resumedOf(res))
+    }
+
+    // same path, same row count, other content
+    writeCorpus(input, 200, 8L)
+    val (clusters, pairs, resumed) = outputs(dir, graft.model.DedupConfig())
+    val (freshClusters, freshPairs, _) = outputs(tmpDir(), graft.model.DedupConfig())
+    assert(clusters === freshClusters)
+    assert(pairs === freshPairs)
+    assert(resumed === materialized.map(_ -> 0L).toMap)
+
+    // same input, stricter config: some near pairs fall under the threshold
+    val stricter = graft.model.DedupConfig(jaccardThreshold = 0.9)
+    val (clusters2, pairs2, resumed2) = outputs(dir, stricter)
+    val (freshClusters2, freshPairs2, _) = outputs(tmpDir(), stricter)
+    assert(clusters2 === freshClusters2)
+    assert(pairs2 === freshPairs2 && pairs2.size < pairs.size)
+    assert(resumed2 === materialized.map(_ -> 0L).toMap)
   }
 
   test("partial resume: deleting a late stage recomputes only that stage") {
     val dir = tmpDir()
-    val corpus = Corpus.synthetic(spark, 200, seed = 8L).toDF()
+    val corpus = spark.read.parquet(writeCorpus(s"${tmpDir()}/corpus", 200, 8L))
     val r1 = Pipeline.run(RunContext(spark, dir), corpus)
-    val want = r1.clusters.collect().map(_.toString).sorted
+    val want = sortedRows(r1.clusters)
 
     // wipe the final stage; upstream stages stay checkpointed
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/clusters"), true)
-    val ctx2 = RunContext(spark, dir)
-    assert(!ctx2.completed("clusters") && ctx2.completed("near_pairs"))
-    val r2 = Pipeline.run(ctx2, corpus)
-    assert(r2.clusters.collect().map(_.toString).sorted.toSeq === want.toSeq)
-    val resumed = r2.metrics.collect()
-      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("rows")).toMap
-    assert(resumed("near_pairs.resumed") === 1L)
-    assert(resumed("clusters.resumed") === 0L)
+    assert(!new java.io.File(s"$dir/clusters/_SUCCESS").exists())
+    assert(new java.io.File(s"$dir/near_pairs/_SUCCESS").exists())
+    val r2 = Pipeline.run(RunContext(spark, dir), corpus)
+    assert(sortedRows(r2.clusters) === want)
+    assert(resumedOf(r2) === (materialized - "clusters").map(_ -> 1L).toMap + ("clusters" -> 0L))
   }
 
   test("per-partition lineage metrics are emitted for every computed stage") {
