@@ -14,8 +14,8 @@ import graft.runtime.RunContext
  * every stage checkpointed through [[graft.runtime.RunContext]] (resumable)
  * and instrumented with per-partition lineage metrics. Every materialized
  * stage and band range restores under one key, [[RunContext.inputKey]] of
- * the corpus and config, so a run dir reused over a changed corpus or
- * config recomputes instead of restoring.
+ * the code version, corpus and config, so a run dir reused over changed
+ * code, corpus or config recomputes instead of restoring.
  *
  * Stage graph (each node a materialized parquet stage):
  *
@@ -83,11 +83,9 @@ object Pipeline {
     // ids (the 4→16-core profile put the scaling loss squarely on shuffle
     // bytes through the shared memory system).
     val nCorpusRows = corpus.count() // parquet metadata count — no scan
-    val deduped =
-      if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
-      else NearDup.dedupedByContent(corpusK)
     val uniq = ctx.stage("uniq", materialize = false) {
-      deduped.select(xxhash64(col("rkey")).as("id"),
+      (if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
+       else NearDup.dedupedByContent(corpusK)).select(xxhash64(col("rkey")).as("id"),
         NearDup.shingleCol(col("content"), cfg.shingleN).as("shingles"),
         Substring.rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask).as("grams"))
     }
@@ -146,36 +144,25 @@ object Pipeline {
       // write+read barrier exceeds the persist-subtree overhead it removes.
       val dropsG = ctx.spark.sparkContext.longAccumulator("graft.substring.dropped_grams")
       val out = prunedStage("substring_pairs") {
-        if (cfg.substringViaSuffixArray) {
-          // Exact prefix-doubling pass: class equality IS byte equality, so
-          // no verify join is needed — a pair here is already a true shared-
-          // window pair (SuffixArraySpec proves parity with the verified
-          // rolling path). Same content-dedup gate as the uniq stage.
-          (graft.operators.SuffixArray.windowClassPairs(
-            deduped.select(xxhash64(col("rkey")).as("id"), col("content")),
-            cfg.gramWidth, cfg.maxBucketSize, n => dropsG.add(n)), () => ())
-        }
-        else {
-          // Same singleton prune as the candidates stage, over the sampled
-          // gram fingerprints (the 4-thread arm's critical-path sort). Row
-          // count estimated (code-like docs ≈ 700 chars at 1/64 sampling ⇒
-          // ~10 grams/doc — measured 22.5M grams at 2.3M reps); the estimate
-          // only moves the sketch's false-keep rate, never correctness, but
-          // OVERsizing it quadruples the bitset-merge bytes for nothing.
-          // An UNDERsized sketch (longer-doc corpus blowing past the
-          // estimate) self-corrects: the prune reads the marked-slot ratio
-          // off the finished sketch and skips the filter when saturated
-          // (round-4 ADVICE), so the worst case is one wasted scan, never
-          // a useless filter pass on top of it.
-          val gramDf = uniq.select(col("id"), explode(col("grams")).as("gram"))
-          val (gramsPruned, release) =
-            graft.functions.SeenTwice.pruneAuto(gramDf, "gram", nCorpusRows * 10, cfg)
-          (Substring.verifiedSubstringPairs(
-            Substring.gramPairs(gramsPruned,
-              cfg.minSharedGrams, cfg.maxBucketSize, n => dropsG.add(n)),
-            corpusK.select(xxhash64(col("rkey")).as("rkey"), col("content")), cfg.gramWidth,
-            register = Some(ctx.registerPersist)), release)
-        }
+        // Same singleton prune as the candidates stage, over the sampled
+        // gram fingerprints (the 4-thread arm's critical-path sort). Row
+        // count estimated (code-like docs ≈ 700 chars at 1/64 sampling ⇒
+        // ~10 grams/doc — measured 22.5M grams at 2.3M reps); the estimate
+        // only moves the sketch's false-keep rate, never correctness, but
+        // OVERsizing it quadruples the bitset-merge bytes for nothing.
+        // An UNDERsized sketch (longer-doc corpus blowing past the
+        // estimate) self-corrects: the prune reads the marked-slot ratio
+        // off the finished sketch and skips the filter when saturated
+        // (round-4 ADVICE), so the worst case is one wasted scan, never
+        // a useless filter pass on top of it.
+        val gramDf = uniq.select(col("id"), explode(col("grams")).as("gram"))
+        val (gramsPruned, release) =
+          graft.functions.SeenTwice.pruneAuto(gramDf, "gram", nCorpusRows * 10, cfg)
+        (Substring.verifiedSubstringPairs(
+          Substring.gramPairs(gramsPruned,
+            cfg.minSharedGrams, cfg.maxBucketSize, n => dropsG.add(n)),
+          corpusK.select(xxhash64(col("rkey")).as("rkey"), col("content")), cfg.gramWidth,
+          register = Some(ctx.registerPersist)), release)
       }
       ctx.metrics.record("substring_pairs.dropped_gram_rows", dropsG.value)
       if (dropsG.value > 0)

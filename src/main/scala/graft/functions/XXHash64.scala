@@ -1,99 +1,26 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.unsafe.Platform
+
 /**
- * Pure-Scala XXH64 (public algorithm, xxhash.com spec). The reference uses
- * xxh3_64 (hash.rs:9-13, hash.rs:25-28) purely as a cheap 64-bit content-group
- * prefilter before the sha256 confirm step (scanner.rs:108-138). Exact xxh3
- * bit-parity is not load-bearing — any strong 64-bit hash fills the role, and
- * our authoritative group id is the sha256 hex (SURVEY.md §2.3 A4). We use
- * XXH64 because it is (a) the same public hash family, (b) implementable
- * bit-exactly and verifiable in-suite against Spark's built-in `xxhash64`
- * (which is XXH64 with seed 42 over UTF-8 bytes), keeping driver-side and
- * executor-side hashing provably identical.
+ * XXH64 (public algorithm, xxhash.com spec), delegated to Spark's own
+ * implementation — the one behind the SQL `xxhash64` function — so
+ * driver-side and executor-side hashing are identical by construction. The
+ * reference uses xxh3_64 (hash.rs:9-13, hash.rs:25-28) purely as a cheap
+ * 64-bit content-group prefilter before the sha256 confirm step
+ * (scanner.rs:108-138). Exact xxh3 bit-parity is not load-bearing — any
+ * strong 64-bit hash fills the role, and our authoritative group id is the
+ * sha256 hex (SURVEY.md §2.3 A4).
  *
  * Used driver/executor-side for: shingle hashing, LSH band hashing, rolling
  * fingerprints, deterministic pseudo-random hyperplanes.
  */
 object XXHash64 {
-  private final val P1 = 0x9E3779B185EBCA87L
-  private final val P2 = 0xC2B2AE3D27D4EB4FL
-  private final val P3 = 0x165667B19E3779F9L
-  private final val P4 = 0x85EBCA77C2B2AE63L
-  private final val P5 = 0x27D4EB2F165667C5L
-
-  @inline private def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
-
-  @inline private def readLong(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) |
-      ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24) |
-      ((b(i + 4) & 0xffL) << 32) |
-      ((b(i + 5) & 0xffL) << 40) |
-      ((b(i + 6) & 0xffL) << 48) |
-      ((b(i + 7) & 0xffL) << 56)
-
-  @inline private def readInt(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) |
-      ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) |
-      ((b(i + 3) & 0xffL) << 24)
-
-  @inline private def round(acc: Long, lane: Long): Long =
-    rotl(acc + lane * P2, 31) * P1
-
-  @inline private def mergeRound(h: Long, lane: Long): Long =
-    (h ^ round(0L, lane)) * P1 + P4
 
   /** XXH64 of `bytes[from, until)` with `seed`. */
-  def hash(bytes: Array[Byte], from: Int, until: Int, seed: Long): Long = {
-    val len = until - from
-    var i = from
-    var h: Long = 0L
-    if (len >= 32) {
-      var a1 = seed + P1 + P2
-      var a2 = seed + P2
-      var a3 = seed
-      var a4 = seed - P1
-      val limit = until - 32
-      while (i <= limit) {
-        a1 = round(a1, readLong(bytes, i))
-        a2 = round(a2, readLong(bytes, i + 8))
-        a3 = round(a3, readLong(bytes, i + 16))
-        a4 = round(a4, readLong(bytes, i + 24))
-        i += 32
-      }
-      h = rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
-      h = mergeRound(h, a1)
-      h = mergeRound(h, a2)
-      h = mergeRound(h, a3)
-      h = mergeRound(h, a4)
-    } else {
-      h = seed + P5
-    }
-    h += len.toLong
-    while (i + 8 <= until) {
-      h ^= round(0L, readLong(bytes, i))
-      h = rotl(h, 27) * P1 + P4
-      i += 8
-    }
-    if (i + 4 <= until) {
-      h ^= readInt(bytes, i) * P1
-      h = rotl(h, 23) * P2 + P3
-      i += 4
-    }
-    while (i < until) {
-      h ^= (bytes(i) & 0xffL) * P5
-      h = rotl(h, 11) * P1
-      i += 1
-    }
-    h ^= h >>> 33
-    h *= P2
-    h ^= h >>> 29
-    h *= P3
-    h ^= h >>> 32
-    h
-  }
+  def hash(bytes: Array[Byte], from: Int, until: Int, seed: Long): Long =
+    XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + from, until - from, seed)
 
   def hash(bytes: Array[Byte], seed: Long): Long = hash(bytes, 0, bytes.length, seed)
 
@@ -103,15 +30,5 @@ object XXHash64 {
 
   /** Hash of a single long value (little-endian 8 bytes), used for cheap
    *  derived permutation seeds and band mixing. */
-  def hashLong(v: Long, seed: Long): Long = {
-    var h = seed + P5 + 8L
-    h ^= round(0L, v)
-    h = rotl(h, 27) * P1 + P4
-    h ^= h >>> 33
-    h *= P2
-    h ^= h >>> 29
-    h *= P3
-    h ^= h >>> 32
-    h
-  }
+  def hashLong(v: Long, seed: Long): Long = XXH64.hashLong(v, seed)
 }

@@ -64,7 +64,6 @@ case class ClusterRow(
  *  is 1.0 minus measurement noise (north_rule: recall ≥ 0.99). */
 case class DedupConfig(
     shingleN: Int = 5,
-    minhashK: Int = 128,
     bands: Int = 64,
     rowsPerBand: Int = 2,
     jaccardThreshold: Double = 0.6,
@@ -84,19 +83,11 @@ case class DedupConfig(
      *  broadcast — the practical ceiling of a comfortable executor
      *  broadcast, and covers the 3M-row bench corpus. */
     repBroadcastMaxRows: Long = 10000000L,
-    /** Candidate-pair count at or under which the near-dup verify
-     *  (`NearDup.verifyCandidatesById`) broadcasts the pair-member key set
-     *  for the semi-filter (2·pairs ids). Above it the semi-join falls back
-     *  to a shuffle — at 10⁹-scale candidate volumes the member set is
-     *  itself shuffle-sized. */
-    verifyKeyBroadcastMaxPairs: Long = 5000000L,
     quick: Boolean = false,
-    /** Route the long-substring pass through the EXACT prefix-doubling
-     *  suffix pass ([[graft.operators.SuffixArray]]) instead of the sampled
-     *  rolling-fingerprint path — no hashing in the pair decision, at
-     *  O(total content chars) suffix-table cost. Off by default (the
-     *  sampled path is the benchmark scale path); SuffixArraySpec proves
-     *  pair-set equality on the planted fixtures. */
+    /** Always `false`. The suffix-array route through the pipeline was
+     *  removed: the rolling path with `sampleMask = 0, minSharedGrams = 1`
+     *  computes the same "≥ 1 shared window" pair set, and q35 runs
+     *  [[graft.operators.SuffixArray]] directly. */
     substringViaSuffixArray: Boolean = false,
     /** Prune provably-singleton LSH/gram buckets BEFORE their co-locating
      *  exchange ([[graft.functions.SeenTwice]] bitset sketch — exact: false
@@ -117,7 +108,10 @@ case class DedupConfig(
      *  sort it shrinks is big (measured: 158M band rows sort 34-65 s at 16
      *  threads, pruned 14-22 s incl. sketch; 22M gram rows sort ~11 s —
      *  the sketch's ~6 s scan tax nets negative there). */
-    pruneMinRows: Long = 1L << 26,
-    seed: Long = 42L) {
-  require(minhashK == bands * rowsPerBand, "minhashK must equal bands*rowsPerBand")
+    pruneMinRows: Long = 1L << 26) {
+  require(!substringViaSuffixArray,
+    "substringViaSuffixArray was removed: use sampleMask = 0, minSharedGrams = 1 for exact shared-window pairs")
+
+  /** MinHash signature length: one value per band row. */
+  def minhashK: Int = bands * rowsPerBand
 }

@@ -329,44 +329,22 @@ object NearDup {
   /** Exact-Jaccard verification in id space: candidates are `(a_id, b_id)`
    *  from [[candidateIdPairs]], shingle sets are keyed by `id` — no string
    *  key ever enters an exchange. Output
-   *  `(a_id, b_id, n_intersect, n_union, jaccard)`. Persist scoping per
-   *  [[verifiedPairs]]. */
-  def verifyCandidatesById(cand0: DataFrame, sh0: DataFrame, cfg: DedupConfig,
-                           register: Option[DataFrame => Unit] = None): DataFrame = {
-    val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    register.foreach(_(cand))
-    def body: DataFrame = verifyByIdBody(cand, sh0, cfg)
-    if (register.isDefined) body
-    else try body.localCheckpoint() finally cand.unpersist(false)
-  }
+   *  `(a_id, b_id, n_intersect, n_union, jaccard)`, keeping pairs at or
+   *  above `cfg.jaccardThreshold`. Member fetch and persist scoping are
+   *  [[PairVerify.verify]]'s. */
+  def verifyCandidatesById(cand: DataFrame, sh: DataFrame, cfg: DedupConfig,
+                           register: Option[DataFrame => Unit] = None): DataFrame =
+    PairVerify.verify(cand, "a_id", "b_id", sh.select("id", "shingles", "n_shingles"), "id",
+      register)(jaccardAtLeast(cfg.jaccardThreshold))
 
-  private def verifyByIdBody(cand: DataFrame, sh0: DataFrame, cfg: DedupConfig): DataFrame = {
-    val keys = cand.select(col("a_id").as("id"))
-      .union(cand.select(col("b_id").as("id"))).distinct()
-    // Only candidate MEMBERS' shingle sets are needed — semi-filter the
-    // (wide, array-carrying) shingle table down to the candidate id set
-    // before any join, so the verify exchanges carry |members| rows, not the
-    // whole corpus' shingles. Broadcast while the candidate volume fits the
-    // budget (the count is cheap — cand is persisted / a materialized stage);
-    // past it the key set is itself shuffle-sized and a shuffle-hash semi is
-    // the scale path.
-    val keysH = if (cand.count() <= cfg.verifyKeyBroadcastMaxPairs) broadcast(keys)
-    else keys.hint("SHUFFLE_HASH")
-    val sh = sh0.join(keysH, Seq("id"), "left_semi")
-    // SHUFFLE_HASH: sort-merge would SORT the wide shingle-array rows twice;
-    // hashing the (bounded, per-partition) build side is strictly cheaper
-    // here and stays skew-safe under AQE.
-    val shA = sh.hint("SHUFFLE_HASH")
-      .select(col("id").as("a_id"), col("shingles").as("sh_a"), col("n_shingles").as("n_a"))
-    val shB = sh.hint("SHUFFLE_HASH")
-      .select(col("id").as("b_id"), col("shingles").as("sh_b"), col("n_shingles").as("n_b"))
-    cand.join(shA, "a_id").join(shB, "b_id")
-      .withColumn("n_intersect", graft.functions.NativeExprs.longIntersect(col("sh_a"), col("sh_b")))
-      .withColumn("n_union", (col("n_a") + col("n_b") - col("n_intersect")).cast("long"))
+  /** The near-dup exact test over [[PairVerify.verify]]'s joined pairs. */
+  private[graft] def jaccardAtLeast(threshold: Double)(j: DataFrame): DataFrame =
+    j.withColumn("n_intersect",
+        graft.functions.NativeExprs.longIntersect(col("a_shingles"), col("b_shingles")))
+      .withColumn("n_union", (col("a_n_shingles") + col("b_n_shingles") - col("n_intersect")).cast("long"))
       .withColumn("jaccard", col("n_intersect").cast("double") / col("n_union"))
-      .where(col("jaccard") >= cfg.jaccardThreshold)
+      .where(col("jaccard") >= threshold)
       .select("a_id", "b_id", "n_intersect", "n_union", "jaccard")
-  }
 
   /** SimHash over content-distinct representatives, using the md5-derived
    *  token bits ([[Shingles.simhashMd5]]) so an ANSI-SQL oracle can replay

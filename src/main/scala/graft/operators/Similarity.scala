@@ -494,10 +494,7 @@ object Similarity {
       ds.sorted.take(nprobe).map(_._2).toArray
     })
 
-  /** `(vec_id, cell)` IVF index table. */
-  def ivfIndex(embeddings: DataFrame, centroids: Array[Array[Long]]): DataFrame =
-    ivfIndexFromNormed(normQuantized(embeddings), centroids)
-
+  /** `(vec_id, cell)` IVF index table over `normQuantized` vectors. */
   private[graft] def ivfIndexFromNormed(normed: DataFrame,
                                         centroids: Array[Array[Long]]): DataFrame =
     normed.select(col("vec_id"), assignCellUdf(centroids)(col("nq")).as("cell"))

@@ -278,43 +278,17 @@ object Substring {
    * Verification pass: candidate pairs survive only if the two documents
    * *actually* share a `w`-char window, confirmed byte-for-byte — no
    * hash-collision or gram-coincidence edge can reach the cluster stage
-   * (mirror of the LSH path's exact-Jaccard verify). The content fetch is a
-   * pair-key join: only candidate members' content moves, not the corpus.
+   * (mirror of the LSH path's exact-Jaccard verify). `corpusK` holds
+   * `(rkey, content)`; only candidate members' content moves. Member fetch
+   * and persist scoping are [[PairVerify.verify]]'s.
    */
-  def verifiedSubstringPairs(pairs0: DataFrame, corpusK: DataFrame, w: Int,
-                             register: Option[DataFrame => Unit] = None): DataFrame = {
-    // The candidate table is consumed twice (key-set semi + the verify
-    // join): persist it so the gram pipeline upstream executes once, not
-    // twice. Candidates are small (bucket-capped upstream). Persist scoping
-    // mirrors NearDup.verifiedPairs: `register = None` (default) scopes the
-    // persist — eager result, cache released before returning; the pipeline
-    // passes its RunContext registrar and cleans up after the stage commits.
-    val pairs = pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    register.foreach(_(pairs))
-    def body: DataFrame = verifiedBody(pairs, corpusK, w)
-    if (register.isDefined) body
-    else try body.localCheckpoint() finally pairs.unpersist(false)
-  }
+  def verifiedSubstringPairs(pairs: DataFrame, corpusK: DataFrame, w: Int,
+                             register: Option[DataFrame => Unit] = None): DataFrame =
+    PairVerify.verify(pairs, "a_key", "b_key", corpusK.select("rkey", "content"), "rkey",
+      register)(sharedWindow(w, pairs.columns.toIndexedSeq))
 
-  /** Candidate-pair count at or under which the member key set broadcasts. */
-  private val BroadcastMaxPairs = 5000000L
-
-  private def verifiedBody(pairs: DataFrame, corpusK: DataFrame, w: Int): DataFrame = {
-    // Content fetch is restricted to pair MEMBERS before any join: the pair
-    // key set (≤ 2·|pairs|, bounded upstream by the bucket cap) broadcasts
-    // while it fits the budget, so the full corpus' content never enters an
-    // exchange — only candidate members' rows leave the scan. Past the
-    // budget the semi-join shuffles (the 10⁹-scale path).
-    val pk = pairs.select(col("a_key").as("rkey"))
-      .union(pairs.select(col("b_key").as("rkey"))).distinct()
-    val pkH = if (pairs.count() <= BroadcastMaxPairs) broadcast(pk)
-    else pk.hint("SHUFFLE_HASH")
-    val c = corpusK.join(pkH, Seq("rkey"), "left_semi")
-      .select("rkey", "content")
-    val ca = c.select(col("rkey").as("a_key"), col("content").as("_ca"))
-    val cb = c.select(col("rkey").as("b_key"), col("content").as("_cb"))
-    pairs.join(ca, "a_key").join(cb, "b_key")
-      .where(sharedWindowUdf(col("_ca"), col("_cb"), lit(w)))
-      .select(pairs.columns.map(col): _*) // keep the input's column order
-  }
+  /** The substring exact test over [[PairVerify.verify]]'s joined pairs;
+   *  keeps the input pair columns `cols`, in their order. */
+  private[graft] def sharedWindow(w: Int, cols: Seq[String])(j: DataFrame): DataFrame =
+    j.where(sharedWindowUdf(col("a_content"), col("b_content"), lit(w))).select(cols.map(col): _*)
 }

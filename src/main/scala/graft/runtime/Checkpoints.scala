@@ -2,6 +2,8 @@ package graft.runtime
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -16,9 +18,10 @@ import graft.model.DedupConfig
  * restore rule, [[RunContext.materialize]]: a dir is read back only when its
  * `_SUCCESS` marker exists and its `_MANIFEST` holds exactly the caller's
  * key; otherwise it is recomputed. The pipeline's key,
- * [[RunContext.inputKey]], covers the config, the corpus plan and its input
- * files, so a killed run resumes from its last completed stage while a run
- * dir reused over a changed corpus or config recomputes. A corpus with any
+ * [[RunContext.inputKey]], covers the engine's code version, the config, the
+ * corpus plan and its input files, so a killed run resumes from its last
+ * completed stage while a run dir reused over changed code, corpus or
+ * config recomputes. A corpus with any
  * input that is not a file scan (a local relation, a generated range, an
  * RDD) gets a fresh random key and never restores. (Parquet dirs are the
  * offline stand-in for Iceberg table versions — SURVEY.md §7.)
@@ -116,12 +119,31 @@ object RunContext {
     (spark.read.parquet(path), restored)
   }
 
-  /** The run key of `corpus` under `cfg`: sha256 over the whole config, the
-   *  canonicalized analyzed plan and the sorted `(path, length, mtime)` of
-   *  the corpus' input files. Every stage is a deterministic function of
-   *  (input, config), so one key covers all stages of a run. A plan with any
-   *  leaf that is not a file scan gets a fresh random key (never restores). */
-  def inputKey(corpus: DataFrame, cfg: DedupConfig): String = {
+  /** The engine's code version: sha256 over the sorted class files under
+   *  the code source of [[graft.Pipeline]] (each with its relative path),
+   *  or over the jar when the engine runs from one. Computed once per JVM. */
+  lazy val codeVersion: String = {
+    val root = java.nio.file.Paths.get(
+      graft.Pipeline.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    if (java.nio.file.Files.isDirectory(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      val classes = try walk.iterator().asScala.filter(_.toString.endsWith(".class"))
+        .map(p => root.relativize(p).toString -> p).toVector.sortBy(_._1) finally walk.close()
+      classes.foreach { case (rel, p) =>
+        md.update(rel.getBytes(UTF_8)); md.update(java.nio.file.Files.readAllBytes(p))
+      }
+    } else md.update(java.nio.file.Files.readAllBytes(root))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** The run key of `corpus` under `cfg`: sha256 over the code version, the
+   *  whole config, the canonicalized analyzed plan and the sorted
+   *  `(path, length, mtime)` of the corpus' input files. Every stage is a
+   *  deterministic function of (code, input, config), so one key covers all
+   *  stages of a run. A plan with any leaf that is not a file scan gets a
+   *  fresh random key (never restores). */
+  def inputKey(corpus: DataFrame, cfg: DedupConfig, code: String = codeVersion): String = {
     val plan = corpus.queryExecution.analyzed
     val fileScan = plan.collectLeaves().forall {
       case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
@@ -135,7 +157,7 @@ object RunContext {
       s"$f ${st.getLen} ${st.getModificationTime}"
     }
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    (Seq(cfg.toString, plan.canonicalized.toString) ++ files).foreach { s =>
+    (Seq(code, cfg.toString, plan.canonicalized.toString) ++ files).foreach { s =>
       md.update(s.getBytes(UTF_8)); md.update(0.toByte)
     }
     md.digest().map("%02x".format(_)).mkString

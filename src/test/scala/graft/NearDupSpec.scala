@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.functions.{Shingles, XXHash64}
 import graft.model.DedupConfig
-import graft.operators.{ExactDedup, NearDup}
+import graft.operators.{ExactDedup, NearDup, PairVerify, Substring}
 
 /** Near-dup stage vs a brute-force O(n²) Jaccard oracle (north_rule:
  *  dup-pair recall ≥ 0.99 under identical shingle/signature config). */
@@ -91,18 +91,27 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("verify key-set semi: broadcast and shuffle gate paths agree") {
-    import org.apache.spark.sql.functions._
-    val df = NearDup.dedupedByContentBroadcast(
-      ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey))
+    // Both callers of the one pair-verify operator, the near-dup (Jaccard)
+    // and the substring (shared window) verify, through its shuffle-hash
+    // semi-join (bound 0) against their public broadcast-gated entry points.
+    val cK = ExactDedup.validRows(corpus.toDF()).withColumn("rkey", ExactDedup.rkey)
+    val df = NearDup.dedupedByContentBroadcast(cK)
       .select(xxhash64(col("rkey")).as("id"),
         NearDup.shingleCol(col("content"), cfg.shingleN).as("shingles"))
       .withColumn("n_shingles", size(col("shingles")))
       .where(col("n_shingles") > 0)
     val sigs = NearDup.signaturesById(df, cfg)
     val cand = NearDup.candidateIdPairs(NearDup.bandedById(sigs, cfg), cfg)
-    def run(c: graft.model.DedupConfig) =
-      NearDup.verifyCandidatesById(cand, df, c).collect().map(_.toString).sorted.toSeq
-    assert(run(cfg) === run(cfg.copy(verifyKeyBroadcastMaxPairs = 0L)))
+    val sub = Substring.gramPairs(Substring.rollingGramTableUniq(cK, cfg.copy(sampleMask = 0L)),
+      minShared = 1, cap = Int.MaxValue)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    val nearShuffled = rows(PairVerify.verify(cand, "a_id", "b_id", df, "id", None,
+      maxBroadcastPairs = 0L)(NearDup.jaccardAtLeast(cfg.jaccardThreshold)))
+    val subShuffled = rows(PairVerify.verify(sub, "a_key", "b_key", cK.select("rkey", "content"),
+      "rkey", None, maxBroadcastPairs = 0L)(Substring.sharedWindow(cfg.gramWidth, sub.columns.toIndexedSeq)))
+    assert(nearShuffled === rows(NearDup.verifyCandidatesById(cand, df, cfg)))
+    assert(subShuffled === rows(Substring.verifiedSubstringPairs(sub, cK, cfg.gramWidth)))
+    assert(nearShuffled.nonEmpty && subShuffled.nonEmpty)
   }
 
   test("in-stream drop accounting: onDrop fires once per capped run with its length") {

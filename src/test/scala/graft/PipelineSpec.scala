@@ -149,6 +149,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(resumed2 === materialized.map(_ -> 0L).toMap)
   }
 
+  test("code version: manifests written under another code version recompute every stage") {
+    val dir = tmpDir()
+    val input = writeCorpus(s"${tmpDir()}/corpus", 200, 7L)
+    val cfg = graft.model.DedupConfig()
+    assert(RunContext.codeVersion.matches("[0-9a-f]{64}"))
+    // Stand-in for another code version's output over the same corpus and
+    // config: stage outputs that differ from this version's (computed under
+    // a stricter threshold), under the manifests that version would write.
+    Pipeline.run(RunContext(spark, dir), spark.read.parquet(input), cfg.copy(jaccardThreshold = 0.9))
+      .clusters.count()
+    val staleKey = RunContext.inputKey(spark.read.parquet(input), cfg, code = "another version")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    materialized.foreach { s =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/$s/_MANIFEST"), true)
+      try out.write(staleKey.getBytes("UTF-8")) finally out.close()
+    }
+    val stalePairs = sortedRows(spark.read.parquet(s"$dir/near_pairs"))
+
+    val res = Pipeline.run(RunContext(spark, dir), spark.read.parquet(input), cfg)
+    val freshDir = tmpDir()
+    val fresh = Pipeline.run(RunContext(spark, freshDir), spark.read.parquet(input), cfg)
+    val freshPairs = sortedRows(spark.read.parquet(s"$freshDir/near_pairs"))
+    assert(stalePairs !== freshPairs)
+    assert(resumedOf(res) === materialized.map(_ -> 0L).toMap)
+    assert(sortedRows(res.clusters) === sortedRows(fresh.clusters))
+    assert(sortedRows(spark.read.parquet(s"$dir/near_pairs")) === freshPairs)
+  }
+
   test("partial resume: deleting a late stage recomputes only that stage") {
     val dir = tmpDir()
     val corpus = spark.read.parquet(writeCorpus(s"${tmpDir()}/corpus", 200, 8L))

@@ -7,9 +7,9 @@ import graft.corpus.Corpus
 import graft.model.DedupConfig
 import graft.operators.{ExactDedup, NearDup, Substring, SuffixArray}
 
-/** Prefix-doubling suffix pass: exact shared-window pairs with no hashing —
- *  must equal the byte-verified rolling-fingerprint path (mask=0) on every
- *  fixture, drop-in behind the Substring interface (config flag). */
+/** Prefix-doubling suffix pass (q35): exact shared-window pairs with no
+ *  hashing — must equal the byte-verified rolling-fingerprint path (mask=0)
+ *  on every fixture. */
 class SuffixArraySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val cfg = DedupConfig()
@@ -71,25 +71,7 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(dropped.value > 0L, "the drop must be reported, never silent")
   }
 
-  test("pipeline flag routes the substring stage through the suffix pass — clusters unchanged") {
-    val corpus = Corpus.synthetic(spark, 250, seed = 31L).toDF()
-    def clusters(c: DedupConfig, tag: String): Set[(String, String)] = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_sa_$tag").toString
-      val ctx = graft.runtime.RunContext(spark, tmp)
-      val out = Pipeline.run(ctx, corpus, c).clusters
-        .select("rkey", "rep_key").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toSet
-      ctx.cleanup()
-      out
-    }
-    // NOTE: sampled grams (mask=63, minShared=2) are a RECALL-reduced
-    // variant; parity of the full cluster table needs both sides on the
-    // exhaustive setting. mask=0 + minShared=1 makes the rolling stage
-    // compute exactly "≥1 shared window" — the suffix pass's definition.
-    val exhaustive = cfg.copy(sampleMask = 0L, minSharedGrams = 1)
-    val viaRolling = clusters(exhaustive, "roll")
-    val viaSuffix = clusters(exhaustive.copy(substringViaSuffixArray = true), "sa")
-    assert(viaSuffix === viaRolling)
-    assert(viaRolling.nonEmpty)
+  test("the pipeline has no suffix-array route: DedupConfig accepts only substringViaSuffixArray = false") {
+    intercept[IllegalArgumentException](cfg.copy(substringViaSuffixArray = true))
   }
 }
