@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.HexCase
+
 /**
  * Stage 5 — snapshot validation + apply: the Spark analog of the reference's
  * `validate` and `apply` commands (SURVEY.md §3.2/§3.3).
@@ -103,13 +105,19 @@ object Snapshots {
    *  - c='f' → all delete (2nd char ≤ '7'), or all delete + one symlink
    *            ⇒ no_keep_in_group unless allowFullDeletion ∧ all-delete
    *
+   * The 'd' corruption uppercases the hex id with [[HexCase.upper]], an
+   * ASCII `translate`: Spark's `upper` would run ICU case mapping, whose
+   * first use in a JVM costs a ~2 s class initialisation on the review path.
+   *
    * Output: `(group_id, rkey, action, symlink_source)`.
    */
   def editedSnapshot(hashed: DataFrame): DataFrame = {
     val w = Window.partitionBy("group_id")
-    val snap = ExactDedup.snapshot(hashed)
+    val snap = hashed
       .withColumn("keeper", min(col("rkey")).over(w))
       .withColumn("maxk", max(col("rkey")).over(w))
+      .withColumn("nm", count(lit(1)).over(w))
+      .where(col("nm") > 1)
       .crossJoin(broadcast(donors(hashed)))
     val c = substring(col("group_id"), 1, 1)
     val c2 = substring(col("group_id"), 2, 1)
@@ -130,7 +138,7 @@ object Snapshots {
     val base = snap
       .where(!(c === "0" && !isK))
       .select(
-        when(c === "d", upper(col("group_id"))).otherwise(col("group_id")).as("group_id"),
+        when(c === "d", HexCase.upper(col("group_id"))).otherwise(col("group_id")).as("group_id"),
         col("rkey"), act.as("action"), src.as("symlink_source"))
     val ghosts = snap.where(c === "e" && isK)
       .select(col("group_id"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.HexCase
+
 /**
  * Optional parity serializer for the reference's snapshot *text format*
  * (textformat.rs): the human-editable wire form of a snapshot —
@@ -174,7 +176,7 @@ object Textformat {
           .otherwise(raise_error(concat(lit("unparseable line: "), col("line")))))
       .withColumn("gid",
         last(when(col("kind") === "hash",
-          lower(regexp_extract(col("line"), """^\[([0-9a-fA-F]+)\]$""", 1))),
+          HexCase.lower(regexp_extract(col("line"), """^\[([0-9a-fA-F]+)\]$""", 1))),
           ignoreNulls = true).over(w))
     classified.where(col("kind") === "path")
       .select(

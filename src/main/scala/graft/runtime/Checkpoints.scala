@@ -64,11 +64,14 @@ class RunContext(val spark: SparkSession, val runDir: String, val runId: String)
       return df
     }
     val t0 = System.nanoTime()
-    val (df, resumed) = RunContext.materialize(spark, s"$runDir/$name", key) {
-      // thread-local: concurrent branch stages keep their own labels
-      spark.sparkContext.setJobDescription(s"graft:$name")
-      metrics.instrument(compute, name)
-    }
+    // thread-local: concurrent branch stages keep their own labels, and the
+    // caller's label comes back once the stage is written or restored
+    val sc = spark.sparkContext
+    val callerLabel = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft:$name")
+    val (df, resumed) =
+      try RunContext.materialize(spark, s"$runDir/$name", key)(metrics.instrument(compute, name))
+      finally sc.setJobDescription(callerLabel)
     metrics.record(s"$name.resumed", if (resumed) 1L else 0L)
     if (!resumed)
       System.err.println(f"[graft.stage] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -113,12 +113,10 @@ object DedupStream {
               // running min (the former sort was an O(n log n) + full-copy
               // tax paid per group for an output whose row SET is
               // order-insensitive). The buffer is bounded by the micro-batch
-              // (`maxFilesPerTrigger` under AvailableNow / ProcessingTime
-              // triggers), not by group size across time. CAVEAT (round-4
-              // ADVICE): the retention catch-up path runs `Trigger.Once`,
-              // which drains the WHOLE backlog in one micro-batch — there
-              // the bound is the backlog itself; see runAvailableNow's
-              // backlog guard note.
+              // (`maxFilesPerTrigger` on the source), not by group size
+              // across time. CAVEAT: `readFiles` sets no such bound, so a
+              // catch-up run drains the WHOLE backlog in one micro-batch —
+              // there the bound is the backlog itself (see catchUp).
               // Running min under UTF-8 BINARY order — the batch snapshot
               // elects via Spark's min(rkey) (binary collation); Java's
               // String '<' is UTF-16 code-unit order, which diverges for
@@ -156,39 +154,45 @@ object DedupStream {
         org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.StringType))))
       .parquet(dir)
 
-  /** One catch-up micro-batch run into a durable parquet sink (the
-   *  memory sink cannot recover a checkpoint). Re-running with the same
-   *  checkpoint after new files land processes ONLY the new files against
-   *  the retained keeper state — the incremental dedup story.
-   *
-   *  Trigger choice: with `retentionMs == 0` this is `AvailableNow` (drain
-   *  everything, stop). With retention armed it is a SINGLE batch
-   *  (`Trigger.Once`): AvailableNow keeps scheduling empty micro-batches
-   *  while any group holds a pending `ProcessingTimeTimeout` (measured
-   *  here: a 2-file input ran 1000 empty batches, each paying the local-FS
-   *  commit tax, before the driver killed it) — a retention deployment runs
-   *  under a continuous `ProcessingTime` trigger where that loop IS the
-   *  intended clock; for catch-up runs one batch both drains the backlog
-   *  and fires every already-expired timeout.
-   *
-   *  Backlog guard (the Trigger.Once trade-off, round-4 ADVICE): a single
-   *  drain batch makes the NEW-group keeper-election buffer bounded by the
-   *  whole backlog's largest group, not by `maxFilesPerTrigger`. For
-   *  small/incremental catch-ups (the use here) that is fine; for a LARGE
-   *  retention catch-up (≫ executor memory per hot content group) run a
-   *  bounded `ProcessingTime` stream with `maxFilesPerTrigger` set and stop
-   *  it once `lastProgress.numInputRows == 0` instead — same results,
-   *  micro-batch-bounded memory. */
+  /** One catch-up run into a durable parquet sink (the memory sink cannot
+   *  recover a checkpoint). Re-running with the same checkpoint after new
+   *  files land processes ONLY the new files against the retained keeper
+   *  state — the incremental dedup story. The trigger rule is [[catchUp]]. */
   def runAvailableNow(spark: SparkSession, dir: String, outDir: String,
-                      checkpointDir: String, retentionMs: Long = 0L): Unit = {
-    val q = dedupActions(readFiles(spark, dir), retentionMs)
-      .writeStream
+                      checkpointDir: String, retentionMs: Long = 0L): Unit =
+    catchUp(dedupActions(readFiles(spark, dir), retentionMs), outDir, checkpointDir,
+      retentionMs)
+
+  /**
+   * Run `actions` into a parquet sink until it has caught up with its input,
+   * then stop: the trigger rule of both streams' catch-up runs. Without
+   * retention this is `AvailableNow`. With retention armed `AvailableNow`
+   * never stops: it keeps scheduling empty batches while any group holds a
+   * pending `ProcessingTimeTimeout` (a 2-file input ran 1000 empty batches
+   * before it was killed). So that arm runs a `ProcessingTime` stream
+   * and stops it at the first batch that read no input: the backlog is
+   * drained, and every timeout expired by then has fired (empty batches
+   * evict too). `readFiles` sets no `maxFilesPerTrigger`, so the backlog
+   * arrives as one batch; a source read with it set drains in several
+   * bounded batches.
+   */
+  private[streaming] def catchUp(actions: Dataset[_], outDir: String,
+                                 checkpointDir: String, retentionMs: Long): Unit = {
+    val q = actions.writeStream
       .format("parquet")
       .option("path", outDir)
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .trigger(if (retentionMs > 0) Trigger.Once() else Trigger.AvailableNow())
+      .trigger(if (retentionMs > 0) Trigger.ProcessingTime(1000L) else Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    // The run's first progress is not trusted: stopping usually cuts off a
+    // planned empty batch, which the next run re-executes first (a restart
+    // replays a planned batch with its old input).
+    if (retentionMs > 0)
+      try {
+        while (q.isActive && !q.recentProgress.drop(1).exists(_.numInputRows == 0))
+          q.awaitTermination(10L)
+      } finally q.stop()
+    q.awaitTermination() // rethrows the query's failure, if any
   }
 }

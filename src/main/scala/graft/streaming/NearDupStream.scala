@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.DedupConfig
 import graft.operators.NearDup
@@ -168,21 +168,14 @@ object NearDupStream {
     bucketPairs(banded, cfg.maxBucketSize, retentionMs)
   }
 
-  /** One catch-up run into a durable parquet sink (same trigger rationale as
-   *  [[DedupStream.runAvailableNow]]). Re-running with the same checkpoint
+  /** One catch-up run into a durable parquet sink (the trigger rule is
+   *  [[DedupStream.catchUp]]). Re-running with the same checkpoint
    *  after new files land pairs ONLY the new representatives against the
    *  retained bucket members — the incremental near-dup story. */
   def runAvailableNow(spark: org.apache.spark.sql.SparkSession, dir: String,
                       outDir: String, checkpointDir: String, cfg: DedupConfig,
-                      retentionMs: Long = 0L): Unit = {
-    val q = candidateIdPairs(DedupStream.readFiles(spark, dir), cfg, retentionMs)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(if (retentionMs > 0) Trigger.Once() else Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      retentionMs: Long = 0L): Unit =
+    DedupStream.catchUp(
+      candidateIdPairs(DedupStream.readFiles(spark, dir), cfg, retentionMs),
+      outDir, checkpointDir, retentionMs)
 }

@@ -75,6 +75,48 @@ class NearDupStreamSpec extends AnyFunSuite {
     corpus.unpersist()
   }
 
+  test("retention arm: idle reps and buckets are evicted; re-arrivals re-elect and pair afresh") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ndstream_ret").toString
+    def write(rows: (String, String)*): Unit =
+      rows.map { case (repo, content) => (repo, "f.txt", "c1", "scala", content) }
+        .toDF("repo", "path", "commit", "lang", "content")
+        .coalesce(1).write.mode("append").parquet(s"$tmp/in")
+    def run(): Set[(Long, Long)] = {
+      NearDupStream.runAvailableNow(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt", cfg,
+        retentionMs = 500L)
+      spark.read.parquet(s"$tmp/out").as[(Long, Long)].collect().toSet
+    }
+    def pair(a: String, b: String): (Long, Long) = {
+      val (x, y) = (graft.functions.XXHash64.hashString(s"$a/f.txt", 42L),
+        graft.functions.XXHash64.hashString(s"$b/f.txt", 42L))
+      (math.min(x, y), math.max(x, y))
+    }
+    val body = (0 until 120).map(i => s"tok$i").mkString(" ")
+    val (docA, docB) = (s"$body tail-a", s"$body tail-b")
+
+    // batch 1: two near-dups pair
+    write("a1" -> docA, "a2" -> docB)
+    val after1 = run()
+    assert(after1 === Set(pair("a1", "a2")))
+
+    // batch 2, after the retention window: neither content nor any of their
+    // buckets has data, so by the end of this run every batch-1 state has
+    // timed out and is evicted
+    Thread.sleep(1500L)
+    write("u" -> (0 until 120).map(i => s"other$i").mkString(" "))
+    val after2 = run()
+    assert(after2 === after1)
+
+    // batch 3: both contents re-arrive under new keys. Evicted reps re-elect
+    // (a retained rep would swallow them as exact dups), and the restarted
+    // buckets pair them only with each other (retained buckets would also
+    // pair them with a1 and a2)
+    write("a3" -> docA, "a4" -> docB)
+    val after3 = run()
+    assert(after3 -- after2 === Set(pair("a3", "a4")))
+  }
+
   test("bucket cap is prefix-emit with a sticky drop flag") {
     import spark.implicits._
     val rows = (1L to 5L).map(i => NearDupStream.BandRow(77L, i))

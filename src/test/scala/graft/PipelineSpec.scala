@@ -61,6 +61,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(resumed === Seq(0L, 0L, 1L, 0L))
   }
 
+  test("stage() labels its jobs graft:<name> and then restores the caller's job description") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    val ctx = RunContext(spark, tmpDir())
+    var inStage: String = null
+    def run() = ctx.stage("x") {
+      inStage = sc.getLocalProperty("spark.job.description"); Seq((1L, "a")).toDF("id", "v")
+    }
+    try {
+      sc.setJobDescription("caller")
+      run()
+      assert(inStage === "graft:x")
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      sc.setJobDescription(null)
+      run() // restores
+      assert(sc.getLocalProperty("spark.job.description") === null)
+    } finally sc.setJobDescription(prior)
+  }
+
   test("inputKey: equal for two reads of one parquet dir, never reused for a non-file corpus") {
     import spark.implicits._
     val cfg = graft.model.DedupConfig()

@@ -17,7 +17,8 @@ import graft.operators.{ExactDedup, NearDup, Snapshots, Substring}
  *     rule of ExactDedup/NearDup, and the round-1→2 scaling fix;
  *  2. the similarity interior exchanges narrow key/id columns, not strings
  *     where an id form exists;
- *  3. the review path reads each input as few times as its rule needs.
+ *  3. the review path reads each input as few times as its rule needs;
+ *  4. the review path never changes case through Spark's ICU case mapping.
  *
  * Checked against `explain("formatted")` operator blocks: every block
  * belonging to an Exchange is scanned for the forbidden column name, so the
@@ -111,5 +112,30 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(scansOf(Snapshots.editedSnapshot(h), "hashed") <= 4, "editedSnapshot")
       assert(scansOf(Snapshots.plantedState(h), "hashed") <= 2, "plantedState")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("review path: no Upper/Lower/InitCap in the fixture, validate, apply, refind or parse plans") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    def caseMaps(df: DataFrame): Seq[String] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: Upper | _: Lower | _: InitCap) => e.prettyName
+      }))
+    val h = ExactDedup.withHashes(corpus).localCheckpoint()
+    val edited = Snapshots.editedSnapshot(h)
+    val st = Snapshots.plantedState(h)
+    // downstream operators get checkpointed inputs, so each plan is its own
+    val v = Snapshots.validateState(edited.localCheckpoint(), st.localCheckpoint())
+    val vc = v.localCheckpoint()
+    val stc = st.localCheckpoint()
+    val lines = Seq("[AB12]", "keep p").zipWithIndex
+      .map { case (l, i) => (i.toLong + 1, l) }.toDF("line_no", "line")
+    val offenders = Seq("editedSnapshot" -> edited, "plantedState" -> st, "validateState" -> v,
+        "appliedState" -> Snapshots.appliedState(vc, stc),
+        "backupRows" -> Snapshots.backupRows(vc, stc),
+        "snapshotFromState" -> Snapshots.snapshotFromState(stc, skipDeduped = true),
+        "Textformat.parseTable" -> graft.operators.Textformat.parseTable(lines))
+      .map { case (what, df) => what -> caseMaps(df) }.filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, "plans that change case through ICU")
   }
 }

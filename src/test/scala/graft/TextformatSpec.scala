@@ -104,6 +104,18 @@ class TextformatSpec extends AnyFunSuite {
       ("aa11", "r1/b.txt", "symlink", Some("r1/a.txt"))))
   }
 
+  test("an uppercase-hex header parses to the lowercase group id (parse and parseTable)") {
+    import spark.implicits._
+    val lines = Seq("[AbCDEf09]", "keep p", "[abcdef09]", "symlink q -> p")
+    val want = Seq(("abcdef09", "p", "keep", None), ("abcdef09", "q", "symlink", Some("p")))
+    assert(Textformat.parse(lines)._2 === want)
+    val got = Textformat.parseTable(
+        lines.zipWithIndex.map { case (l, i) => (i.toLong + 1, l) }.toDF("line_no", "line"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), Option(r.getString(3))))
+      .toSeq.sortBy(_._2)
+    assert(got === want)
+  }
+
   test("parseTable rejects malformed input like the driver parse (F7)") {
     import spark.implicits._
     def run(ls: Seq[String]) = Textformat.parseTable(
