@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -12,7 +13,8 @@ import graft.runtime.RunContext
  * The end-to-end dedup job (north_star): corpus → exact snapshot → MinHash/
  * LSH near-dup pairs → substring pairs → connected-components cluster table,
  * every stage checkpointed through [[graft.runtime.RunContext]] (resumable)
- * and instrumented with per-partition lineage metrics. Every materialized
+ * and instrumented with per-partition lineage metrics; the metrics table
+ * also holds the run's codegen compile count, `find.codegen_compiles`. Every materialized
  * stage and band range restores under one key, [[RunContext.inputKey]] of
  * the code version, corpus and config, so a run dir reused over changed
  * code, corpus or config recomputes instead of restoring.
@@ -30,6 +32,7 @@ object Pipeline {
   case class Result(snapshot: DataFrame, clusters: DataFrame, metrics: DataFrame)
 
   def run(ctx: RunContext, corpus: DataFrame, cfg: DedupConfig = DedupConfig()): Result = {
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val corpusK = ExactDedup.validRows(corpus).withColumn("rkey", ExactDedup.rkey)
     val key = RunContext.inputKey(corpus, cfg)
 
@@ -192,6 +195,11 @@ object Pipeline {
       val members = corpusK.select("rkey", "repo", "path", "commit")
       Clustering.clusterTableCollapsed(members, baseRep, repPairs)
     }
+    // Janino compiles during the run. The counter is JVM-wide: it also
+    // counts what other queries of this JVM compile meanwhile, and on a
+    // cluster it sees the driver's compiles only, not the executors'.
+    ctx.metrics.record("find.codegen_compiles",
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
     Result(snapshot, clusters, ctx.metrics.toDF())
   }
 

@@ -74,10 +74,8 @@ object Clustering {
 
   /** Driver-side union-find over a collected, distinct, self-loop-free edge
    *  list (min-id root wins — identical labeling to the converged star
-   *  rounds). Returns the component table and its node count. */
-  private def localComponents(spark: SparkSession,
-                              collected: Array[(Long, Long)]): (DataFrame, Long) = {
-    import spark.implicits._
+   *  rounds). Returns every node with its component. */
+  private def localComponents(collected: Array[(Long, Long)]): Array[(Long, Long)] = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
@@ -98,14 +96,20 @@ object Clustering {
     val out = new Array[(Long, Long)](nodes.size)
     var i = 0
     nodes.forEach(n => { out(i) = (n, find(n)); i += 1 })
-    // parallelize, NOT createDataset: a local-collection Dataset encodes
-    // every row on the DRIVER at execution (LocalTableScan) — measured as a
-    // scale-flat multi-second serial segment at millions of nodes;
-    // parallelize ships raw tuples and encodes IN TASKS, in parallel.
-    (spark.createDataset(
-      spark.sparkContext.parallelize(out.toIndexedSeq,
+    out
+  }
+
+  /** Driver-held labels as a `(node, component)` table. parallelize, NOT
+   *  createDataset: a local-collection Dataset encodes every row on the
+   *  DRIVER at execution (LocalTableScan) — measured as a scale-flat
+   *  multi-second serial segment at millions of nodes; parallelize ships raw
+   *  tuples and encodes IN TASKS, in parallel. */
+  private def componentTable(spark: SparkSession, labels: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(
+      spark.sparkContext.parallelize(labels.toIndexedSeq,
         math.max(spark.sparkContext.defaultParallelism, 8)))
-      .toDF("node", "component"), out.length.toLong)
+      .toDF("node", "component")
   }
 
   /**
@@ -122,11 +126,12 @@ object Clustering {
    */
   def connectedComponents(edges: DataFrame,
                           localFinishEdges: Long = DefaultLocalFinishEdges): DataFrame =
-    components(edges, localFinishEdges)._1
+    components(edges, localFinishEdges).fold(componentTable(edges.sparkSession, _), identity)
 
-  /** [[connectedComponents]] plus the table's node count when the driver
-   *  finished the graph (`None` after star rounds). */
-  private def components(edges: DataFrame, localFinishEdges: Long): (DataFrame, Option[Long]) = {
+  /** [[connectedComponents]] as the driver-held labels when the driver
+   *  finished the graph (`Left`), or the star rounds' table (`Right`). */
+  private def components(edges: DataFrame,
+                         localFinishEdges: Long): Either[Array[(Long, Long)], DataFrame] = {
     val spark = edges.sparkSession
     import spark.implicits._
     val cur0 = edges
@@ -138,10 +143,7 @@ object Clustering {
     // distinct edges reach the driver, and only an overflow pays for a
     // checkpoint and star rounds — the driver finish writes and counts nothing.
     val head = cur0.limit((localFinishEdges min Int.MaxValue - 1).toInt + 1).as[(Long, Long)].collect()
-    if (head.length <= localFinishEdges) {
-      val (cc, nNodes) = localComponents(spark, head)
-      return (cc, Some(nNodes))
-    }
+    if (head.length <= localFinishEdges) return Left(localComponents(head))
     // Reliable (FS-backed) checkpoints whenever a checkpoint dir is set, as
     // RunContext always does: localCheckpoint keeps blocks on EXECUTORS with
     // truncated lineage, so an executor loss mid-iteration would fail the job
@@ -176,24 +178,24 @@ object Clustering {
     System.err.println(s"[graft.cc] converged after $it iterations")
     // After convergence every edge points member→root (a star). Roots map to
     // themselves; include them explicitly.
-    (cur.select(col("src").as("node"), col("dst").as("component"))
+    Right(cur.select(col("src").as("node"), col("dst").as("component"))
       .union(cur.select(col("dst").as("node"), col("dst").as("component")))
-      .groupBy("node").agg(min(col("component")).as("component")), None)
+      .groupBy("node").agg(min(col("component")).as("component")))
   }
 
-  /** Row bound for the singleton-bypass broadcast gate. The component table
-   *  is 16-byte long pairs (64 MB at the default bound); the STRING-keyed
-   *  sides (keeper mapping, keeper set) get a QUARTER of the row budget
-   *  (~100 B/row keys ⇒ ~100 MB broadcast worst-case — the same
-   *  big-executor budget class as the sharded prune sketch). Past either
-   *  gate the dense shuffle formulation below runs instead — identical
+  /** Row bound of the driver-labelled formulation of
+   *  [[clusterTableCollapsed]]. Its two string-keyed tables, the keeper
+   *  mapping and the involved-row table, each get a QUARTER of it
+   *  (~100 B/row keys ⇒ ~100 MB on the driver and in the broadcast at
+   *  worst — the same big-executor budget class as the sharded prune
+   *  sketch). Past it the dense shuffle formulation runs instead — identical
    *  output. */
   val DefaultClusterBroadcastMaxRows: Long = 4000000L
 
   /**
    * Assemble the final cluster table (north_star): every corpus row with its
-   * cluster id and the canonical representative — the lexicographically
-   * smallest member key, generalizing the reference's keeper rule
+   * cluster id and the canonical representative — the smallest member key in
+   * UTF-8 binary order, generalizing the reference's keeper rule
    * (snapshot/mod.rs:84-91). Rows in no pair and no exact group are
    * singleton clusters represented by themselves.
    *
@@ -204,6 +206,23 @@ object Clustering {
    * the exact-group star edges (the bulk of the edge volume on a duplicate-
    * heavy corpus) never enter the iteration; members pick up their
    * component through the keeper mapping afterwards.
+   *
+   * Two formulations, identical rows (ClusteringSpec):
+   *
+   *  - Driver-labelled, when the driver finished the components and the
+   *    non-trivial keeper mapping and the involved-row table each fit
+   *    `broadcastMaxRows / 4` rows. A row is involved when it has a
+   *    non-trivial mapping row, is a keeper or is a component node; every
+   *    other row is a singleton cluster. The mapping is collected under its
+   *    bound, one scan of `members` fetches the involved keys by node id,
+   *    and the driver labels them from the union-find's node array:
+   *    `cluster_id`, `rep_key` (the component's minimum key) and `action`.
+   *    One broadcast join puts the labels on `members`; singleton rows keep
+   *    their own. The bound on involved node ids also bounds the component
+   *    table, whose nodes are all among those ids.
+   *  - Dense, the at-scale fallback: shuffle joins of the mapping and the
+   *    component table onto the full member table, a `min(rkey)` aggregate
+   *    per component and a join back, with AQE handling skew.
    *
    * Precondition: every `repPairs` endpoint is a keeper or a row with no
    * non-trivial mapping row. Rows look up their component by their keeper's
@@ -223,60 +242,77 @@ object Clustering {
     val Array(src, dst) = repPairs.columns.take(2).map(c =>
       if (repPairs.schema(c).dataType == org.apache.spark.sql.types.LongType) col(c) else xxhash64(col(c)))
     val edges = repPairs.select(src.as("src"), dst.as("dst"))
-    // Multi-member components arise from exactly two sources: exact-dup
-    // groups (a NON-TRIVIAL keeper mapping row, or BEING a keeper) and
-    // similarity pairs (a cc row). Every other row is a singleton cluster —
-    // on a mostly-unique corpus the large majority — whose label, rep and
-    // action are its own: it never needs the rep aggregation or the join
-    // back. Trivial `rep0 == rkey` mapping rows are dropped up front (the
-    // left_outer + coalesce below reconstructs them exactly).
+    // Trivial `rep0 == rkey` mapping rows are dropped up front (both
+    // formulations reconstruct them exactly).
     val baseRepNT = baseRep.where(col("rep0") =!= col("rkey"))
-    val nMap = baseRepNT.count()
-    // The gate reads the node count the driver finish holds. Star rounds
-    // (past `DefaultLocalFinishEdges` distinct edges) always take the dense
-    // formulation: counting their output would re-run its final aggregation.
-    val (cc, nCc) = components(edges, DefaultLocalFinishEdges)
-    val (grouped, singles) =
-      if (nMap <= broadcastMaxRows / 4 && nCc.exists(_ <= broadcastMaxRows)) {
-        // Singleton-bypass formulation: all three lookup sides broadcast, so
-        // `labeled` stays IN THE SCAN STAGE (zero exchange); only the bounded
-        // "involved" subset (exact-group members + keepers + pair nodes) pays
-        // the rep aggregation and join-back, and singleton rows flow scan →
-        // output untouched. Identical rows to the dense path (spec-asserted).
-        val keepers = baseRepNT.select(col("rep0").as("rkey")).distinct()
-          .withColumn("is_keeper", lit(true))
-        val labeled = members
-          .join(broadcast(baseRepNT), Seq("rkey"), "left_outer")
-          .join(broadcast(keepers), Seq("rkey"), "left_outer")
-          .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
-          .withColumn("node", xxhash64(col("rep0")))
-          .join(broadcast(cc), Seq("node"), "left_outer")
-        // rep0/rkey are never null and the isNotNull tests are two-valued, so
-        // `inv` is a real boolean — `!inv` below cannot swallow rows.
-        val inv = col("component").isNotNull ||
-          col("rep0") =!= col("rkey") || col("is_keeper").isNotNull
-        (labeled.where(inv).withColumn("component", coalesce(col("component"), col("node"))),
-          Some(labeled.where(!inv)
-            .select(col("rkey"), col("repo"), col("path"), col("commit"),
-              col("node").as("cluster_id"), col("rkey").as("rep_key"),
-              lit("keep").as("action"))))
-      } else {
-        // Dense formulation (the at-scale fallback): mapping or component
-        // table past the broadcast budget — shuffle joins over the full
-        // member table, AQE handling skew.
-        (members
+    val maxKeyed = broadcastMaxRows / 4
+    val comps = components(edges, DefaultLocalFinishEdges)
+    val labelled = comps.left.toOption.flatMap { labels =>
+      val mapping = baseRepNT.select("rkey", "rep0")
+        .limit((maxKeyed min Int.MaxValue - 1).toInt + 1).collect()
+        .map(r => r.getString(0) -> r.getString(1))
+      if (mapping.length > maxKeyed) None else involvedLabels(members, mapping, labels, maxKeyed)
+    }
+    labelled match {
+      case Some(inv) =>
+        members.join(broadcast(inv), Seq("rkey"), "left_outer")
+          .select(col("rkey"), col("repo"), col("path"), col("commit"),
+            coalesce(col("cluster_id"), xxhash64(col("rkey"))).as("cluster_id"),
+            coalesce(col("rep_key"), col("rkey")).as("rep_key"),
+            coalesce(col("action"), lit("keep")).as("action"))
+      case None =>
+        val cc = comps.fold(componentTable(members.sparkSession, _), identity)
+        val grouped = members
           .join(baseRepNT, Seq("rkey"), "left_outer")
           .withColumn("rep0", coalesce(col("rep0"), col("rkey")))
           .withColumn("node", xxhash64(col("rep0")))
           .join(cc, Seq("node"), "left_outer")
-          .withColumn("component", coalesce(col("component"), col("node"))), None)
-      }
-    val reps = grouped.groupBy("component").agg(min(col("rkey")).as("rep_key"))
-    val multi = grouped.join(reps, "component")
-      .withColumn("action",
-        when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
-      .select(col("rkey"), col("repo"), col("path"), col("commit"),
-        col("component").as("cluster_id"), col("rep_key"), col("action"))
-    singles.fold(multi)(multi.union)
+          .withColumn("component", coalesce(col("component"), col("node")))
+        val reps = grouped.groupBy("component").agg(min(col("rkey")).as("rep_key"))
+        grouped.join(reps, "component")
+          .withColumn("action",
+            when(col("rkey") === col("rep_key"), lit("keep")).otherwise(lit("symlink")))
+          .select(col("rkey"), col("repo"), col("path"), col("commit"),
+            col("component").as("cluster_id"), col("rep_key"), col("action"))
+    }
+  }
+
+  /** The driver-labelled rows `(rkey, cluster_id, rep_key, action)` of every
+   *  involved member row, or `None` when more than `maxRows` node ids could
+   *  be involved. One job scans `members` for the rows whose node id is a
+   *  component node or the id of a mapped row or keeper; the driver then
+   *  keeps the rows that are truly involved (a node id match alone may be a
+   *  hash collision) and labels them as the dense formulation does. */
+  private def involvedLabels(members: DataFrame, mapping: Array[(String, String)],
+                             labels: Array[(Long, Long)], maxRows: Long): Option[DataFrame] = {
+    import graft.functions.XXHash64.hashString
+    val spark = members.sparkSession
+    val rep0 = mapping.toMap
+    val keepers = rep0.valuesIterator.toSet
+    val ids = (labels.iterator.map(_._1) ++ (rep0.keysIterator ++ keepers.iterator).map(hashString(_)))
+      .toArray.distinct.sorted
+    if (ids.length > maxRows) return None
+    val component = new java.util.HashMap[Long, Long](labels.length * 2)
+    labels.foreach { case (n, c) => component.put(n, c) }
+    val bc = spark.sparkContext.broadcast(ids)
+    val fetched =
+      try members.select(col("rkey"), xxhash64(col("rkey"))).queryExecution.toRdd
+        .mapPartitions { it =>
+          val s = bc.value
+          it.filter(r => java.util.Arrays.binarySearch(s, r.getLong(1)) >= 0).map(_.getString(0))
+        }.collect().distinct
+      finally bc.destroy()
+    val inv = fetched.flatMap { r =>
+      val node = hashString(rep0.getOrElse(r, r))
+      if (rep0.contains(r) || keepers(r) || component.containsKey(node))
+        Some(r -> component.getOrDefault(node, node))
+      else None
+    }
+    val repKey = inv.groupMapReduce(_._2)(_._1)(graft.functions.BucketScan.utf8Ordering.min)
+    import spark.implicits._
+    Some(inv.toSeq.map { case (r, c) =>
+      val rep = repKey(c)
+      (r, c, rep, if (r == rep) "keep" else "symlink")
+    }.toDF("rkey", "cluster_id", "rep_key", "action"))
   }
 }

@@ -1,6 +1,11 @@
 package graft.runtime
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Nondeterministic, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.util.CollectionAccumulator
 
 /** One per-partition lineage/metrics row (north_rule: "emits per-partition
@@ -13,16 +18,28 @@ case class StageMetric(
     nanos: Long)
 
 /**
- * Per-partition instrumentation: a pass-through `mapPartitions` that counts
- * rows and wall time per partition into a driver-side accumulator, without
- * changing the data. Accumulators are the right channel here — metrics ride
- * the existing job instead of forcing a second action, and partial/retried
- * tasks are deduplicated by Spark's accumulator semantics for result stages.
+ * A run's metrics table: one row per partition of every computed stage, plus
+ * driver-side counters (`partition_id = -1`).
  *
- * `instrument` sits *after* a stage's computation, so the recorded partition
- * row counts are exactly what the stage handed downstream — the lineage view
- * that makes skew visible (one partition with 100× the rows of its siblings
- * is the skew alarm north_rule asks to surface).
+ * [[instrument]] filters a stage's output by [[StageTally]], an always-true
+ * leaf predicate. It compiles into the stage's own whole-stage code (or runs
+ * interpreted where codegen is off), counts the rows that reach it in each
+ * partition, and adds one [[StageMetric]] to the run's accumulator when the
+ * task completes. No row leaves the generated code for it: there is no
+ * encoder round trip, no per-stage deserializer or serializer to compile, and
+ * no array element is boxed. The predicate is nondeterministic, so the
+ * optimizer pushes no filter below it and does not drop it; column pruning
+ * still passes through it. It sits after the stage's computation, so the
+ * partition counts are exactly what the stage hands downstream — the lineage
+ * view that makes skew visible (one partition with 100× the rows of its
+ * siblings is the skew alarm).
+ *
+ * A stage whose plan runs more than once (a light stage that is not
+ * persisted runs once per consumer) reports each partition once per run;
+ * [[toDF]] keeps one row per `(stage, partition_id)`, the one with the most
+ * rows, since only a partial pass (a limit) can count fewer. A stage that
+ * Spark folds into a local relation at planning time runs in no task and
+ * reports no partition rows.
  */
 class Metrics(spark: SparkSession, runId: String) extends Serializable {
   val acc: CollectionAccumulator[StageMetric] =
@@ -33,38 +50,65 @@ class Metrics(spark: SparkSession, runId: String) extends Serializable {
   def record(stage: String, rows: Long, nanos: Long = 0L): Unit =
     acc.add(StageMetric(runId, stage, -1, rows, nanos))
 
-  def instrument(df: DataFrame, stage: String): DataFrame = {
-    val a = acc
-    val rid = runId
-    val enc = Encoders.row(df.schema)
-    df.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val t0 = System.nanoTime()
-      var n = 0L
-      // Record exactly once per task: a consumer re-checking hasNext after
-      // exhaustion must not double-count, and partitions terminated early
-      // (limits) still record via the task-completion listener.
-      var recorded = false
-      def record(): Unit = if (!recorded) {
-        recorded = true
-        a.add(StageMetric(rid, stage, pid, n, System.nanoTime() - t0))
-      }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => record()))
-      new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h) record()
-          h
-        }
-        def next(): org.apache.spark.sql.Row = { n += 1; it.next() }
-      }
-    }(enc)
-  }
+  /** `df` unchanged, with its rows counted per partition under `stage`. */
+  def instrument(df: DataFrame, stage: String): DataFrame =
+    df.where(GraftColumnBridge.column(StageTally(acc, runId, stage)))
 
   /** Collected metrics as a DataFrame — the metrics-table sink. */
   def toDF(): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(acc.value.asScala.toSeq)
+    val (driver, partitions) = acc.value.asScala.toSeq.partition(_.partition_id < 0)
+    val once = partitions.groupBy(m => (m.stage, m.partition_id)).values.map(_.maxBy(_.rows))
+      .toSeq.sortBy(m => (m.stage, m.partition_id))
+    spark.createDataFrame(driver ++ once)
+  }
+}
+
+/** The row counter of one partition of one stage. */
+final class PartitionTally {
+  var rows = 0L
+  def add(): Boolean = { rows += 1; true }
+}
+
+/**
+ * `graft_stage_tally(stage)`: always true; counts the rows it sees per
+ * partition and adds `StageMetric(runId, stage, partition, rows, nanos)` to
+ * `acc` when the task completes (`nanos` from the partition's first call to
+ * the task's end). Generated code opens the partition's tally in the
+ * partition-initialisation statements and calls [[PartitionTally.add]] per
+ * row; the interpreted path opens it in `initializeInternal`.
+ */
+case class StageTally(acc: CollectionAccumulator[StageMetric], runId: String, stage: String)
+    extends LeafExpression with Nondeterministic with Predicate {
+  override def nullable: Boolean = false
+  // per-partition state: interpreted evaluators take a fresh copy each
+  override def stateful: Boolean = true
+  override def prettyName: String = "graft_stage_tally"
+  override def toString: String = s"$prettyName($stage)"
+
+  @transient private[this] var tally: PartitionTally = _
+
+  /** A new tally for the running task's partition. Outside a task (the
+   *  optimizer folding a filter over a local relation) nothing is recorded. */
+  def open(): PartitionTally = {
+    val t = new PartitionTally
+    val tc = TaskContext.get()
+    if (tc != null) {
+      val pid = tc.partitionId()
+      val t0 = System.nanoTime()
+      tc.addTaskCompletionListener[Unit](_ =>
+        acc.add(StageMetric(runId, stage, pid, t.rows, System.nanoTime() - t0)))
+    }
+    t
+  }
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = tally = open()
+  override protected def evalInternal(input: InternalRow): Any = tally.add()
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("graftStageTally", this)
+    val t = ctx.addMutableState(classOf[PartitionTally].getName, "graftTally")
+    ctx.addPartitionInitializationStatement(s"$t = $self.open();")
+    ev.copy(code = code"final boolean ${ev.value} = $t.add();", isNull = FalseLiteral)
   }
 }

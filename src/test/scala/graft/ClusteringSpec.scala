@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.lit
 import graft.operators.Clustering
 
 /** Connected components vs an in-memory union-find oracle, including the
@@ -66,7 +67,16 @@ class ClusteringSpec extends AnyFunSuite {
       assert(labels(bound) === local, s"localFinishEdges = $bound")
   }
 
-  test("singleton-bypass and dense clusterTableCollapsed emit identical rows") {
+  /** True when the plan holds an aggregate: the dense formulation's
+   *  `min(rkey)` per component. The driver-labelled one has none. */
+  private def isDense(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]).isDefined
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  test("driver-labelled and dense clusterTableCollapsed emit identical rows") {
     import spark.implicits._
     // corpus: k00..k09 keepers/members across exact groups, plus loners.
     // shapes covered: exact group with NO similarity edges (keeper k00 must
@@ -83,30 +93,77 @@ class ClusteringSpec extends AnyFunSuite {
       ("s09", "r", "p9", "c"), ("s10", "r", "pA", "c")
     ).toDF("rkey", "repo", "path", "commit")
     // keeper mapping incl. TRIVIAL self rows (as Pipeline's coalesce builds it)
-    val baseRep = Seq(
-      ("k00", "k00"), ("m01", "k00"), ("m02", "k00"),
-      ("k03", "k03"), ("m04", "k03"),
-      ("k05", "k05"),
-      ("z06", "z06"), ("a06", "z06"),
-      ("n07", "n07"), ("n08", "n08"), ("s09", "s09"), ("s10", "s10")
-    ).toDF("rkey", "rep0")
+    val trivial = Seq("k00", "k03", "k05", "z06", "n07", "n08", "s09", "s10").map(k => (k, k))
+    val nonTrivial = Seq(("m01", "k00"), ("m02", "k00"), ("m04", "k03"), ("a06", "z06"))
     val repPairs = Seq(("k03", "k05"), ("n07", "n08")).toDF("a", "b")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    val bypass = Clustering.clusterTableCollapsed(members, baseRep, repPairs)
-    val dense = Clustering.clusterTableCollapsed(members, baseRep, repPairs,
-      broadcastMaxRows = 0L) // forces the dense shuffle formulation
-    assert(rows(bypass) === rows(dense))
-    // spot-check semantics on the bypass output directly
-    val by = bypass.collect().map(r => r.getString(0) ->
-      (r.getString(5), r.getString(6))).toMap
-    assert(by("m01") === ("k00", "symlink")) // keeper-only group aggregates
-    assert(by("k00") === ("k00", "keep"))
-    assert(by("a06") === ("a06", "keep"))    // member, not keeper, is min rkey
-    assert(by("z06") === ("a06", "symlink"))
-    assert(by("m04") === ("k03", "symlink")) // exact member reaches the
-    assert(by("k05") === ("k03", "symlink")) // similarity cluster via keeper
-    assert(by("s09") === ("s09", "keep"))    // pure singleton
+    // the same mapping without its trivial rows: pair endpoints n07/n08 and
+    // keeper k05 are then absent from it
+    for (baseRep <- Seq((trivial ++ nonTrivial).toDF("rkey", "rep0"), nonTrivial.toDF("rkey", "rep0"))) {
+      val driver = Clustering.clusterTableCollapsed(members, baseRep, repPairs)
+      val dense = Clustering.clusterTableCollapsed(members, baseRep, repPairs,
+        broadcastMaxRows = 0L) // forces the dense shuffle formulation
+      assert(!isDense(driver) && isDense(dense))
+      assert(rows(driver) === rows(dense))
+      // spot-check semantics on the driver-labelled output directly
+      val by = driver.collect().map(r => r.getString(0) ->
+        (r.getString(5), r.getString(6))).toMap
+      assert(by("m01") === ("k00", "symlink")) // keeper-only group aggregates
+      assert(by("k00") === ("k00", "keep"))
+      assert(by("a06") === ("a06", "keep"))    // member, not keeper, is min rkey
+      assert(by("z06") === ("a06", "symlink"))
+      assert(by("m04") === ("k03", "symlink")) // exact member reaches the
+      assert(by("k05") === ("k03", "symlink")) // similarity cluster via keeper
+      assert(by("n08") === ("n07", "symlink")) // endpoints absent from the mapping
+      assert(by("s09") === ("s09", "keep"))    // pure singleton
+      // The gates: 4 non-trivial mapping rows and 10 involved node ids
+      // (m01 m02 m04 a06, keepers k00 k03 z06, nodes k05 n07 n08). Each
+      // string-keyed table gets a quarter of the bound.
+      def at(bound: Long) = Clustering.clusterTableCollapsed(members, baseRep, repPairs, bound)
+      assert(isDense(at(4L * 3)), "mapping one row over the gate")
+      assert(isDense(at(4L * 10 - 1)), "involved rows one over the gate")
+      assert(!isDense(at(4L * 10)), "involved rows at the gate")
+      assert(rows(at(4L * 3)) === rows(driver))
+    }
+  }
+
+  test("driver-labelled rep_key is the minimum key in UTF-8 binary order") {
+    import spark.implicits._
+    // U+FF21 sorts AFTER U+1F600 in UTF-16 (0xFF21 > 0xD83D) but BEFORE it
+    // in UTF-8 (EF BC A1 < F0 9F 98 80), which is Spark's string order.
+    val bmp = "\uFF21"
+    val astral = "\uD83D\uDE00"
+    assert(astral < bmp)
+    val members = Seq(astral, bmp, s"${astral}m", "q").map(k => (k, "r", k, "c"))
+      .toDF("rkey", "repo", "path", "commit")
+    val baseRep = Seq((s"${astral}m", astral)).toDF("rkey", "rep0")
+    val repPairs = Seq((astral, bmp)).toDF("a", "b")
+    val driver = Clustering.clusterTableCollapsed(members, baseRep, repPairs)
+    val dense = Clustering.clusterTableCollapsed(members, baseRep, repPairs, broadcastMaxRows = 0L)
+    assert(!isDense(driver) && isDense(dense))
+    assert(rows(driver) === rows(dense))
+    val rep = driver.collect().map(r => r.getString(0) -> r.getString(5)).toMap
+    assert(rep === Map(astral -> bmp, bmp -> bmp, s"${astral}m" -> bmp, "q" -> "q"))
+  }
+
+  test("driver-labelled clusterTableCollapsed over an empty mapping and an empty edge set") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val members = Seq(("a", "r", "pa", "c"), ("b", "r", "pb", "c"))
+      .toDF("rkey", "repo", "path", "commit")
+    val noMapping = members.select(col("rkey"), col("rkey").as("rep0")).where(lit(false))
+    val noPairs = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val out = Clustering.clusterTableCollapsed(members, noMapping, noPairs)
+    assert(!isDense(out))
+    val want = members.select(col("rkey"), col("repo"), col("path"), col("commit"),
+      xxhash64(col("rkey")).as("cluster_id"), col("rkey").as("rep_key"), lit("keep").as("action"))
+    assert(rows(out) === rows(want))
+    // pairs without a mapping (q05's shape) still label through the driver
+    val pairs = Seq(("a", "b")).toDF("a", "b")
+    val chained = Clustering.clusterTableCollapsed(members, noMapping, pairs)
+    assert(!isDense(chained))
+    assert(rows(chained) === rows(Clustering.clusterTableCollapsed(members, noMapping, pairs, 0L)))
+    assert(chained.collect().map(r => r.getString(0) -> r.getString(6)).toMap ===
+      Map("a" -> "keep", "b" -> "symlink"))
   }
 
   test("star graph and disjoint pairs") {

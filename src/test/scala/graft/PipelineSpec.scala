@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
+import graft.operators.NearDup
 import graft.runtime.RunContext
 
 /** End-to-end pipeline: correctness of the cluster table, stage
@@ -219,12 +220,25 @@ class PipelineSpec extends AnyFunSuite {
     val res = Pipeline.run(ctx, corpus)
     res.clusters.count()
     val m = res.metrics.collect()
-    val stages = m.map(_.getAs[String]("stage")).toSet
-    assert(Set("snapshot", "shingles", "signatures", "near_pairs",
-      "substring_pairs", "clusters").subsetOf(stages))
-    // row totals in metrics match the materialized stage row counts
-    val clusterRows = m.filter(_.getAs[String]("stage") == "clusters").map(_.getAs[Long]("rows")).sum
-    assert(clusterRows === corpus.count())
     assert(m.forall(_.getAs[Long]("nanos") >= 0))
+    // Each computed stage reports every partition once, and its rows add up
+    // to the stage's output, also for a light stage that several consumers
+    // re-run (`shingles`) and for the persisted one (`uniq`).
+    val cfg = graft.model.DedupConfig()
+    val uniq = graft.operators.NearDup.dedupedByContentBroadcast(
+      graft.operators.ExactDedup.validRows(corpus).withColumn("rkey", graft.operators.ExactDedup.rkey))
+    val outputRows = (materialized.toSeq.map(s => s -> spark.read.parquet(s"${ctx.runDir}/$s").count()) ++
+      Seq("uniq" -> uniq.count(),
+        "shingles" -> uniq.where(size(NearDup.shingleCol(col("content"), cfg.shingleN)) > 0).count())).toMap
+    assert(outputRows("clusters") === corpus.count())
+    for ((stage, want) <- outputRows) {
+      val parts = m.filter(r => r.getAs[String]("stage") == stage && r.getAs[Int]("partition_id") >= 0)
+      assert(parts.nonEmpty, stage)
+      assert(parts.map(_.getAs[Int]("partition_id")).sorted.toSeq === parts.indices, stage)
+      assert(parts.map(_.getAs[Long]("rows")).sum === want, stage)
+    }
+    // the run's codegen compile count is one driver row
+    assert(m.count(r => r.getAs[String]("stage") == "find.codegen_compiles" &&
+      r.getAs[Int]("partition_id") == -1 && r.getAs[Long]("rows") >= 0) === 1)
   }
 }

@@ -18,7 +18,9 @@ import graft.operators.{ExactDedup, NearDup, Snapshots, Substring}
  *  2. the similarity interior exchanges narrow key/id columns, not strings
  *     where an id form exists;
  *  3. the review path reads each input as few times as its rule needs;
- *  4. the review path never changes case through Spark's ICU case mapping.
+ *  4. the review path never changes case through Spark's ICU case mapping;
+ *  5. a stage's metrics tally keeps rows inside generated code: no encoder
+ *     round trip around a stage output.
  *
  * Checked against `explain("formatted")` operator blocks: every block
  * belonging to an Exchange is scanned for the forbidden column name, so the
@@ -88,6 +90,26 @@ class PlanShapeSpec extends AnyFunSuite {
       explode(Substring.rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask)).as("gram"))
     val pairs = Substring.gramPairs(uniqGrams, cfg.minSharedGrams, cfg.maxBucketSize)
     assertNoContentInExchanges(pairs, "gramPairs(long-keyed)")
+  }
+
+  test("stage tally: no object round trip over array<bigint>, one metrics row per partition") {
+    // codegen, then interpreted (no whole-stage code, no generated predicate)
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    for ((session, mode) <- Seq(spark -> "codegen", interpreted -> "interpreted")) {
+      val ctx = graft.runtime.RunContext(session,
+        java.nio.file.Files.createTempDirectory("graft-tally").toString)
+      val df = ctx.stage("arrays", materialize = false, persist = false) {
+        session.range(0, 1000, 1, 4).select(col("id"), array(col("id"), col("id") + 1).as("arr"))
+      }
+      for (op <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+        assert(blocks(df, op).isEmpty, s"$mode: the stage output plans $op")
+      assert(df.collect().length === 1000)
+      val m = ctx.metrics.toDF().where(col("stage") === "arrays").collect()
+      assert(m.map(_.getAs[Int]("partition_id")).sorted.toSeq === (0 until 4), mode)
+      assert(m.map(_.getAs[Long]("rows")).sum === 1000L, mode)
+    }
   }
 
   test("review path: apply-side outputs scan validated once, fixtures scan hashed sparingly") {
