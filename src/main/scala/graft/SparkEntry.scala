@@ -86,6 +86,12 @@ object SparkEntry {
       .select(col("prev").as("a_key"), col("rkey").as("b_key"))
   }
 
+  /** `onDrop` of the similarity queries: one `[graft.skew]` stderr line per
+   *  capped report, `n` hot buckets or cells holding `m` member rows. */
+  private def skewReport(query: String, unit: String): (Long, Long) => Unit =
+    (n, m) => System.err.println(
+      s"[graft.skew] $query: $n hot $unit ($m member rows) over cap — dropped, reported")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A3/A4 — sha256 duplicate groups (scanner.rs:108-138 analog).
     "q01_exact_groups" -> ((s, dir) => ExactDedup.duplicateGroups(hashed(s, dir))),
@@ -198,8 +204,7 @@ object SparkEntry {
     // additionally measured in SimilaritySpec).
     "q18_ann_topk" -> ((s, dir) =>
       Similarity.annTopK(s.read.parquet(s"$dir/embeddings.parquet"), 5,
-        onDrop = (b, m) => System.err.println(
-          s"[graft.skew] ann_topk: $b hot buckets ($m member rows) over cap — dropped, reported"))),
+        onDrop = skewReport("ann_topk", "buckets"))),
 
     // ANN scale path #2 — IVF coarse-quantizer top-5. FULLY DuckDB-oracled:
     // integer Lloyd on norm-quantized points (md5 seeding, floorDiv centroid
@@ -208,8 +213,7 @@ object SparkEntry {
     // additionally measured in SimilaritySpec).
     "q26_ivf_topk" -> ((s, dir) =>
       Similarity.ivfTopK(s.read.parquet(s"$dir/embeddings.parquet"), 5,
-        onDrop = (c, m) => System.err.println(
-          s"[graft.skew] ivf_topk: $c hot cells ($m member rows) over cap — dropped, reported"))),
+        onDrop = skewReport("ivf_topk", "cells"))),
 
     // Streaming stateful dedup core (flatMapGroupsWithState) run in batch
     // mode over the static corpus: keeper election per content group,
@@ -245,8 +249,8 @@ object SparkEntry {
     // Multimodal metadata projection over binary media columns.
     "q19_media_meta" -> ((s, dir) => Multimodal.mediaMeta(s, dir)),
 
-    // Tumbling-window aggregation over the events table (batch equivalent of
-    // the streaming ingestion path; exact integer value quantization).
+    // Tumbling-window aggregation over the events table: 5-minute windows
+    // per event type, exact integer value quantization.
     "q20_events_window" -> ((s, dir) =>
       s.read.parquet(s"$dir/events.parquet")
         .groupBy(window(col("ts"), "5 minutes").getField("start").as("window_start"),
@@ -298,8 +302,7 @@ object SparkEntry {
     // a larger corpus must pin bits=8 here or regenerate the oracle.
     "q36_embed_lsh_pairs" -> ((s, dir) =>
       Similarity.lshCosinePairs(s.read.parquet(s"$dir/embeddings.parquet"), 0.4,
-        onDrop = (b, m) => System.err.println(
-          s"[graft.skew] embed_lsh_pairs: $b hot buckets ($m member rows) over cap — dropped, reported"))),
+        onDrop = skewReport("embed_lsh_pairs", "buckets"))),
 
     // Skew-report surface (north_rule "cap skewed buckets, report them"):
     // grams shared by more than `cap` distinct representatives — the
@@ -349,8 +352,7 @@ object SparkEntry {
       cat.dropAll(s, s"${base}_ann_meta"); cat.dropAll(s, s"${base}_ann_idx")
       graft.operators.SimilarityIndexStore.buildAnn(s, cat, base, emb)
       graft.operators.SimilarityIndexStore.annTopK(s, cat, base, emb, 5,
-        onDrop = (b, m) => System.err.println(
-          s"[graft.skew] ann_stored: $b hot buckets ($m member rows) over cap — dropped, reported"))
+        onDrop = skewReport("ann_stored", "buckets"))
     }),
 
     // Stored-index IVF: centroids + assignments persisted at build, queries
@@ -363,8 +365,7 @@ object SparkEntry {
       cat.dropAll(s, s"${base}_ivf_cent"); cat.dropAll(s, s"${base}_ivf_idx")
       graft.operators.SimilarityIndexStore.buildIvf(s, cat, base, emb)
       graft.operators.SimilarityIndexStore.ivfTopK(s, cat, base, emb, 5,
-        onDrop = (c, m) => System.err.println(
-          s"[graft.skew] ivf_stored: $c hot cells ($m member rows) over cap — dropped, reported"))
+        onDrop = skewReport("ivf_stored", "cells"))
     }),
 
     // Multimodal decode: REAL BMP/WAV/Y4M bytes synthesized deterministically,

@@ -239,8 +239,4 @@ object XXHash3 {
    *  corpus content is UTF-8 text). */
   def hashString(s: String): Long =
     hash(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** The reference's checksum rendering (hash.rs:57-61): u64 as unsigned
-   *  decimal. */
-  def unsignedDecimal(h: Long): String = java.lang.Long.toUnsignedString(h)
 }

@@ -168,20 +168,6 @@ object Multimodal {
     if (nFrames == 0) None else Some((w, h, num, den, nFrames))
   }
 
-  /** Synthesize a media table from the documents table: text bytes stand in
-   *  for encoded media; modality assigned round-robin (deterministic). */
-  def mediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, "image")
-          .when(col("doc_id") % 3 === 1, "audio")
-          .otherwise("video").as("modality"),
-        col("text").cast("binary").as("bytes"),
-        length(col("text").cast("binary")).cast("long").as("n_bytes"))
-      .as[MediaRow]
-  }
-
   /** Quarantine row for bytes no codec accepts: width/height/duration all
    *  −1, empty features — a real pipeline routes these to a quarantine sink
    *  rather than inventing fake dimensions from raw bytes. */

@@ -19,12 +19,13 @@ import graft.model.DedupConfig
  *    explicit `repartition` on those keys (north_rule requirement);
  *  - hot buckets (empty files, license headers, boilerplate) are the skew
  *    killer: any bucket with more than `cfg.maxBucketSize` members would
- *    contribute O(m²) pairs, so they are counted first (map-side combinable
- *    aggregation — skew-immune) and dropped as "stop buckets", the standard
- *    stop-shingle practice. Dropped buckets are reported via
- *    [[droppedBuckets]], never silently. Identical-content members of such
- *    buckets are still clustered by the exact stage, which is why dropping is
- *    safe for recall at the configured threshold;
+ *    contribute O(m²) pairs, so the run scan counts each bucket's run
+ *    in-stream and drops an over-cap run as a "stop bucket", the standard
+ *    stop-shingle practice. Each drop reaches [[candidateIdPairs]]' `onDrop`
+ *    with its run length (the pipeline's `candidates.dropped_*` metrics),
+ *    never silently. Identical-content members of such buckets are still
+ *    clustered by the exact stage, which is why dropping is safe for recall
+ *    at the configured threshold;
  *  - per-pair verification re-checks exact Jaccard on the shingle sets, so
  *    LSH false positives never reach the cluster stage (precision 1.0; recall
  *    is controlled by (bands, rowsPerBand) — (64,2) puts the miss probability
@@ -148,12 +149,6 @@ object NearDup {
       explode(slice(graft.functions.NativeExprs.bandHashes(
           col("sig"), cfg.bands, cfg.rowsPerBand),
         bandLo + 1, bandHi - bandLo)).as("band_hash"))
-
-  /** Buckets dropped by the skew guard, with sizes — the lineage/metrics view
-   *  required by north_rule ("cap skewed buckets, report them"). */
-  def droppedBuckets(banded: DataFrame, cfg: DedupConfig): DataFrame =
-    banded.groupBy("band_hash").count()
-      .where(col("count") > cfg.maxBucketSize)
 
   /**
    * Distinct candidate id pairs `(a_id, b_id)`, `a_id < b_id`: the

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types.StructType
  * to integers (`floor(x·1000)`), so dot products and norms are exact 64-bit
  * integer aggregations — order-independent and bit-identical across engines;
  * the one floating-point step (`dot / (√ssa·√ssb)`) is a fixed scalar
- * expression over those exact ints. The float-path `cosine` column function
- * is the production variant (deterministic left-fold, no quantization).
+ * expression over those exact ints.
  *
  * Scale design: brute force is O(n²·d) — fine for a broadcast-side probe set,
  * wrong for all-pairs at 10⁹ vectors. The ANN path buckets each vector into
@@ -44,15 +43,23 @@ object Similarity {
   private def cosQ: Column = dotQ(col("qa"), col("qb")).cast("double") /
     (sqrt(col("ssa").cast("double")) * sqrt(col("ssb").cast("double")))
 
-  /** Float cosine of two `array<float>` columns (production path): a single
-   *  deterministic left-to-right fold per component. */
-  def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
-    val nb = aggregate(b, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
-    dot / (sqrt(na) * sqrt(nb))
+  /** The quantized table as the two sides of a pair: `(aId, qa, ssa)` and
+   *  `(bId, qb, ssb)`, the columns [[cosQ]] reads. */
+  private def sides(embeddings: DataFrame, aId: String, bId: String): (DataFrame, DataFrame) = {
+    val q = quantized(embeddings).select("vec_id", "q", "ss")
+    (q.select(col("vec_id").as(aId), col("q").as("qa"), col("ss").as("ssa")),
+      q.select(col("vec_id").as(bId), col("q").as("qb"), col("ss").as("ssb")))
   }
+
+  /** Per-`vec_id` top-k of scored `(vec_id, neighbor_id, cosq)` rows:
+   *  ranked `(vec_id, neighbor_id, rank, cosq)` through the bounded
+   *  [[graft.functions.TopKAgg]] aggregator (score DESC, id ASC). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy("vec_id")
+      .agg(graft.functions.TopKAgg.topK(k, col("neighbor_id"), col("cosq")).as("top"))
+      .select(col("vec_id"), posexplode(col("top")).as(Seq("i", "e")))
+      .select(col("vec_id"), col("e._2").as("neighbor_id"),
+        (col("i") + 1).cast("long").as("rank"), col("e._1").as("cosq"))
 
   /**
    * Brute-force cosine top-k over the quantized metric:
@@ -65,16 +72,8 @@ object Similarity {
    * oracle-checked), bounded memory.
    */
   def bruteForceTopK(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    val q = quantized(embeddings).select("vec_id", "q", "ss")
-    val a = q.select(col("vec_id"), col("q").as("qa"), col("ss").as("ssa"))
-    val b = q.select(col("vec_id").as("neighbor_id"), col("q").as("qb"), col("ss").as("ssb"))
-    a.join(b, col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cosq", cosQ)
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("neighbor_id"), col("cosq")).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("i", "e")))
-      .select(col("vec_id"), col("e._2").as("neighbor_id"),
-        (col("i") + 1).cast("long").as("rank"), col("e._1").as("cosq"))
+    val (a, b) = sides(embeddings, "vec_id", "neighbor_id")
+    topK(a.join(b, col("vec_id") =!= col("neighbor_id")).withColumn("cosq", cosQ), k)
   }
 
   /**
@@ -85,9 +84,7 @@ object Similarity {
    * [[annTopK]] bucket index and verifies them with this same exact cosine.
    */
   def cosinePairs(embeddings: DataFrame, minCos: Double): DataFrame = {
-    val q = quantized(embeddings).select("vec_id", "q", "ss")
-    val a = q.select(col("vec_id").as("a_id"), col("q").as("qa"), col("ss").as("ssa"))
-    val b = q.select(col("vec_id").as("b_id"), col("q").as("qb"), col("ss").as("ssb"))
+    val (a, b) = sides(embeddings, "a_id", "b_id")
     a.join(b, col("a_id") < col("b_id"))
       .withColumn("cosq", cosQ)
       .where(col("cosq") >= minCos)
@@ -127,9 +124,7 @@ object Similarity {
           maxBucketSize, onDrop)
         .select(least(col("a"), col("b")).as("a_id"), greatest(col("a"), col("b")).as("b_id"))
         .distinct()
-      val q = quantized(embeddings).select("vec_id", "q", "ss")
-      val qa = q.select(col("vec_id").as("a_id"), col("q").as("qa"), col("ss").as("ssa"))
-      val qb = q.select(col("vec_id").as("b_id"), col("q").as("qb"), col("ss").as("ssb"))
+      val (qa, qb) = sides(embeddings, "a_id", "b_id")
       cand.join(qa, "a_id").join(qb, "b_id")
         .withColumn("cosq", cosQ)
         .where(col("cosq") >= minCos)
@@ -259,11 +254,6 @@ object Similarity {
       explode(array(col("bucket") +:
         (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))
 
-  /** Buckets over the skew cap — dropped from candidate generation and
-   *  reported (same stop-bucket rule as the MinHash LSH stage). */
-  def annHotBuckets(idx: DataFrame, maxBucketSize: Int): DataFrame =
-    idx.groupBy("table", "bucket").count().where(col("count") > maxBucketSize)
-
   /** Scale-aware hyperplane count: enough sign bits that the EXPECTED bucket
    *  occupancy `n / 2^bits` sits well under the skew cap (a quarter of it),
    *  floored at 8 (the measured-recall test configuration) and capped at 24
@@ -365,16 +355,8 @@ object Similarity {
    *  carries `queries · k` combined partials instead of sort-shuffling every
    *  candidate row. */
   private def rankCandidates(embeddings: DataFrame, cand: DataFrame, k: Int): DataFrame = {
-    val q = quantized(embeddings).select("vec_id", "q", "ss")
-    val a = q.select(col("vec_id"), col("q").as("qa"), col("ss").as("ssa"))
-    val b = q.select(col("vec_id").as("neighbor_id"), col("q").as("qb"), col("ss").as("ssb"))
-    cand.join(a, "vec_id").join(b, "neighbor_id")
-      .withColumn("cosq", cosQ)
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKAgg.topK(k, col("neighbor_id"), col("cosq")).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("i", "e")))
-      .select(col("vec_id"), col("e._2").as("neighbor_id"),
-        (col("i") + 1).cast("long").as("rank"), col("e._1").as("cosq"))
+    val (a, b) = sides(embeddings, "vec_id", "neighbor_id")
+    topK(cand.join(a, "vec_id").join(b, "neighbor_id").withColumn("cosq", cosQ), k)
   }
 
   // ---------------------------------------------------------------- IVF ----
@@ -415,20 +397,9 @@ object Similarity {
             x => floor(x.cast("double") * 10000 / sqrt(col("ss").cast("double"))).cast("long"))))
       .select("vec_id", "nq")
 
-  /** Integer Lloyd on the normalized-quantized points. The normalized table
-   *  is persisted for the duration of the build (round 6): each of the
-   *  `iters` update actions plus the seed top-k otherwise re-evaluated the
-   *  read → quantize → normalize subtree from scratch (guide §5
-   *  persist-on-reuse; the centroids are a driver-side array, so the scoped
-   *  unpersist is safe). */
-  def ivfCentroids(embeddings: DataFrame, cells: Int = 32, iters: Int = 3): Array[Array[Long]] = {
-    val normed = normQuantized(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try ivfCentroidsFromNormed(normed, cells, iters)
-    finally normed.unpersist(false)
-  }
-
-  /** [[ivfCentroids]] over an already-persisted normalized table. Seed
+  /** Integer Lloyd on the normalized-quantized points. Callers persist
+   *  `normed` for the build: each of the `iters` update actions plus the
+   *  seed top-k reads it (guide §5 persist-on-reuse). Seed
    *  selection (`orderBy(md5).limit(cells)` + collect) plans as
    *  `TakeOrderedAndProject` — a per-partition bounded top-k merged on the
    *  driver, NOT a global sort-shuffle (plan evidence in

@@ -123,24 +123,6 @@ object Substring {
     }
   }
 
-  /** Reference (per-window-encoding) form of [[md5SampledGrams]] — the exact
-   *  oracle contract, kept for parity testing of the fast path. */
-  private[graft] def md5SampledGramsRef(content: String, w: Int): Array[String] = {
-    if (content == null || content.length < w) return Array.empty
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val out = scala.collection.mutable.SortedSet[String]()
-    var i = 0
-    while (i + w <= content.length) {
-      val d = md.digest(content.substring(i, i + w).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = new java.lang.StringBuilder(32)
-      d.foreach(b => hex.append(f"${b & 0xff}%02x"))
-      val h = hex.toString
-      if (h.charAt(31) == '0') out += h
-      i += 1
-    }
-    out.toArray
-  }
-
   /** One-pass rolling-hash fingerprints: distinct sorted mixed hashes of the
    *  sampled `w`-char windows. */
   def rollingFingerprints(content: String, w: Int, sampleMask: Long): Array[Long] = {

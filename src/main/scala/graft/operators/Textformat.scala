@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.HexCase
 
 /**
- * Optional parity serializer for the reference's snapshot *text format*
- * (textformat.rs): the human-editable wire form of a snapshot —
+ * The reference's snapshot *text format* (textformat.rs): the human-editable
+ * wire form of a snapshot —
  *
  * {{{
  * #! rootdir: <path>
@@ -22,10 +22,10 @@ import graft.functions.HexCase
  *
  * Groups are ordered by keeper size descending (textformat.rs:185-199 —
  * "prioritize big wins", CHANGELOG.md:7-10), members lexicographically
- * (snapshot/mod.rs:49-53 Ord). The canonical engine sink is the snapshot
- * *table*; this serializer exists for golden-file parity tests and human
- * review of small snapshots — it collects to the driver by design and is
- * not a distributed sink.
+ * (snapshot/mod.rs:49-53 Ord). One codec renders and parses it:
+ * [[renderTable]] and [[parseTable]], as `(line_no, line)` DataFrames
+ * (q33/q34). The canonical engine sink is the snapshot *table*; the text
+ * form serves human review of small snapshots.
  */
 object Textformat {
 
@@ -45,63 +45,21 @@ object Textformat {
   def parseRfc2822(s: String): java.time.OffsetDateTime =
     java.time.OffsetDateTime.parse(s, Rfc2822)
 
-  /** F8 — human-readable byte size (snapshot/mod.rs:161, executor.rs:161
-   *  via the `size` crate): binary units, two decimals above bytes. */
-  def humanBytes(n: Long): String = {
-    val units = Array("B", "KiB", "MiB", "GiB", "TiB", "PiB")
-    var v = n.toDouble
-    var u = 0
-    while (v >= 1024.0 && u < units.length - 1) { v /= 1024.0; u += 1 }
-    if (u == 0) s"$n B" else f"$v%.2f ${units(u)}"
-  }
-
   /**
    * Render a snapshot DataFrame (`group_id, rkey, size, action,
-   * symlink_source`) to text lines. `generatedAt` is injected for
-   * deterministic goldens (the reference stamps now(), snapshot/mod.rs:141-145).
-   */
-  def render(snapshot: DataFrame, rootdir: String, generatedAt: String): Seq[String] = {
-    val rows = snapshot
-      .select("group_id", "rkey", "size", "action", "symlink_source")
-      .collect()
-    val groups = rows.groupBy(_.getString(0)).toSeq
-      .map { case (gid, ms) =>
-        val sorted = ms.sortBy(_.getString(1))
-        val keeperSize = sorted.map(_.getLong(2)).min
-        (gid, keeperSize, sorted)
-      }
-      // keeper size desc, then group id for a total order (the reference's
-      // HashMap iteration breaks size ties arbitrarily; we pin them)
-      .sortBy { case (gid, sz, _) => (-sz, gid) }
-
-    val header = Seq(meta("rootdir", rootdir), meta("generated_at", generatedAt), "")
-    val body = groups.flatMap { case (gid, _, ms) =>
-      s"[$gid]" +: ms.map { r =>
-        val path = r.getString(1)
-        r.getString(3) match {
-          case "keep"    => s"keep $path"
-          case "delete"  => s"delete $path"
-          case "symlink" =>
-            Option(r.getString(4)).filter(_.nonEmpty)
-              .map(src => s"symlink $path -> $src")
-              .getOrElse(s"symlink $path")
-        }
-      } :+ ""
-    }
-    header ++ body
-  }
-
-  /**
-   * Distributed twin of [[render]]: the same text lines as a DataFrame of
-   * `(line_no: Long, line: String)`, computed with window functions instead
-   * of a driver collect — group rank by keeper size descending (O1), member
-   * rank by key (O2), line offsets as a prefix sum over group blocks.
+   * symlink_source`) to text lines as a DataFrame of `(line_no: Long,
+   * line: String)`, computed with window functions instead of a driver
+   * collect — group rank by keeper size descending (O1; group id breaks
+   * ties, which the reference's HashMap order leaves arbitrary), member rank
+   * by key (O2), line offsets as a prefix sum over group blocks.
+   * `generatedAt` is injected for deterministic goldens (the reference
+   * stamps now(), snapshot/mod.rs:141-145).
    *
    * The text file is inherently a single sequential artifact (the reference's
    * human-editable snapshot), so the two global windows here are single-
    * partition BY CONTRACT — this sink renders *reports*, not the corpus; at
    * corpus scale the canonical sink is the snapshot table / catalog version.
-   * What the distributed form buys is (a) no driver materialization of the
+   * What the DataFrame form buys is (a) no driver materialization of the
    * member rows (only the final lines ever reach a collect, if the caller
    * collects at all) and (b) a DuckDB-oracleable query surface for the codec.
    */
@@ -149,7 +107,9 @@ object Textformat {
   private val PathReStr = """^(keep|symlink|delete)\s+(.+?)(?:\s+->\s+(.+))?$"""
 
   /**
-   * Distributed twin of [[parse]] over `(line_no, line)` rows (F7): each
+   * Parse `(line_no, line)` rows back to snapshot rows `(group_id, rkey,
+   * action, symlink_source)` (F7; metadata lines are checked, not
+   * returned): each
    * line classifies independently; a path row's group hash is the LAST hash
    * line at a smaller line number (a running `last(..., ignoreNulls)` window
    * — the one inherently sequential dependency of the format). The
@@ -189,38 +149,5 @@ object Textformat {
           .when(regexp_extract(col("line"), PathReStr, 3).contains(" -> "),
             raise_error(concat(lit("malformed symlink source: "), col("line"))))
           .otherwise(regexp_extract(col("line"), PathReStr, 3)).as("symlink_source"))
-  }
-
-  private val MetaRe = MetaReStr.r
-  private val HashRe = """^\[([0-9a-fA-F]+)\]$""".r
-  private val PathRe = """^(keep|symlink|delete)\s+(.+?)(?:\s+->\s+(.+))?$""".r
-
-  /** Parsed snapshot line-set: metadata plus flat rows. Errors mirror the
-   *  reference's parse failures (textformat.rs:51-146): unknown line shapes
-   *  and path rows before any group hash throw IllegalArgumentException. */
-  def parse(lines: Seq[String]): (Map[String, String], Seq[(String, String, String, Option[String])]) = {
-    var metadata = Map.empty[String, String]
-    var current: Option[String] = None
-    val rows = Seq.newBuilder[(String, String, String, Option[String])]
-    lines.foreach {
-      case l if l.trim.isEmpty     => // blank (textformat.rs Line::Blank)
-      case MetaRe(k, v)            =>
-        // generated_at must parse as RFC2822 (textformat.rs:279 errors on a
-        // malformed timestamp; we mirror that instead of passing it through)
-        if (k == "generated_at") parseRfc2822(v)
-        metadata += (k -> v)
-      case l if l.startsWith("#")  => // comment
-      case HashRe(h)               => current = Some(h.toLowerCase)
-      case PathRe(op, path, src)   =>
-        val gid = current.getOrElse(
-          throw new IllegalArgumentException(s"path line before any checksum: $path"))
-        // `a -> b -> c` is rejected (textformat.rs:423-500 test matrix)
-        if (src != null && src.contains(" -> "))
-          throw new IllegalArgumentException(s"malformed symlink source: $src")
-        rows += ((gid, path, op, Option(src)))
-      case other =>
-        throw new IllegalArgumentException(s"unparseable line: $other")
-    }
-    (metadata, rows.result())
   }
 }

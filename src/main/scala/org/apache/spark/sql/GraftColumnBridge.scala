@@ -12,11 +12,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** True iff the session's SQL cache holds no cached plans — the persist-
-   *  hygiene invariant (every operator-internal persist must be released
-   *  before the operator returns; PersistHygieneSpec). `CacheManager` is
-   *  `private[sql]`, hence exposed through this bridge. */
-  def sqlCacheIsEmpty(spark: SparkSession): Boolean =
-    spark.sharedState.cacheManager.isEmpty
 }

@@ -85,7 +85,7 @@ class ExactDedupSpec extends AnyFunSuite {
     assert(q.nonEmpty)
     q.foreach { r =>
       assert(r.getString(0) ===
-        graft.functions.XXHash3.unsignedDecimal(
+        java.lang.Long.toUnsignedString(
           graft.functions.XXHash3.hashString(r.getString(1))))
     }
   }

@@ -40,7 +40,7 @@ class IndexStoreSpec extends AnyFunSuite {
     SimilarityIndexStore.buildIvf(spark, cat, base, embeddings)
     // the reconstructed centroid array IS the build's centroid array
     val centStored = SimilarityIndexStore.loadIvfCentroids(spark, cat, base)
-    val centDirect = Similarity.ivfCentroids(embeddings,
+    val centDirect = Similarity.ivfCentroidsFromNormed(Similarity.normQuantized(embeddings),
       Similarity.autoCells(embeddings.count()), 3)
     assert(centStored.map(_.toSeq).toSeq === centDirect.map(_.toSeq).toSeq)
     val stored = SimilarityIndexStore.ivfTopK(spark, cat, base, embeddings)

@@ -10,7 +10,7 @@ class MultimodalSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("media table: every doc present, bytes round-trip, modality routing") {
-    val media = Multimodal.mediaTable(spark, dir).collect()
+    val media = Multimodal.realMediaTable(spark, dir).collect()
     assert(media.length === 500)
     media.foreach { m =>
       assert(m.n_bytes === m.bytes.length.toLong)

@@ -80,10 +80,17 @@ class NearDupSpec extends AnyFunSuite {
       .where(col("n_shingles") > 0)
     val sigs = NearDup.signaturesById(df, tight)
     val banded = NearDup.bandedById(sigs, tight)
-    val dropped = NearDup.droppedBuckets(banded, tight)
-    // the license-header group (400/23 ≈ 17 identical docs) must trip the cap
-    assert(dropped.count() > 0)
-    val pairs = NearDup.candidateIdPairs(banded, tight).collect()
+    val runs = spark.sparkContext.longAccumulator("spec.dropped_buckets")
+    val members = spark.sparkContext.longAccumulator("spec.dropped_members")
+    val pairs = NearDup.candidateIdPairs(banded, tight,
+      n => { runs.add(1L); members.add(n) }).collect()
+    // the license-header group (400/23 ≈ 17 identical docs) must trip the
+    // cap, and onDrop reports every over-cap bucket with its size
+    val hot = banded.groupBy("band_hash").count()
+      .where(col("count") > tight.maxBucketSize).select("count").collect().map(_.getLong(0))
+    assert(hot.nonEmpty)
+    assert(runs.value === hot.length.toLong)
+    assert(members.value === hot.sum)
     val lic = local.filter(_.path.startsWith("lic/"))
       .map(f => XXHash64.hashString(s"${f.repo}/${f.path}", 42L)).toSet
     assert(!pairs.exists(r => lic.contains(r.getLong(0)) && lic.contains(r.getLong(1))),

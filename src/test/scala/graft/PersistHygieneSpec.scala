@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.GraftSqlCache
 
 import graft.corpus.Corpus
 import graft.model.DedupConfig
@@ -23,7 +23,7 @@ class PersistHygieneSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val out = NearDup.verifiedPairs(corpusK, cfg)
     assert(out.count() >= 0)
-    assert(GraftColumnBridge.sqlCacheIsEmpty(spark),
+    assert(GraftSqlCache.isEmpty(spark),
       "verifiedPairs left cached plans behind")
     // result stays usable after the internal unpersists (eager materialization)
     assert(out.columns.toSeq ===
@@ -37,7 +37,7 @@ class PersistHygieneSpec extends AnyFunSuite {
       .selectExpr("xxhash64(rkey) as id", "shingles", "n_shingles")
     val cand = Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id")
     NearDup.verifyCandidatesById(cand, sh, cfg).count()
-    assert(GraftColumnBridge.sqlCacheIsEmpty(spark),
+    assert(GraftSqlCache.isEmpty(spark),
       "verifyCandidatesById left cached plans behind")
   }
 
@@ -46,7 +46,7 @@ class PersistHygieneSpec extends AnyFunSuite {
     val pairs = Substring.gramPairs(
       Substring.sampledGramTableUniq(corpusK, 48), minShared = 2, cap = Int.MaxValue)
     Substring.verifiedSubstringPairs(pairs, corpusK, w = 48).count()
-    assert(GraftColumnBridge.sqlCacheIsEmpty(spark),
+    assert(GraftSqlCache.isEmpty(spark),
       "verifiedSubstringPairs left cached plans behind")
   }
 
@@ -60,6 +60,6 @@ class PersistHygieneSpec extends AnyFunSuite {
     persists.clear()
     // second invocation through the scoped default: still nothing retained
     NearDup.verifiedPairs(corpusK, cfg).count()
-    assert(GraftColumnBridge.sqlCacheIsEmpty(spark))
+    assert(GraftSqlCache.isEmpty(spark))
   }
 }
