@@ -66,14 +66,15 @@ object Pipeline {
     }
 
     // Similarity runs on distinct content only (structural skew fix). The
-    // dedup itself is the NARROW codegen'd shape — `(cid → min rkey)` hash
-    // aggregate + a semi-join back — and EVERY similarity projection
-    // (shingle hashes AND rolling-gram fingerprints) is then computed ONCE,
-    // on representatives only, straight into the shared cache. While the
-    // corpus fits the gate, the key set BROADCASTS so the content side never
-    // enters an exchange (the semi-filter + projections stay in the scan
-    // stage — the shape that scales with cores); past the gate the
-    // shuffle-hash semi runs instead. Two measured dead ends recorded here:
+    // dedup itself is the NARROW shape every similarity input uses —
+    // `(cid → min rkey)` aggregate + a semi-join back — and EVERY similarity
+    // projection (shingle hashes AND rolling-gram fingerprints) is then
+    // computed ONCE, on representatives only, straight into the shared
+    // cache. While the corpus fits `repBroadcastMaxRows`, the key set
+    // BROADCASTS so the content side never enters an exchange (the
+    // semi-filter + projections stay in the scan stage — the shape that
+    // scales with cores); past it the shuffle-hash semi runs instead
+    // (`NearDup.dedupedByContent`'s rule). Two measured dead ends recorded here:
     // (a) per-branch dedup aggs contend for execution memory at high thread
     // counts (16 threads ran *slower* than 4); (b) fusing the projections
     // into the dedup via `first(struct(arrays))` forces ObjectHashAggregate's
@@ -87,8 +88,7 @@ object Pipeline {
     // bytes through the shared memory system).
     val nCorpusRows = corpus.count() // parquet metadata count — no scan
     val uniq = ctx.stage("uniq", materialize = false) {
-      (if (nCorpusRows <= cfg.repBroadcastMaxRows) NearDup.dedupedByContentBroadcast(corpusK)
-       else NearDup.dedupedByContent(corpusK)).select(xxhash64(col("rkey")).as("id"),
+      NearDup.dedupedByContent(corpusK, nCorpusRows, cfg).select(xxhash64(col("rkey")).as("id"),
         NearDup.shingleCol(col("content"), cfg.shingleN).as("shingles"),
         Substring.rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask).as("grams"))
     }

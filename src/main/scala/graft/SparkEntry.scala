@@ -120,7 +120,8 @@ object SparkEntry {
 
     // J3 + §2.8 — MinHash/LSH candidates verified by exact Jaccard; matches
     // the brute-force O(n²) Jaccard oracle (recall 1 − 4e-13 at threshold).
-    // Content dedup happens inside (project-then-dedup, no content shuffle).
+    // Content dedup happens inside, as in the pipeline: the narrow key
+    // aggregate, the semi-join back, shingles on representatives only.
     "q06_near_pairs" -> ((s, dir) => nearPairs(s, dir)),
 
     // North-star cluster table, built as Pipeline.run builds it: exact groups
@@ -138,16 +139,17 @@ object SparkEntry {
     }),
 
     // SimHash sketch (md5 token bits — ANSI-replayable) + Hamming-≤3
-    // block-join pairs; the DuckDB oracle recomputes the sketch bit-for-bit
-    // and brute-forces all-pairs Hamming.
+    // block pairs through the shared run-scan; the DuckDB oracle recomputes
+    // the sketch bit-for-bit and brute-forces all-pairs Hamming.
     "q08_simhash_pairs" -> ((s, dir) =>
-      NearDup.simhashPairs(NearDup.uniqSimhashesMd5(corpusWithKey(s, dir)))),
+      NearDup.simhashPairs(NearDup.uniqSimhashesMd5(corpusWithKey(s, dir), cfg),
+        onDrop = skewReport("simhash_pairs", "blocks"))),
 
     // Stage 4 — long-substring pairs via shift-invariant sampled md5 grams
     // (oracle-parity sampler; cap disabled to mirror the uncapped oracle).
     "q09_substring_pairs" -> ((s, dir) =>
       Substring.gramPairs(
-        Substring.sampledGramTableUniq(corpusWithKey(s, dir), 48),
+        Substring.sampledGramTableUniq(corpusWithKey(s, dir), 48, cfg),
         minShared = 2, cap = Int.MaxValue)),
 
     // Text analysis: token counts + quality scoring (codegen'd built-ins only).
@@ -237,13 +239,8 @@ object SparkEntry {
     // oracle would need the batch drop rule replayed.
     "q37_stream_near_pairs" -> ((s, dir) => {
       val k = corpusWithKey(s, dir)
-      val cand = graft.streaming.NearDupStream.candidateIdPairs(k, cfg).toDF().distinct()
-      val sh = NearDup.uniqShingleSets(k, cfg)
-        .select(xxhash64(col("rkey")).as("id"), col("rkey"),
-          col("shingles"), col("n_shingles"))
-      NearDup.withRowKeys(
-        NearDup.verifyCandidatesById(cand, sh.select("id", "shingles", "n_shingles"), cfg),
-        sh.select("id", "rkey"))
+      NearDup.verifiedPairs(k, cfg, candidates =
+        Some(graft.streaming.NearDupStream.candidateIdPairs(k, cfg).toDF().distinct()))
     }),
 
     // Multimodal metadata projection over binary media columns.
@@ -310,7 +307,7 @@ object SparkEntry {
     // oracled query over the md5 oracle-parity sampler.
     "q28_hot_grams" -> ((s, dir) =>
       Substring.hotGrams(
-        Substring.sampledGramTableUniq(corpusWithKey(s, dir), 48), cap = 3)
+        Substring.sampledGramTableUniq(corpusWithKey(s, dir), 48, cfg), cap = 3)
         .select(col("gram"), col("count").as("n_docs"))),
 
     // Catalog-table surface (SURVEY §7 CatalogIO; north_star "clusters
@@ -420,13 +417,16 @@ object SparkEntry {
     // Same declared semantics as q13 (rolling fingerprints + byte verify),
     // so the q13 substring-self-join oracle applies verbatim — but this
     // path derives the pair set from character-equality classes alone
-    // (no hash anywhere in the decision), the SA-family guarantee.
+    // (no hash anywhere in the decision), the SA-family guarantee. `ids` is
+    // built once for the pair scan and both name lookups, then released.
     "q35_sa_pairs" -> ((s, dir) => {
-      val reps = NearDup.dedupedByContentBroadcast(corpusWithKey(s, dir))
-      val ids = reps.select(xxhash64(col("rkey")).as("id"), col("rkey"), col("content"))
-      val pairs = graft.operators.SuffixArray.windowClassPairs(
-        ids.select("id", "content"), cfg.gramWidth, cap = Int.MaxValue)
-      NearDup.withRowKeys(pairs, ids.select("id", "rkey"), "a_key", "b_key")
+      val ids = NearDup.uniqRows(corpusWithKey(s, dir), cfg)
+        .select(xxhash64(col("rkey")).as("id"), col("rkey"), col("content"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try NearDup.withRowKeys(graft.operators.SuffixArray.windowClassPairs(
+          ids.select("id", "content"), cfg.gramWidth, cap = Int.MaxValue),
+        ids.select("id", "rkey"), "a_key", "b_key").localCheckpoint()
+      finally ids.unpersist(false)
     })
   )
 

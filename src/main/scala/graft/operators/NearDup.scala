@@ -45,14 +45,11 @@ object NearDup {
    * restore full-cluster connectivity in stage 3. Pair outputs of the
    * similarity stages are therefore *content-representative* pairs.
    *
-   * Scale note: the representative-key aggregation is **narrow** —
-   * `(cid, rkey)` only, ~100 bytes/row with map-side combine — so the hot
-   * groups collapse before the exchange. Content itself crosses at most one
-   * exchange (the probe side of the semi-join; never aggregated, never
-   * sorted — SHUFFLE_HASH build side is the narrow key set). Where the
-   * similarity stage only needs a *projection* of content (shingles, grams,
-   * sketches), prefer [[uniqShingleSets]]-style project-then-dedup, which
-   * never moves content at all.
+   * Every similarity input dedups this one way — the narrow key aggregate
+   * ([[representativeKeys]]), a semi-join back, then its projection on
+   * representatives only — with the semi-join picked by the three-argument
+   * form. This one is the shuffle-hash semi: content crosses one exchange
+   * (the probe side; never aggregated, never sorted).
    */
   def dedupedByContent(corpusK: DataFrame): DataFrame =
     corpusK.join(representativeKeys(corpusK).hint("SHUFFLE_HASH"), Seq("rkey"), "left_semi")
@@ -62,12 +59,21 @@ object NearDup {
    *  any downstream per-row projection stay in the scan stage, which is the
    *  shape that scales with cores (a shuffled semi-join moves the full
    *  content through the memory system once, and that bandwidth is shared
-   *  across all cores of a local/executor host). Only valid while the key
-   *  set fits the broadcast budget (`cfg.repBroadcastMaxRows` gates this in
-   *  the pipeline); the aggregation producing the key set is narrow
-   *  `(cid, min rkey)` with map-side combine either way. */
+   *  across all cores of a local/executor host). */
   def dedupedByContentBroadcast(corpusK: DataFrame): DataFrame =
     corpusK.join(broadcast(representativeKeys(corpusK)), Seq("rkey"), "left_semi")
+
+  /** The one join choice of the content dedup: the key set broadcasts while
+   *  the corpus' `nRows` rows (a bound on the key set) fit
+   *  `cfg.repBroadcastMaxRows`; past it the shuffle-hash semi runs. */
+  def dedupedByContent(corpusK: DataFrame, nRows: Long, cfg: DedupConfig): DataFrame =
+    if (nRows <= cfg.repBroadcastMaxRows) dedupedByContentBroadcast(corpusK)
+    else dedupedByContent(corpusK)
+
+  /** The join rule over one count of `corpusK` — the query operators' form
+   *  (the pipeline passes its parquet metadata count instead). */
+  def uniqRows(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
+    dedupedByContent(corpusK, corpusK.count(), cfg)
 
   /** Minimum `rkey` per distinct content — narrow columns only. */
   def representativeKeys(corpusK: DataFrame): DataFrame =
@@ -75,24 +81,6 @@ object NearDup {
       .select(sha2(col("content").cast("binary"), 256).as("cid"), col("rkey"))
       .groupBy("cid").agg(min(col("rkey")).as("rkey"))
       .select("rkey")
-
-  /**
-   * Content-dedup *after* a per-row projection: `payload` is computed in the
-   * scan stage for every row, then one row per distinct content survives
-   * (representative = min rkey, payload taken from any member — they are
-   * identical by construction). The shuffle carries `(cid, rkey, payload)`
-   * with map-side partial aggregation, so a hot group (m identical license
-   * headers) contributes ONE payload per map partition to the exchange and
-   * raw content never leaves the scan — the 100 TB-safe shape of
-   * "dedup then project".
-   */
-  def uniqProjected(corpusK: DataFrame, payload: Column): DataFrame =
-    corpusK
-      .select(sha2(col("content").cast("binary"), 256).as("cid"), col("rkey"),
-        payload.as("payload"))
-      .groupBy("cid")
-      .agg(min(col("rkey")).as("rkey"), first(col("payload")).as("payload"))
-      .select("rkey", "payload")
 
   /** Shingle-hash projection as a column (public so the pipeline can fuse it
    *  with other per-row projections into ONE dedup pass). Backed by the
@@ -103,14 +91,14 @@ object NearDup {
     graft.functions.NativeExprs.shingleHashes(content, n)
 
   /** Per-document shingle sets `(rkey, shingles: array<long>, n_shingles)`
-   *  over the content-distinct representatives, computed as project-then-
-   *  dedup (see [[uniqProjected]]) — no content exchange. Documents with no
-   *  shingles (< n tokens) are dropped here — they cannot participate in
-   *  Jaccard similarity. The projection is [[shingleCol]], so the hot
-   *  per-row hash work stays inside whole-stage codegen. */
+   *  over the content-distinct representatives ([[uniqRows]]), hashed on
+   *  representatives only. Documents with no shingles (< n tokens) are
+   *  dropped here — they cannot participate in Jaccard similarity. The
+   *  projection is [[shingleCol]], so the hot per-row hash work stays inside
+   *  whole-stage codegen. */
   def uniqShingleSets(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
-    uniqProjected(corpusK, shingleCol(col("content"), cfg.shingleN))
-      .select(col("rkey"), col("payload").as("shingles"))
+    uniqRows(corpusK, cfg)
+      .select(col("rkey"), shingleCol(col("content"), cfg.shingleN).as("shingles"))
       .withColumn("n_shingles", size(col("shingles")))
       .where(col("n_shingles") > 0)
 
@@ -275,7 +263,10 @@ object NearDup {
    * `(a_key, b_key, n_intersect, n_union, jaccard)`. The pair code is the
    * pipeline's own id-space chain — [[signaturesById]] → [[bandedById]] →
    * [[candidateIdPairs]] → [[verifyCandidatesById]] — with row keys joined
-   * back once at the end ([[withRowKeys]]).
+   * back once at the end ([[withRowKeys]]). `candidates`, distinct
+   * `(a_id, b_id)` node-id pairs, replaces the LSH candidates (the streaming
+   * query passes its own); the shingle table is still built once, read by
+   * the verify and by both name lookups.
    *
    * Persist scoping (round-2 leak fix): with `register = None` (the default,
    * ad-hoc/oracle use) the internal persists are SCOPED — the result is
@@ -287,7 +278,8 @@ object NearDup {
    * stays lazy; the caller unpersists (RunContext.cleanup()).
    */
   def verifiedPairs(corpusK: DataFrame, cfg: DedupConfig,
-                    register: Option[DataFrame => Unit] = None): DataFrame = {
+                    register: Option[DataFrame => Unit] = None,
+                    candidates: Option[DataFrame] = None): DataFrame = {
     val scoped = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val reg = register.getOrElse((df: DataFrame) => { scoped += df; () })
     val sh = uniqShingleSets(corpusK, cfg)
@@ -298,7 +290,8 @@ object NearDup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     reg(sh)
     val byId = sh.select("id", "shingles", "n_shingles")
-    val cand = candidateIdPairs(bandedById(signaturesById(byId, cfg), cfg), cfg)
+    val cand = candidates.getOrElse(
+      candidateIdPairs(bandedById(signaturesById(byId, cfg), cfg), cfg))
     val out = withRowKeys(verifyCandidatesById(cand, byId, cfg, Some(reg)), sh.select("id", "rkey"))
     if (register.isDefined) out
     else try out.localCheckpoint() finally scoped.foreach(_.unpersist(false))
@@ -341,48 +334,47 @@ object NearDup {
       .where(col("jaccard") >= threshold)
       .select("a_id", "b_id", "n_intersect", "n_union", "jaccard")
 
-  /** SimHash over content-distinct representatives, using the md5-derived
-   *  token bits ([[Shingles.simhashMd5]]) so an ANSI-SQL oracle can replay
-   *  the exact sketch (q08's DuckDB oracle). */
-  def uniqSimhashesMd5(corpusK: DataFrame): DataFrame = {
+  /** SimHash `(rkey, simhash)` over content-distinct representatives
+   *  ([[uniqRows]]), using the md5-derived token bits
+   *  ([[Shingles.simhashMd5]]) so an ANSI-SQL oracle can replay the exact
+   *  sketch (q08's DuckDB oracle). */
+  def uniqSimhashesMd5(corpusK: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
     val simUdf = udf((c: String) => Shingles.simhashMd5(c))
-    uniqProjected(corpusK, simUdf(col("content")))
-      .select(col("rkey"), col("payload").as("simhash"))
+    uniqRows(corpusK, cfg).select(col("rkey"), simUdf(col("content")).as("simhash"))
   }
 
   /**
-   * SimHash near-dup candidates at Hamming distance ≤ `maxDist`, found by the
-   * block-permutation trick (Manku et al., WWW'07): split the 64-bit sketch
-   * into `maxDist + 1` blocks — any pair within distance `maxDist` matches
-   * exactly on at least one block (pigeonhole). One equi-join per block on
-   * `(block_idx, block_value)`, then verify true distance with `bit_count`.
+   * SimHash near-dup pairs `(a_key, b_key, hamming)` at Hamming distance ≤
+   * `maxDist`, found by the block-permutation trick (Manku et al., WWW'07):
+   * split the 64-bit sketch into `maxDist + 1` blocks — any pair within
+   * distance `maxDist` matches exactly on at least one block (pigeonhole).
+   * Blocks pair through [[graft.functions.BucketScan.bucketPairs]] keyed by
+   * `(rkey, simhash)`, so each pair carries both sketches for `bit_count`.
+   * A block value over `maxBlockSize` documents is dropped (the LSH stop-
+   * bucket rule); the result is materialized, then the drops reach
+   * `onDrop` once as (blocks, member rows).
    */
-  def simhashPairs(simhashes: DataFrame, maxDist: Int = 3,
-                   maxBlockSize: Int = 65536): DataFrame = {
+  def simhashPairs(simhashes: DataFrame, maxDist: Int = 3, maxBlockSize: Int = 65536,
+                   onDrop: (Long, Long) => Unit = (_, _) => ()): DataFrame = {
     val blocks = maxDist + 1
     val width = 64 / blocks
-    val blocked0 = simhashes.select(
-      col("rkey"), col("simhash"),
+    val blocked = simhashes.select(
+      struct(col("rkey"), col("simhash")).as("sh"),
       posexplode(array((0 until blocks).map { i =>
         shiftrightunsigned(col("simhash"), i * width)
           .bitwiseAND(lit((1L << width) - 1))
       }: _*)).as(Seq("block", "block_value")))
-    // Skew guard (same stop-bucket rule as the LSH stage): a block value
-    // shared by m docs contributes O(m²) join rows; blocks over the cap are
-    // dropped (they are boilerplate sketches — their members still cluster
-    // via the exact stage). The hot-block list is tiny → broadcast anti-join.
-    val hot = blocked0.groupBy("block", "block_value").count()
-      .where(col("count") > maxBlockSize).select("block", "block_value")
-    val blocked = blocked0.join(broadcast(hot), Seq("block", "block_value"), "left_anti")
-    val a = blocked.as("a")
-    val b = blocked.as("b")
-    a.join(b,
-        col("a.block") === col("b.block") &&
-          col("a.block_value") === col("b.block_value") &&
-          col("a.rkey") < col("b.rkey"))
-      .select(col("a.rkey").as("a_key"), col("b.rkey").as("b_key"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .distinct()
+    val sc = simhashes.sparkSession.sparkContext
+    val dropsB = sc.longAccumulator
+    val dropsR = sc.longAccumulator
+    val out = graft.functions.BucketScan.bucketPairs(blocked, Seq("block", "block_value"), "sh",
+        maxBlockSize, n => { dropsB.add(1L); dropsR.add(n) })
+      .select(col("a_key.rkey").as("a_key"), col("b_key.rkey").as("b_key"),
+        bit_count(col("a_key.simhash").bitwiseXOR(col("b_key.simhash"))).cast("long").as("hamming"))
       .where(col("hamming") <= maxDist)
+      .distinct()
+      .localCheckpoint()
+    if (dropsB.value > 0) onDrop(dropsB.value, dropsR.value)
+    out
   }
 }

@@ -81,6 +81,19 @@ object Snapshots {
   private def donorCol: Column =
     when(col("group_id") === col("d1_gid"), col("d2_rkey")).otherwise(col("d1_rkey"))
 
+  /** Both fixtures' frame: each row with its group's `keeper`, `maxk` (min,
+   *  max rkey) and size `nm` — one window — and the [[donors]] row. */
+  private def fixtureFrame(hashed: DataFrame): DataFrame = {
+    val w = Window.partitionBy("group_id")
+    hashed
+      .withColumn("keeper", min(col("rkey")).over(w))
+      .withColumn("maxk", max(col("rkey")).over(w))
+      .withColumn("nm", count(lit(1)).over(w))
+      .crossJoin(broadcast(donors(hashed)))
+  }
+
+  private val hexCase: Column = substring(col("group_id"), 1, 1) // the fixtures' case key
+
   /**
    * Deterministic "user-edited" snapshot derived from the default snapshot,
    * with planted violations keyed off the first hex char `c` of the group id
@@ -112,14 +125,8 @@ object Snapshots {
    * Output: `(group_id, rkey, action, symlink_source)`.
    */
   def editedSnapshot(hashed: DataFrame): DataFrame = {
-    val w = Window.partitionBy("group_id")
-    val snap = hashed
-      .withColumn("keeper", min(col("rkey")).over(w))
-      .withColumn("maxk", max(col("rkey")).over(w))
-      .withColumn("nm", count(lit(1)).over(w))
-      .where(col("nm") > 1)
-      .crossJoin(broadcast(donors(hashed)))
-    val c = substring(col("group_id"), 1, 1)
+    val snap = fixtureFrame(hashed).where(col("nm") > 1)
+    val c = hexCase
     val c2 = substring(col("group_id"), 2, 1)
     val isK = col("rkey") === col("keeper")
     val act = when(c === "f",
@@ -157,19 +164,14 @@ object Snapshots {
   /** Current state with planted redirects matching [[editedSnapshot]]'s
    *  matrix (cases '4'-'7' and 'c' need pre-existing symlinks). */
   def plantedState(hashed: DataFrame): DataFrame = {
-    val w = Window.partitionBy("group_id")
-    val st = hashed
-      .withColumn("keeper", min(col("rkey")).over(w))
-      .withColumn("nm", count(lit(1)).over(w))
-      .crossJoin(broadcast(donors(hashed)))
-    val c = substring(col("group_id"), 1, 1)
+    val c = hexCase
     val isK = col("rkey") === col("keeper")
     val pts = when(col("nm") > 1,
       when((c === "4" || c === "5") && !isK, col("keeper"))
         .when(c === "6" && !isK, donorCol)
         .when(c === "7" && isK, donorCol)
         .when(c === "c" && !isK, concat(col("rkey"), lit(".broken"))))
-    st.select(col("rkey"), col("group_id").as("true_sha"), col("size"),
+    fixtureFrame(hashed).select(col("rkey"), col("group_id").as("true_sha"), col("size"),
       pts.as("points_to"))
   }
 

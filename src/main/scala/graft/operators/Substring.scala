@@ -158,18 +158,20 @@ object Substring {
     graft.functions.NativeExprs.rollingFingerprints(content, w, sampleMask)
 
   /** `(rkey, gram)` — exploded sampled md5 grams (oracle-parity sampler)
-   *  over content-distinct representatives (project-then-dedup: content
-   *  never shuffles). */
-  def sampledGramTableUniq(corpusK: DataFrame, w: Int): DataFrame =
-    NearDup.uniqProjected(corpusK, md5GramsUdf(col("content"), lit(w)))
-      .select(col("rkey"), explode(col("payload")).as("gram"))
+   *  over content-distinct representatives ([[NearDup.uniqRows]]): the
+   *  grams are computed on representatives only, and content never enters
+   *  an exchange while the key set broadcasts. */
+  def sampledGramTableUniq(corpusK: DataFrame, w: Int,
+                           cfg: DedupConfig = DedupConfig()): DataFrame =
+    NearDup.uniqRows(corpusK, cfg)
+      .select(col("rkey"), explode(md5GramsUdf(col("content"), lit(w))).as("gram"))
 
   /** `(rkey, gram)` — exploded rolling-hash fingerprints (scale sampler)
-   *  over content-distinct representatives. */
+   *  over content-distinct representatives ([[NearDup.uniqRows]]). */
   def rollingGramTableUniq(corpusK: DataFrame, cfg: DedupConfig): DataFrame =
-    NearDup.uniqProjected(corpusK,
-      rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask))
-      .select(col("rkey"), explode(col("payload")).as("gram"))
+    NearDup.uniqRows(corpusK, cfg)
+      .select(col("rkey"),
+        explode(rollingCol(col("content"), cfg.gramWidth, cfg.sampleMask)).as("gram"))
 
   /** Grams shared by too many documents (vendored boilerplate) — dropped from
    *  pair generation and surfaced as metrics. */

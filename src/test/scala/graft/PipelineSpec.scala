@@ -130,6 +130,31 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("cluster precondition: every pair endpoint is a row the snapshot maps to no other keeper") {
+    // clusterTableCollapsed finds a row's component through its keeper's id,
+    // so an edge at a member the snapshot maps to another keeper is lost
+    // without an error. It holds because ExactDedup's keeper election and
+    // NearDup.representativeKeys both pick the minimum rkey per sha256.
+    val ctx = RunContext(spark, tmpDir())
+    val corpus = Corpus.synthetic(spark, 300, seed = 6L).toDF()
+    Pipeline.run(ctx, corpus).clusters.count()
+    def stage(name: String) = spark.read.parquet(s"${ctx.runDir}/$name")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select(xxhash64(col("rkey")).as("id"))
+    val near = stage("near_pairs")
+    val sub = stage("substring_pairs")
+    val ends = Seq(near.select(col("a_id").as("id")), near.select(col("b_id").as("id")),
+        sub.select(col("a_key").as("id")), sub.select(col("b_key").as("id")))
+      .reduce(_ union _).distinct()
+    val snapshot = stage("snapshot")
+    val mapped = ids(snapshot.where(col("symlink_source").isNotNull && col("symlink_source") =!= col("rkey")))
+    val rows = ids(graft.operators.ExactDedup.validRows(corpus).withColumn("rkey", graft.operators.ExactDedup.rkey))
+    assert(near.count() > 0 && sub.count() > 0)
+    assert(ends.join(rows, Seq("id"), "left_anti").count() === 0, "endpoint that is no row's node id")
+    assert(ends.join(mapped, Seq("id"), "left_semi").count() === 0, "endpoint mapped to another keeper")
+    // not vacuous: the edges reach into exact groups through their keepers
+    assert(ends.join(ids(snapshot.where(col("action") === "keep")), Seq("id"), "left_semi").count() > 0)
+  }
+
   test("resume: a completed run restores every stage without recompute") {
     val dir = tmpDir()
     val input = writeCorpus(s"${tmpDir()}/corpus", 200, 7L)

@@ -61,7 +61,7 @@ class PlanShapeSpec extends AnyFunSuite {
       ExactDedup.snapshot(ExactDedup.withHashes(corpus)), "snapshot")
   }
 
-  test("near-dup pipeline (project-then-dedup form) never shuffles content") {
+  test("near-dup pipeline (dedup-then-project form) never shuffles content") {
     // register variant: keeps the returned plan LAZY (inspectable) and hands
     // us the persists to release — the default path is eager + self-cleaning
     // (PersistHygieneSpec).
@@ -69,6 +69,67 @@ class PlanShapeSpec extends AnyFunSuite {
     try assertNoContentInExchanges(
       NearDup.verifiedPairs(corpusK, cfg, register = Some(persists += _)), "verifiedPairs")
     finally persists.foreach(_.unpersist(false))
+  }
+
+  test("similarity queries dedup content by key: no payload aggregate, no content exchange") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Min
+    import org.apache.spark.sql.execution.{MapGroupsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // every executed node, through adaptive stages and cached relations;
+    // `grouped` marks the nodes between a typed grouping (MapGroupsExec) and
+    // the exchange that feeds it, that exchange included
+    def nodes(p: SparkPlan, grouped: Boolean = false): Seq[(SparkPlan, Boolean)] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case o => o.children
+      }
+      val passes = p match {
+        case _: MapGroupsExec => true
+        case _: ShuffleExchangeExec => false
+        case _ => grouped
+      }
+      (p, grouped) +: kids.flatMap(nodes(_, passes))
+    }
+    val dir = "/root/testdata/sf0.001"
+    for (q <- Seq("q06_near_pairs", "q07_clusters_all", "q08_simhash_pairs", "q09_substring_pairs",
+                  "q13_rolling_pairs", "q28_hot_grams", "q35_sa_pairs", "q37_stream_near_pairs")) {
+      val session = spark.newSession()
+      val qes = new java.util.concurrent.CopyOnWriteArrayList[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { qes.add(qe); () }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      session.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(q)(session, dir).collect()
+        // the listener bus is ordered: once the marker action is seen, every
+        // execution of the query has been delivered
+        session.range(1).toDF("plan_marker").collect()
+        val deadline = System.nanoTime() + 60e9.toLong
+        def marked = qes.asScala.exists(_.analyzed.output.exists(_.name == "plan_marker"))
+        while (!marked && System.nanoTime() < deadline) Thread.sleep(50)
+        assert(marked, s"$q: executions never reached the listener")
+      } finally session.listenerManager.unregister(listener)
+      val all = qes.asScala.toSeq.flatMap(qe => nodes(qe.executedPlan))
+      // the one sort aggregate allowed is the narrow (cid → min rkey) key set
+      val payloadAggs = all.collect { case (a: SortAggregateExec, _) => a }.filterNot(a =>
+        a.groupingExpressions.map(_.name) == Seq("cid") &&
+          a.aggregateExpressions.forall(_.aggregateFunction.isInstanceOf[Min]))
+      assert(payloadAggs.isEmpty, s"$q: sort aggregate over a payload:\n${payloadAggs.mkString("\n")}")
+      // q37's streaming first-sight election groups content by sha256 (its
+      // state key; see NearDupStream) — the one content exchange allowed
+      val content = all.collect { case (e: ShuffleExchangeExec, false) => e }
+        .filter(_.child.output.exists(_.name == "content"))
+      assert(content.isEmpty, s"$q: exchange carries content:\n${content.mkString("\n")}")
+    }
   }
 
   test("broadcast content-dedup keeps the corpus side out of exchanges entirely") {
